@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.ConcurrentHashMap
 
 /** One correctness/bench query: a Spark plan builder plus (optionally) an
   * equivalent DuckDB SQL oracle the driver hash-compares against at sf0.01.
@@ -83,26 +82,28 @@ object Tables {
     }
   }
 
-  // session -> dir CURRENTLY backing the views. The view names are shared
+  // live session -> dir CURRENTLY backing the views (one entry per
+  // session, under a fixed inner key). The view names are shared
   // ("documents" etc.), so memoizing per (session, dir) is wrong: after
   // registerAll(s, sf0.01), a later registerAll(s, sf0.001) would be
   // skipped as "already registered" and silently read the WRONG scale
-  // factor. Re-register whenever the requested dir differs.
-  private val registered = new ConcurrentHashMap[String, String]()
+  // factor. Re-register whenever the requested dir differs. Keyed by the
+  // session object, held weakly: an identity-hash key could be reused by
+  // a new session after GC and skip its registration.
+  private val registered = new SessionCache[String]()
 
   /** Register all testdata tables as temp views; idempotent per dir,
     * re-points the views when the same session switches dirs. */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    val key = System.identityHashCode(spark).toString
-    registered.compute(key, { (_, prev) =>
-      if (prev != dir) {
+    registered.compute(spark, "views") { prev =>
+      if (!prev.contains(dir)) {
         names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
         // native SQL functions (cosine_sim, quantized_dot) ride along so
         // dialect() query text can use them
         functions.GraftExtensions.register(spark)
       }
       dir
-    })
+    }
     ()
   }
 }

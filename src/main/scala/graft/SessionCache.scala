@@ -18,9 +18,9 @@ private[graft] final class SessionCache[V] {
     org.apache.spark.sql.SparkSession,
     java.util.concurrent.ConcurrentHashMap[String, V]]()
 
-  def getOrElseUpdate(s: org.apache.spark.sql.SparkSession, dir: String)(
-      build: => V): V = {
-    val perSession = bySession.synchronized {
+  private def perSession(s: org.apache.spark.sql.SparkSession)
+      : java.util.concurrent.ConcurrentHashMap[String, V] =
+    bySession.synchronized {
       var m = bySession.get(s)
       if (m == null) {
         m = new java.util.concurrent.ConcurrentHashMap[String, V]()
@@ -28,6 +28,14 @@ private[graft] final class SessionCache[V] {
       }
       m
     }
-    perSession.computeIfAbsent(dir, _ => build)
-  }
+
+  def getOrElseUpdate(s: org.apache.spark.sql.SparkSession, dir: String)(
+      build: => V): V =
+    perSession(s).computeIfAbsent(dir, _ => build)
+
+  /** Atomically replace the value under (`s`, `key`) with `f(current)`
+    * — for memos whose value must change while the session lives. */
+  def compute(s: org.apache.spark.sql.SparkSession, key: String)(
+      f: Option[V] => V): V =
+    perSession(s).compute(key, (_, prev) => f(Option(prev)))
 }

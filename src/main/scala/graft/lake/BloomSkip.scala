@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.util.sketch.{BloomFilter => SketchBloom}
 
 import java.io.ByteArrayInputStream
@@ -99,35 +99,46 @@ object BloomSkip {
 
   // ---- build ----------------------------------------------------------------
 
-  /** Per-file blooms for `files`, one distributed aggregate per schema
-    * group (groups can store a column under a different physical name or a
-    * narrower type; a group whose column has no bytes — a hive-import
-    * path column — is skipped for that column). Returns
-    * normalized-file-path -> ([[bloomKey]] -> base64 filter bytes). */
+  /** Per-file blooms for `files`, one aggregate per schema group (groups
+    * can store a column under a different physical name or a narrower
+    * type; a group whose column has no bytes — a hive-import path column —
+    * is skipped for that column). The scan reads the group's known
+    * physical schema, and a group that fits one scan split's byte budget
+    * (`spark.sql.files.maxPartitionBytes`; every CDC batch's new files)
+    * aggregates in a single partition: `coalesce(1)` reports
+    * SinglePartition, so grouping by file needs no exchange and the build
+    * is ONE Spark job instead of a shuffle-map job plus a result job.
+    * Returns normalized-file-path -> ([[bloomKey]] -> base64 filter
+    * bytes). */
   def build(spark: SparkSession, m: TableMeta, files: Seq[DataFile],
             cols: Seq[LakeColumn]): Map[String, Map[String, String]] = {
     val p = fpp(m)
     files.filter(_.rowCount > 0).groupBy(_.schemaId).toSeq.flatMap {
       case (sid, group) =>
         val schema = m.schemas.find(_.schemaId == sid).getOrElse(m.schema)
-        // this group's physical handle for each declared column
+        // this group's physical column for each declared column
         val resolved = cols.flatMap { c =>
-          schema.byId(c.id).filter(!_.fromPath).map(gc => (c, gc.physicalName))
+          schema.byId(c.id).filter(!_.fromPath).map(gc => (c, gc))
         }
         if (resolved.isEmpty) Seq.empty
         else {
           val items = math.min(MaxItems, math.max(1L, group.map(_.rowCount).max))
           val bits = numBits(items, p)
-          val aggs = resolved.zipWithIndex.map { case ((c, phys), i) =>
+          val aggs = resolved.zipWithIndex.map { case ((c, gc), i) =>
             val child = ColumnBridge.expression(
-              xxhash64(col(phys).cast(c.sparkType)))
+              xxhash64(col(gc.physicalName).cast(c.sparkType)))
             ColumnBridge.column(new BloomFilterAggregate(child,
               Literal(items), Literal(bits)).toAggregateExpression())
               .as(s"_bloom_$i")
           }
-          spark.read.parquet(group.map(_.path): _*)
+          val physical = StructType(resolved.map { case (_, gc) =>
+            StructField(gc.physicalName, gc.sparkType) })
+          val scan = spark.read.schema(physical).parquet(group.map(_.path): _*)
             .select(col("_metadata.file_path").as("__bloom_path") +:
-              resolved.map { case (_, phys) => col(phys) }: _*)
+              resolved.map { case (_, gc) => col(gc.physicalName) }: _*)
+          val oneSplit =
+            group.map(_.sizeBytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes
+          (if (oneSplit) scan.coalesce(1) else scan)
             .groupBy(col("__bloom_path"))
             .agg(aggs.head, aggs.tail: _*)
             .collect().map { row =>

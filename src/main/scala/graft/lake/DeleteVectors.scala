@@ -195,7 +195,8 @@ object DeleteVectors {
     * data file's positions across two delete files and still attach each
     * delete file a ref covering exactly ITS OWN entries — the read path
     * already unions masks across a data file's referencing delete files.
-    * One job: group by (source, file) with sorted runs per partition.
+    * Groups by (source, file) with sorted runs per partition: one job for
+    * a single delete file, a shuffle-map job plus the collect for more.
     * Returns None when the collected bundle would exceed
     * [[MaxBundleBytes]]. */
   def buildBitmaps(spark: SparkSession, paths: Seq[String])
@@ -203,8 +204,12 @@ object DeleteVectors {
     if (paths.isEmpty) return Some(Seq.empty)
     val entries = spark.read.schema(LakeTable.DeleteEntrySchema).parquet(paths: _*)
       .select(input_file_name().as("_src"), col("file_name"), col("pos"))
+    // one delete file (every point DML and CDC conversion) builds in ONE
+    // task with no exchange: a single partition already holds each
+    // (delete file, data file) run whole
     val parts = math.max(1, math.min(paths.size, 64))
-    val perFile = entries.repartition(parts, col("_src"), col("file_name"))
+    val perFile = (if (parts == 1) entries.coalesce(1)
+                   else entries.repartition(parts, col("_src"), col("file_name")))
       .sortWithinPartitions("_src", "file_name", "pos")
       .mapPartitions { it =>
         val out = scala.collection.mutable.ArrayBuffer[((String, String), Array[Byte])]()

@@ -435,6 +435,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     files
   }
 
+  /** `files` less the zero-row ones, which are deleted: writing an empty
+    * frame still leaves one schema-only file (Spark's writer emits it from
+    * partition 0), and committing it would add a data file with no rows. */
+  private def dropEmptyFiles(files: Seq[DataFile]): Seq[DataFile] = {
+    val (empty, kept) = files.partition(_.rowCount == 0)
+    empty.foreach(f => fs.delete(new Path(f.path), false))
+    kept
+  }
+
   /** Append rows — one new snapshot (ref: S11/S12 sinks; every append = a
     * snapshot, like the reference's checkpoint-cadence commits). Honors WAP:
     * with `spark.wap.id` set and `write.wap.enabled=true` the snapshot is
@@ -926,8 +935,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   /** Read `files` under BOTH merge-on-read masks (positions, then
     * equality keys); `withMeta = true` keeps `_gd_file`/`_gd_pos` for
     * callers that go on to write delete entries (MoR DELETE/UPDATE). */
-  private def liveRows(m: TableMeta, snap: Option[Snapshot],
-                       files: Seq[DataFile], withMeta: Boolean): DataFrame = {
+  private[lake] def liveRows(m: TableMeta, snap: Option[Snapshot],
+                             files: Seq[DataFile], withMeta: Boolean): DataFrame = {
     val eqDels = snap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
     if (eqDels.isEmpty || files.isEmpty)
       return maskPositions(m, snap, files, withMeta)
@@ -965,8 +974,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * (pre-DV metadata, a skipped oversized build) anti-join the
     * metadata-sized position set — broadcast while provably small
     * (Σ metadata counts), shuffle-hash above that. */
-  private def maskPositions(m: TableMeta, snap: Option[Snapshot],
-                            files: Seq[DataFile], withMeta: Boolean): DataFrame = {
+  private[lake] def maskPositions(m: TableMeta, snap: Option[Snapshot],
+                                  files: Seq[DataFile], withMeta: Boolean): DataFrame = {
     def finish(df: DataFrame): DataFrame =
       if (withMeta) df else df.drop("_gd_file", "_gd_pos")
     val dels = snap.map(_.deleteFiles).getOrElse(Seq.empty)
@@ -1012,12 +1021,18 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     parts.reduce(_ unionByName _)
   }
 
-  /** Distinct key tuples of the given equality delete files, as a
-    * DataFrame with CURRENT logical column names (keys are stored by
-    * stable column id, physical names `c<id>`, so renames are free). */
-  private def eqDeleteKeysDf(m: TableMeta, dels: Seq[EqualityDeleteFile]): DataFrame = {
-    val byLayout = dels.groupBy(d => (d.keyIds, d.schemaId))
-    byLayout.map { case ((keyIds, schemaId), ds) =>
+  /** Key tuples of the given equality delete files, as a DataFrame with
+    * CURRENT logical column names (keys are stored by stable column id,
+    * physical names `c<id>`, so renames are free). NOT deduplicated: the
+    * consumers are anti- and semi-joins, whose build side needs no unique
+    * keys, and a distinct would cost a shuffle job on every read of a
+    * table with live equality deletes. `withAddedAt` appends each tuple's
+    * delete-file sequence number (`addedAt`) as `_gd_eq_at`. */
+  private def eqDeleteKeysDf(m: TableMeta, dels: Seq[EqualityDeleteFile],
+                             withAddedAt: Boolean = false): DataFrame = {
+    val byLayout = dels.groupBy(d =>
+      (d.keyIds, d.schemaId, if (withAddedAt) d.addedAt else 0L))
+    byLayout.map { case ((keyIds, schemaId, addedAt), ds) =>
       val written = m.schemas.find(_.schemaId == schemaId).getOrElse(m.schema)
       val fields = keyIds.map { id =>
         val w = written.byId(id).getOrElse(throw new IllegalStateException(
@@ -1029,8 +1044,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         val cur = m.schema.byId(id).getOrElse(throw new IllegalStateException(
           s"equality-delete key id $id dropped from current schema"))
         raw.col(written.byId(id).get.physicalName).cast(cur.sparkType).as(cur.name)
-      }: _*)
-    }.reduce(_ unionByName _).distinct()
+      } ++ (if (withAddedAt) Seq(lit(addedAt).as("_gd_eq_at")) else Nil): _*)
+    }.reduce(_ unionByName _)
   }
 
   /** Resolve which snapshot a read sees: explicit snapshot-id > explicit
@@ -1173,20 +1188,26 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     }
   }
 
-  /** Write the distinct key tuples of `keyDf` as ONE equality delete file
+  /** Write the key tuples of `keyDf` as ONE equality delete file
     * under `data/eqdel-*.parquet` (physical column names, so renames stay
     * metadata-only); None when the key set is empty. `addedAt` is a
     * placeholder — [[commitReplace]] stamps it with the committing
     * snapshot id. Bounds of the first key column ride along (ColStat
-    * encoding via the same footer-stats reader as data files). */
+    * encoding via the same footer-stats reader as data files).
+    * `keyDf` holds distinct tuples, so the write needs no distinct
+    * shuffle — unless a key needs a cast to the table's type, which may
+    * fold distinct values together. */
   private def writeEqualityDeleteFile(keyDf: DataFrame,
                                       keyCols: Seq[String],
                                       m: TableMeta): Option[EqualityDeleteFile] = {
     val schema = m.schema
     val cols = keyCols.map(k => schema.byName(k).getOrElse(
       throw new IllegalArgumentException(s"merge key column $k not in schema")))
-    val phys = keyDf.select(cols.map(c =>
-      keyDf.col(c.name).cast(c.sparkType).as(c.physicalName)): _*).distinct()
+    val phys0 = keyDf.select(cols.map(c =>
+      keyDf.col(c.name).cast(c.sparkType).as(c.physicalName)): _*)
+    val castFree = cols.forall(c =>
+      keyDf.select(keyDf.col(c.name)).schema.head.dataType == c.sparkType)
+    val phys = if (castFree) phys0 else phys0.distinct()
     val tmp = new Path(location, s"tmp-eqdel-${UUID.randomUUID().toString.take(8)}")
     phys.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val written = listParquet(fs, tmp)
@@ -1462,26 +1483,66 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   }
 
   /** Distributed equality-field upsert: like [[mergeByKey]] but the delete
-    * keys stay in a DataFrame end-to-end — nothing key-shaped is collected
-    * to the driver, so a CDC catch-up burst of millions of keys is fine.
-    * File pruning uses the batch's aggregated [min,max] key bounds (one
-    * 1-row agg), and survivors are computed with a LEFT ANTI join (which is
-    * naturally null-safe: null-keyed table rows never match and survive). */
+    * keys arrive as a DataFrame, and only a bounded sample of them ever
+    * reaches the driver, so a CDC catch-up burst of millions of keys is
+    * fine. Survivors of a copy-on-write merge are computed with a LEFT
+    * ANTI join (naturally null-safe: null-keyed table rows never match and
+    * survive).
+    *
+    * Plan shape. At CDC batch sizes every Spark job costs a fixed
+    * ~70-90 ms of driver and codegen CPU whatever it reads, so the upsert
+    * is planned in as few jobs as possible:
+    *   - ONE key probe: a bounded collect of at most 1,025 distinct keys.
+    *     A batch of at most 1,024 keys is then known exactly on the
+    *     driver: it prunes files with an exact IN predicate (stats and
+    *     manifest blooms), and the equality delete (merge-on-read) or the
+    *     survivor anti-join (copy-on-write) reads the collected keys as a
+    *     local relation, with no further job over the key frame. Only a
+    *     larger batch pays the count/[min,max] aggregate, and then prunes
+    *     by those bounds.
+    *   - The upserts are written unconditionally (no emptiness probe);
+    *     the zero-row file Spark's writer leaves for an empty input is
+    *     discarded.
+    *   - `batchKeys = true` declares that `keyDf` holds each of the
+    *     batch's keys exactly once and that every upsert's key is among
+    *     them (a last-wins changelog batch): the key frame then skips its
+    *     distinct shuffle, and a batch without a non-null key commits
+    *     nothing, even with `extraSummary`.
+    * A 250-key merge-on-read changelog batch
+    * ([[graft.streaming.Changelog.mergeChangelog]]) runs six jobs: the
+    * probe (behind the caller's last-wins shuffle and the materialization
+    * of its cached batch), the upsert write, the equality-delete write and
+    * the manifest-bloom build (JobCountSpec). */
   def mergeByKeys(key: String, keyDf: DataFrame, upserts: DataFrame,
                   extraSummary: Map[String, String] = Map.empty,
                   toBranch: Option[String] = None,
-                  nullKeyDelete: Option[Column] = None): TableMeta = {
+                  nullKeyDelete: Option[Column] = None,
+                  batchKeys: Boolean = false): TableMeta = {
     // `nullKeyDelete`: also delete target rows whose KEY IS NULL and the
     // given (target-column) condition holds. Equality machinery can never
     // express this (null never equi-matches), but SQL MERGE's NOT MATCHED
     // BY SOURCE treats null-keyed target rows as not-matched and must
     // delete them — GraftMerge routes that clause here. NULL condition
     // values keep the row (ANSI: only TRUE deletes).
-    val kd = keyDf.select(keyDf.col(key)).filter(col(key).isNotNull).distinct().cache()
+    val nonNull = keyDf.select(keyDf.col(key)).filter(col(key).isNotNull)
+    val kd = if (batchKeys) nonNull else nonNull.distinct().cache()
     try {
-      // single 1-row driver fetch: count + bounds (bounded regardless of batch size)
-      val r = kd.agg(count(lit(1)).as("n"), min(col(key)).as("lo"), max(col(key)).as("hi")).head()
-      val nKeys = r.getLong(0)
+      // ORDER BY + LIMIT plans as TakeOrderedAndProject, whose collect is
+      // ONE job over every partition (a per-partition bounded top-k);
+      // a bare LIMIT would scan partition 0 first and then the rest
+      val probe = kd.orderBy(col(key)).limit(LakeTable.SmallKeyBatch + 1)
+        .collect().map(_.get(0)).toSeq
+      // the collected keys as a local relation: scanning or broadcasting
+      // it runs no job
+      val smallKeys =
+        if (probe.size > LakeTable.SmallKeyBatch) None
+        else Some(spark.createDataFrame(
+          java.util.Arrays.asList(probe.map(Row(_)): _*), kd.schema))
+      // a large batch: one 1-row driver fetch of count + bounds
+      val bounds = if (smallKeys.isDefined) None else Some(
+        kd.agg(count(lit(1)), min(col(key)), max(col(key))).head())
+      val nKeys = bounds.fold(probe.size.toLong)(_.getLong(0))
+      if (batchKeys && nKeys == 0 && nullKeyDelete.isEmpty) return meta
       val m0 = meta
       requireWapUnambiguous(m0)
       val branch = resolveWriteBranch(toBranch)
@@ -1498,15 +1559,16 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // periodically folds the masks back in.
       // null-keyed deletion matches a file iff it may HOLD null keys
       val nullPred = nullKeyDelete.map(_ => Pruning.IsNull(key))
-      // a SMALL batch collects its keys into an exact In predicate: per-key
-      // stats ranges AND manifest blooms then prune files the [min,max]
-      // envelope cannot (on a hash-keyed table the envelope spans every
-      // file — the bloom is what keeps a point-CDC merge from rewriting
-      // the whole table). Large batches keep the bounded 1-row fetch.
+      // a SMALL batch prunes with its exact keys: per-key stats ranges AND
+      // manifest blooms then prune files the [min,max] envelope cannot (on
+      // a hash-keyed table the envelope spans every file — the bloom is
+      // what keeps a point-CDC merge from rewriting the whole table)
       val keysPred =
         if (nKeys == 0) None
-        else if (nKeys <= 1024) Some(Pruning.In(key, kd.collect().map(_.get(0)).toSeq))
-        else Some(Pruning.And(Pruning.GtE(key, r.get(1)), Pruning.LtE(key, r.get(2))))
+        else bounds match {
+          case None => Some(Pruning.In(key, probe))
+          case Some(r) => Some(Pruning.And(Pruning.GtE(key, r.get(1)), Pruning.LtE(key, r.get(2))))
+        }
       val conflictPred = (keysPred, nullPred) match {
         case (Some(b), Some(n)) => Some(Pruning.Or(b, n))
         case (b, n) => b.orElse(n)
@@ -1518,13 +1580,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // must keep ids unique across batches), advanced from footer stats
       // and commit-guarded against concurrent allocation
       val (upserts1, idPlan) = assignIdentity(m0, upserts)
+      def writeUpserts(): Seq[DataFile] = dropEmptyFiles(writeDataFiles(
+        toPhysical(withCheckConstraints(m0, upserts1), m0.schema), m0, filePrefix = "app"))
+      // the distinct key set, local when the probe holds all of it
+      val keySet = smallKeys.getOrElse(kd)
       if (m0.properties.get("write.merge.mode").contains("merge-on-read")) {
-        val inserted =
-          if (upserts.isEmpty) Seq.empty
-          else writeDataFiles(
-          toPhysical(withCheckConstraints(m0, upserts1), m0.schema), m0, filePrefix = "app")
+        val inserted = writeUpserts()
         val eqDel =
-          if (nKeys == 0) None else writeEqualityDeleteFile(kd, Seq(key), m0)
+          if (nKeys == 0) None
+          else writeEqualityDeleteFile(keySet, Seq(key), m0)
         // null-keyed rows can't ride the equality mask — encode them as a
         // POSITIONAL delete file over the files that may hold null keys
         val nullDel = nullKill.toSeq.flatMap { kill =>
@@ -1563,16 +1627,14 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       val survivors: Seq[DataFile] = if (touched.isEmpty) Seq.empty else {
         // broadcast the key side when it is provably small; else let the
         // planner shuffle both sides on the key
-        val keySide = if (nKeys <= 1000000L) broadcast(kd) else kd
+        val keySide = if (nKeys <= 1000000L) broadcast(keySet) else keySet
         val remaining = dataFrameForLive(m0, snap, touched)
           .join(keySide, Seq(key), "left_anti")
         val kept = nullKill.map(kill => remaining.filter(!kill)).getOrElse(remaining)
-        writeDataFiles(toPhysical(kept, m0.schema), m0)
+        // a touched file whose every row the batch deletes leaves no survivor
+        dropEmptyFiles(writeDataFiles(toPhysical(kept, m0.schema), m0))
       }
-      val inserted =
-        if (upserts.isEmpty) Seq.empty
-        else writeDataFiles(
-          toPhysical(withCheckConstraints(m0, upserts1), m0.schema), m0, filePrefix = "app")
+      val inserted = writeUpserts()
       commitReplace(branch, untouched ++ survivors ++ inserted, "overwrite",
         extraSummary ++ Map(
           "merge-keys" -> nKeys.toString,
@@ -1580,7 +1642,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         conflictPredicate = conflictPred,
         staged = stagedWap,
         identityPlan = idPlan, identityProps = identityAdvance(idPlan, inserted))
-    } finally { kd.unpersist(); () }
+    } finally { if (!batchKeys) kd.unpersist(); () }
   }
 
   /** TRUNCATE (D3): new empty snapshot. "Table := empty" is planned
@@ -2854,7 +2916,11 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     *     positional mask at O(masked-candidate-scan) cost, writing KBs);
     *   - positional delete files ≥ `maxDeleteFiles` →
     *     [[rewriteDeleteFiles]] (metadata + one KB-scale write).
-    * The thresholds are checked on in-memory metadata (free); after a
+    * The thresholds are checked on in-memory metadata (free), so a pass
+    * with nothing due runs no Spark job. Plan shape of a due conversion:
+    * one masked scan semi-joined to the broadcast key sets, then the
+    * positional-delete write and its deletion-vector build — six jobs
+    * over four CDC batches' equality deletes (JobCountSpec). After a
     * call the read plan carries ≤ maxEqDeleteFiles equality branches and
     * ≤ 1 positional anti-join — bounded regardless of stream length
     * (MaintenanceSpec drives 50 batches; probe in SCALEPROBE.md).
@@ -3022,15 +3088,25 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   }
 
   /** CALL convert_equality_deletes: the MINOR delete compaction — resolve
-    * every live equality delete into concrete `(file, pos)` entries (one
-    * masked-candidate scan, writes only the matched POSITIONS) and retire
-    * the equality set, WITHOUT rewriting any data file. After it: the
-    * metadata-only COUNT(*) is exact again (positional counts are), reads
-    * pay one position anti-join instead of per-class key joins, and the
+    * every live equality delete into concrete `(file, pos)` entries
+    * (writes only the matched POSITIONS) and retire the equality set,
+    * WITHOUT rewriting any data file. After it: the metadata-only
+    * COUNT(*) is exact again (positional counts are), reads pay one
+    * position anti-join instead of per-class key joins, and the
     * accumulated CDC masks stop growing. The cheap middle tier between
     * "live with the masks" and `rewrite_position_deletes`' full data
     * rewrite — at 100 TB it writes kilobytes where the full rewrite
-    * re-copies every masked file. */
+    * re-copies every masked file.
+    *
+    * Plan shape: ONE scan of the candidate files under the positional
+    * mask, LEFT SEMI joined to each key layout's equality keys, each key
+    * tagged with its delete file's sequence number — a row dies iff its
+    * key matches a delete strictly newer than its file. Every mask class
+    * rides the same join (the file's sequence number is a column), so the
+    * key set is broadcast once per layout, not once per class. A distinct
+    * runs only when the table has more than one key layout (a row could
+    * match in two). Over four CDC batches' deletes it runs six Spark jobs
+    * (JobCountSpec). */
   def convertEqualityDeletes(): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
@@ -3039,13 +3115,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     if (eqDels.isEmpty) return m0
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
     val candidates = files.filter(f => eqDels.exists(_.addedAt > f.addedSnapshotId))
-    // rows killed by the equality masks = candidate rows live under the
-    // POSITIONAL mask only, minus rows live under BOTH masks
-    val posOnly = maskPositions(m0, baseSnap, candidates, withMeta = true)
-    val bothMasks = liveRows(m0, baseSnap, candidates, withMeta = true)
-    val killed = posOnly.select(col("_gd_file"), col("_gd_pos"))
-      .exceptAll(bothMasks.select(col("_gd_file"), col("_gd_pos")))
-    val newDel = writeDeleteFiles(killed)
+    val newDel =
+      if (candidates.isEmpty) Seq.empty
+      else writeDeleteFiles(equalityKilled(m0, baseSnap, candidates, eqDels))
     commit { m =>
       val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
       if (parent.map(_.snapshotId) != baseSnap.map(_.snapshotId))
@@ -3065,6 +3137,29 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         refs = m.refs + (branch -> Ref(snapId)),
         history = m.history :+ HistoryEntry(now, snapId, branch))
     }
+  }
+
+  /** `(_gd_file, _gd_pos)` of the rows of `files` live under `snap`'s
+    * positional mask that an applicable equality delete of `eqDels`
+    * (`addedAt` > the file's `addedSnapshotId`) masks: exactly the
+    * positions [[liveRows]] drops on top of [[maskPositions]]. */
+  private def equalityKilled(m: TableMeta, snap: Option[Snapshot], files: Seq[DataFile],
+                             eqDels: Seq[EqualityDeleteFile]): DataFrame = {
+    val seqOf = typedLit(files.map(f => fileName(f.path) -> f.addedSnapshotId).toMap)
+    val rows = maskPositions(m, snap, files, withMeta = true)
+      .withColumn("_gd_seq", element_at(seqOf, col("_gd_file")))
+    val byLayout = eqDels.groupBy(_.keyIds).toSeq.map { case (keyIds, dels) =>
+      val keyNames = keyIds.map(id => m.schema.byId(id).getOrElse(throw
+        new IllegalStateException(
+          s"equality-delete key column id $id not in schema")).name)
+      val keys0 = eqDeleteKeysDf(m, dels, withAddedAt = true)
+      val keys = if (dels.map(_.rowCount).sum <= 4L * 1000 * 1000) broadcast(keys0) else keys0
+      // plain (null-rejecting) equality: a null-keyed row is never masked
+      val cond = keyNames.map(n => rows(n) === keys(n)).reduce(_ && _) &&
+        keys("_gd_eq_at") > rows("_gd_seq")
+      rows.join(keys, cond, "left_semi").select(col("_gd_file"), col("_gd_pos"))
+    }
+    if (byLayout.size == 1) byLayout.head else byLayout.reduce(_ union _).distinct()
   }
 
   /** CALL rewrite_delete_files: compact accumulated positional delete
@@ -3864,6 +3959,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
 
 object LakeTable {
   val MainBranch = "main"
+
+  /** Largest key batch [[LakeTable.mergeByKeys]] collects to the driver:
+    * up to this many keys are pruned and written as an exact local set. */
+  private val SmallKeyBatch = 1024
 
   /** A snapshot's scan exported for a second engine ([[LakeTable.exportScan]]):
     * the exact parquet paths plus a standalone DuckDB SELECT over them

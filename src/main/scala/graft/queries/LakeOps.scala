@@ -26,7 +26,7 @@ object LakeOps {
                            * whose POINT is an analyzer fast path (q96) run
                            * their SQL here, the way the engine deploys. */
                          ext: SparkSession)
-  private val envs = new ConcurrentHashMap[String, Env]()
+  private val envs = new graft.SessionCache[Env]()
 
   /** q83's DuckDB-side oracle, GENERATED by the export during setup (the
     * SQL embeds the snapshot's data/delete-file paths, so it cannot be a
@@ -46,8 +46,7 @@ object LakeOps {
   private val ttlCuts = new ConcurrentHashMap[String, Long]()
 
   private def ensure(s: SparkSession, dir: String): Env = {
-    val key = System.identityHashCode(s) + "|" + dir
-    envs.computeIfAbsent(key, { _ =>
+    envs.getOrElseUpdate(s, dir) {
       graft.Tables.registerAll(s, dir)
       val wh = java.nio.file.Files.createTempDirectory("graft-lakeops").toString
       // reads (q31-q33) go through the caller's session via the V1Scan
@@ -430,7 +429,7 @@ object LakeOps {
       exportOracleSqls.put(dir,
         s"SELECT * FROM (\n${export.sql}\n) ORDER BY p_partkey")
       Env(wh, snap1, chgFrom, ext)
-    })
+    }
   }
 
   /** Parquet → lake table (SQL INSERT SELECT) → aggregate read through the
@@ -921,11 +920,10 @@ object LakeOps {
     * hash. Exact-NDV mode is the audit path (n distinct aggregates plan
     * an Expand ×4); the 100 TB default is one HLL++ pass, spec-gated for
     * accuracy in AnalyzeSpec. */
-  private val statEnvs = new ConcurrentHashMap[String, String]()
+  private val statEnvs = new graft.SessionCache[String]()
   val q106 = plan("q106_analyze_stats",
     fn = (s, dir) => {
-      val key = System.identityHashCode(s) + "|" + dir
-      val wh = statEnvs.computeIfAbsent(key, { _ =>
+      val wh = statEnvs.getOrElseUpdate(s, dir) {
         graft.Tables.registerAll(s, dir)
         val wh0 = java.nio.file.Files.createTempDirectory("graft-anastat").toString
         val cat = new graft.lake.LakeCatalog(s, wh0)
@@ -936,7 +934,7 @@ object LakeOps {
         t.append(src)
         t.analyzeTable(exactNdv = true)
         wh0
-      })
+      }
       new graft.lake.LakeCatalog(s, wh).loadTable("ops.ostat")
         .metadataTable("stats")
         .select(org.apache.spark.sql.functions.col("column"),
@@ -961,11 +959,10 @@ object LakeOps {
     * DuckDB-checkable (COUNT(DISTINCT) oracle) where q41's lgK=12 sketch
     * can only be error-band-gated (OperatorsSpec ≤5%). The 100 TB answer
     * to this question stays q41's sketch; this is its audit. */
-  private val tokEnvs = new ConcurrentHashMap[String, String]()
+  private val tokEnvs = new graft.SessionCache[String]()
   val q108 = plan("q108_exact_token_ndv",
     fn = (s, dir) => {
-      val key = System.identityHashCode(s) + "|" + dir
-      val wh = tokEnvs.computeIfAbsent(key, { _ =>
+      val wh = tokEnvs.getOrElseUpdate(s, dir) {
         graft.Tables.registerAll(s, dir)
         val wh0 = java.nio.file.Files.createTempDirectory("graft-tokstat").toString
         val cat = new graft.lake.LakeCatalog(s, wh0)
@@ -977,7 +974,7 @@ object LakeOps {
         t.append(src)
         t.analyzeTable(exactNdv = true)
         wh0
-      })
+      }
       new graft.lake.LakeCatalog(s, wh).loadTable("ops.tok")
         .metadataTable("stats")
         .select(org.apache.spark.sql.functions.col("column"),

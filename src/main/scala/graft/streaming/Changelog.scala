@@ -226,19 +226,20 @@ object Changelog {
       .filter(col("_rn") === 1).drop("_rn")
       .cache()
     try {
-      if (!latest.isEmpty) {
-        val upserts = latest.filter(col(opCol).isin(Insert, UpdateAfter)).drop(opCol)
-        // keys stay distributed end-to-end (LEFT ANTI survivor join +
-        // min/max-bounds file pruning) — no driver-side key collection,
-        // so a CDC catch-up burst cannot blow up the driver.
-        // Conflict-retry: a concurrent compaction/DELETE between merge
-        // planning and commit re-plans the merge against fresh metadata
-        LakeTable.withConflictRetry() {
-          table.mergeByKeys(key, latest.select(col(key)), upserts,
-            if (batchId >= 0) Map(marker -> batchId.toString) else Map.empty)
-        }
-        ()
+      val upserts = latest.filter(col(opCol).isin(Insert, UpdateAfter)).drop(opCol)
+      // `latest` holds each key once and every upsert's key, so it is the
+      // batch's key set as is (`batchKeys`): no distinct shuffle, only a
+      // bounded key sample reaches the driver (so a CDC catch-up burst
+      // cannot blow up the driver), and a batch with no keyed row
+      // commits nothing.
+      // Conflict-retry: a concurrent compaction/DELETE between merge
+      // planning and commit re-plans the merge against fresh metadata
+      LakeTable.withConflictRetry() {
+        table.mergeByKeys(key, latest.select(col(key)), upserts,
+          if (batchId >= 0) Map(marker -> batchId.toString) else Map.empty,
+          batchKeys = true)
       }
+      ()
     } finally { latest.unpersist(); () }
   }
 

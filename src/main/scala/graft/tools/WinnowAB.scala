@@ -3,19 +3,26 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev A/B for q64 — the SQL self-join form plans the fingerprint
-  * pipeline (Generate → Exchange(h) → Sort → Window(df) → Filter) under
-  * BOTH join branches; runtime ReusedExchange (r17-gated) dedups the
-  * shuffle write, but each branch re-runs the post-shuffle Sort + Window
-  * + Filter, and one branch feeds a BroadcastExchange whose build is
-  * corpus-sized (scale-adaptive at sf0.1 only because the size estimate
-  * is small). The MAT form materializes the filtered fingerprint stream
-  * (doc_id BIGINT, h BIGINT — the q77 narrow-cut-point criterion) behind
-  * an eager localCheckpoint; LogicalRDD keeps the checkpointed plan's
-  * output partitioning+ordering (hash(h) / h ASC), so the self-join can
-  * zip the two reads with NO further exchange, sort, or broadcast.
-  * Results must be identical (asserted). Prints both plans + interleaved
-  * medians. Usage: runMain graft.tools.WinnowAB <sfDir> [reps]
+/** Dev A/B for q64, kept as the record of a REFUTED idea. q64's SQL
+  * self-join plans the fingerprint pipeline (Generate → Exchange(h) →
+  * Sort → Window(df) → Filter) under both join branches; ReusedExchange
+  * dedups the shuffle write, but each branch re-runs the post-shuffle
+  * Sort + Window + Filter. The hypothesis was that materializing the
+  * filtered (doc_id, h) stream behind an eager localCheckpoint (the MAT
+  * form below) would run the window once and, if the checkpointed scan
+  * kept its hash(h) partitioning and h ordering, let the self-join zip
+  * its two reads with no exchange, sort or broadcast.
+  *
+  * Tested and refuted (OPTIMIZATION_r18.md, "q64 materialized fingerprint
+  * stream"): the MAT plan's checkpointed scans read back as
+  * `UnknownPartitioning(0)` — Spark 4.1's localCheckpoint does not carry
+  * the physical partitioning or ordering into LogicalRDD — so the join
+  * re-plans as a fresh BroadcastHashJoin, and MAT measured slower (median
+  * 1.15 s against 1.06 s for the shipped SQL form at sf0.1). q64 keeps the
+  * SQL form. The A/B stays runnable to re-test on a Spark version whose
+  * checkpoints keep partitioning. Results must be identical (asserted).
+  * Prints both plans + interleaved medians.
+  * Usage: runMain graft.tools.WinnowAB <sfDir> [reps]
   */
 object WinnowAB {
 
