@@ -2,7 +2,10 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -1486,8 +1489,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * keys arrive as a DataFrame, and only a bounded sample of them ever
     * reaches the driver, so a CDC catch-up burst of millions of keys is
     * fine. Survivors of a copy-on-write merge are computed with a LEFT
-    * ANTI join (naturally null-safe: null-keyed table rows never match and
-    * survive).
+    * ANTI join, or a NOT IN filter for a small batch (both null-safe:
+    * null-keyed table rows never match and survive).
     *
     * Plan shape. At CDC batch sizes every Spark job costs a fixed
     * ~70-90 ms of driver and codegen CPU whatever it reads, so the upsert
@@ -1495,11 +1498,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     *   - ONE key probe: a bounded collect of at most 1,025 distinct keys.
     *     A batch of at most 1,024 keys is then known exactly on the
     *     driver: it prunes files with an exact IN predicate (stats and
-    *     manifest blooms), and the equality delete (merge-on-read) or the
-    *     survivor anti-join (copy-on-write) reads the collected keys as a
-    *     local relation, with no further job over the key frame. Only a
-    *     larger batch pays the count/[min,max] aggregate, and then prunes
-    *     by those bounds.
+    *     manifest blooms), the equality delete (merge-on-read) reads the
+    *     collected keys as a local relation, and copy-on-write survivors
+    *     are the touched files' rows NOT IN those keys, with no further
+    *     job over the key frame. Only a larger batch pays the
+    *     count/[min,max] aggregate, prunes by those bounds and anti-joins
+    *     its survivors.
+    *   - A key frame whose optimized plan is a local relation (SQL
+    *     MERGE's small-source path, [[graft.lake.dsv2.GraftMerge]]) needs
+    *     no probe: its keys are taken on the driver.
     *   - The upserts are written unconditionally (no emptiness probe);
     *     the zero-row file Spark's writer leaves for an empty input is
     *     discarded.
@@ -1525,15 +1532,24 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // delete them — GraftMerge routes that clause here. NULL condition
     // values keep the row (ANSI: only TRUE deletes).
     val nonNull = keyDf.select(keyDf.col(key)).filter(col(key).isNotNull)
-    val kd = if (batchKeys) nonNull else nonNull.distinct().cache()
+    // a key frame over a driver-local relation (SQL MERGE's small-source
+    // path) is read on the driver: no distinct, no cache, no probe job
+    val localKeys = nonNull.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        Some(nonNull.collect().map(_.get(0)).distinct.toSeq)
+          .filter(_.size <= LakeTable.SmallKeyBatch)
+      case _ => None
+    }
+    val kd = if (batchKeys || localKeys.isDefined) nonNull else nonNull.distinct().cache()
     try {
       // ORDER BY + LIMIT plans as TakeOrderedAndProject, whose collect is
       // ONE job over every partition (a per-partition bounded top-k);
       // a bare LIMIT would scan partition 0 first and then the rest
-      val probe = kd.orderBy(col(key)).limit(LakeTable.SmallKeyBatch + 1)
-        .collect().map(_.get(0)).toSeq
-      // the collected keys as a local relation: scanning or broadcasting
-      // it runs no job
+      val probe = localKeys.getOrElse(kd.orderBy(col(key)).limit(LakeTable.SmallKeyBatch + 1)
+        .collect().map(_.get(0)).toSeq)
+      // the collected keys as a local relation: a scan of it runs no job
+      // (a broadcast of it would: the exchange collects it in a job of its
+      // own, which is why copy-on-write survivors take an IN filter)
       val smallKeys =
         if (probe.size > LakeTable.SmallKeyBatch) None
         else Some(spark.createDataFrame(
@@ -1625,11 +1641,20 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         case Some(p) => partitionTouched(m0, all, p)
       }
       val survivors: Seq[DataFile] = if (touched.isEmpty) Seq.empty else {
-        // broadcast the key side when it is provably small; else let the
-        // planner shuffle both sides on the key
-        val keySide = if (nKeys <= 1000000L) broadcast(keySet) else keySet
-        val remaining = dataFrameForLive(m0, snap, touched)
-          .join(keySide, Seq(key), "left_anti")
+        val live = dataFrameForLive(m0, snap, touched)
+        val remaining = smallKeys match {
+          // a key set known on the driver: an IN filter, no join and no
+          // broadcast job; null-keyed rows are never IN and survive
+          case Some(_) =>
+            val dt = kd.schema.head.dataType
+            live.filter(!coalesce(col(key).isin(probe.map(v =>
+              ColumnBridge.column(Literal.create(v, dt))): _*), lit(false)))
+          // broadcast the key side when it is provably small; else let
+          // the planner shuffle both sides on the key
+          case None =>
+            live.join(if (nKeys <= 1000000L) broadcast(keySet) else keySet,
+              Seq(key), "left_anti")
+        }
         val kept = nullKill.map(kill => remaining.filter(!kill)).getOrElse(remaining)
         // a touched file whose every row the batch deletes leaves no survivor
         dropEmptyFiles(writeDataFiles(toPhysical(kept, m0.schema), m0))
@@ -1642,7 +1667,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         conflictPredicate = conflictPred,
         staged = stagedWap,
         identityPlan = idPlan, identityProps = identityAdvance(idPlan, inserted))
-    } finally { if (!batchKeys) kd.unpersist(); () }
+    } finally { if (!batchKeys && localKeys.isEmpty) kd.unpersist(); () }
   }
 
   /** TRUNCATE (D3): new empty snapshot. "Table := empty" is planned
@@ -3962,7 +3987,7 @@ object LakeTable {
 
   /** Largest key batch [[LakeTable.mergeByKeys]] collects to the driver:
     * up to this many keys are pruned and written as an exact local set. */
-  private val SmallKeyBatch = 1024
+  private[lake] val SmallKeyBatch = 1024
 
   /** A snapshot's scan exported for a second engine ([[LakeTable.exportScan]]):
     * the exact parquet paths plus a standalone DuckDB SELECT over them

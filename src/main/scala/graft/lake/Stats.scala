@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -22,8 +23,12 @@ object Stats {
     * Stats cover top-level primitive columns only; nested/array/map columns
     * get a null-count-only entry. */
   def fromFooter(path: String, conf: Configuration): (Long, Long, Map[String, ColStat]) = {
-    val file = HadoopInputFile.fromPath(new Path(path), conf)
-    val reader = ParquetFileReader.open(file)
+    val p = new Path(path)
+    val file = HadoopInputFile.fromPath(p, conf)
+    // read options from the table's conf: the no-options `open(file)`
+    // builds a fresh Configuration, which re-parses core-default.xml and
+    // core-site.xml on every call
+    val reader = ParquetFileReader.open(file, HadoopReadOptions.builder(conf, p).build())
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq

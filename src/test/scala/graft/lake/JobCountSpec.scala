@@ -1,28 +1,27 @@
 package graft.lake
 
+import graft.{ExtensionsSession, JobTrace}
 import graft.streaming.Changelog
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import scala.util.Random
 
-/** Spark-job budgets of the merge-on-read CDC path. At CDC batch sizes a
-  * job costs a fixed ~70-90 ms of driver and codegen CPU whatever it
-  * reads, so the number of jobs IS the cost of a small upsert, a point
-  * lookup or a delete-mask conversion. Each test counts the jobs one
-  * operation starts (a listener on job start) and pins the budget, so a
-  * change that silently re-adds a probe, an `isEmpty` or a distinct
-  * shuffle fails here rather than in a benchmark.
+/** Spark-job budgets of the merge-on-read CDC path and of a small SQL
+  * MERGE. At these sizes a job costs a fixed ~70-90 ms of driver and
+  * codegen CPU whatever it reads, so the number of jobs IS the cost of a
+  * small upsert, a point lookup or a delete-mask conversion. Each test
+  * counts the jobs one operation starts ([[graft.JobTrace]]) and pins the
+  * budget, so a change that silently re-adds a probe, an `isEmpty` or a
+  * distinct shuffle fails here rather than in a benchmark, naming where
+  * each job came from.
   *
-  * The table mirrors a keyed CDC target: merge-on-read upserts, a
+  * The CDC table mirrors a keyed CDC target: merge-on-read upserts, a
   * manifest bloom on the key, 5,000 seeded rows in one file. */
-class JobCountSpec extends AnyFunSuite {
+class JobCountSpec extends AnyFunSuite with JobTrace {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -34,23 +33,6 @@ class JobCountSpec extends AnyFunSuite {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("v", StringType),
     StructField("seq", LongType)))
-
-  /** Jobs started while `body` runs (listener bus drained on both ends). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    ListenerBridge.flush(sc)
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      ListenerBridge.flush(sc)
-      info(s"${n.get} Spark jobs")
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def cdcTable(name: String): LakeTable = {
     val cat = new LakeCatalog(spark, Files.createTempDirectory("graft-jobs").toString)
@@ -113,7 +95,7 @@ class JobCountSpec extends AnyFunSuite {
     }
     assert(t.meta.version === before + 1, "the batch commits once")
     assert(t.meta.currentSnapshot.get.summary("merge-keys") === "250")
-    assert(jobs <= 6, s"a 250-key MoR merge batch ran $jobs jobs")
+    assertJobs(jobs, 6, "a 250-key MoR merge batch")
   }
 
   // the per-file entry count (key broadcast, scan map, result), the
@@ -124,7 +106,7 @@ class JobCountSpec extends AnyFunSuite {
     val (_, jobs) = jobsOf(t.convertEqualityDeletes())
     assert(t.meta.currentSnapshot.get.eqDeleteFiles.isEmpty)
     assert(t.toDF.collect().toSet === want)
-    assert(jobs <= 6, s"convertEqualityDeletes ran $jobs jobs")
+    assertJobs(jobs, 6, "convertEqualityDeletes")
   }
 
   // the key-set broadcast and the masked scan
@@ -139,6 +121,46 @@ class JobCountSpec extends AnyFunSuite {
       "id", "seq", batchId = 4L)
     val (rows, jobs) = jobsOf(t.read(filter = Some(col("id") === k)).collect())
     assert(rows.map(_.getString(1)).toSeq === Seq("last"))
-    assert(jobs <= 2, s"a point lookup under equality deletes ran $jobs jobs")
+    assertJobs(jobs, 2, "a point lookup under equality deletes")
+  }
+
+  /** A session with GraftExtensions (SQL MERGE INTO is translated only
+    * there) and a graft catalog `jc` on the shared context. */
+  private lazy val sqlSpark: SparkSession = {
+    spark
+    ExtensionsSession.withCatalog("jc", Files.createTempDirectory("graft-jobs-sql").toString)
+  }
+
+  /** The reference notebooks' upsert, as the notebook benchmark runs it: a
+    * 10-row VALUES source (5 keys matched, 5 new) merged into a 40-row
+    * table. Returns the jobs the MERGE started; checks the merged rows. */
+  private def notebookMergeJobs(name: String, props: String): Jobs = {
+    val t = s"jc.db.$name"
+    sqlSpark.sql("CREATE DATABASE IF NOT EXISTS jc.db")
+    sqlSpark.sql(s"CREATE TABLE $t (id BIGINT, grp STRING, v BIGINT)$props")
+    sqlSpark.sql(s"INSERT INTO $t VALUES " +
+      (0 until 40).map(i => s"($i, 'g${i % 3}', $i)").mkString(", "))
+    val hit = Set(3, 11, 19, 27, 35)
+    val src = (hit.toSeq.sorted ++ (40 until 45)).map(i => s"($i, 'n', ${1000 + i})").mkString(", ")
+    val (_, jobs) = jobsOf(sqlSpark.sql(
+      s"""MERGE INTO $t t USING (SELECT * FROM VALUES $src AS s(id, grp, v)) s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect())
+    val got = sqlSpark.sql(s"SELECT id, grp, v FROM $t").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val want = (0 until 45).map { i =>
+      if (hit(i) || i >= 40) (i.toLong, "n", 1000L + i) else (i.toLong, s"g${i % 3}", i.toLong)
+    }.toSet
+    assert(got === want)
+    jobs
+  }
+
+  // the target-key lookup, the survivor rewrite and the upsert write
+  test("a 10-row VALUES MERGE INTO a copy-on-write table runs at most 3 Spark jobs") {
+    assertJobs(notebookMergeJobs("cow", ""), 3, "a small-source copy-on-write MERGE")
+  }
+
+  test("a 10-row VALUES MERGE INTO a merge-on-read table runs at most 3 Spark jobs") {
+    assertJobs(notebookMergeJobs("mor", " TBLPROPERTIES ('write.merge.mode'='merge-on-read')"),
+      3, "a small-source merge-on-read MERGE")
   }
 }

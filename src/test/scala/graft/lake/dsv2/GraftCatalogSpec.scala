@@ -299,29 +299,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     * and SQL MERGE INTO is translated to the distributed merge command. */
   lazy val extSpark: SparkSession = {
     spark // ensure the shared context exists first
-    // create() promotes the new session to the JVM default/active slots —
-    // restore them so other suites' getOrCreate() keeps its session
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions()(_))
-      .create()
-    prevDefault match {
-      case Some(d) => SparkSession.setDefaultSession(d)
-      case None => SparkSession.clearDefaultSession()
-    }
-    prevActive match {
-      case Some(a) => SparkSession.setActiveSession(a)
-      case None => SparkSession.clearActiveSession()
-    }
-    s.conf.set("spark.sql.catalog.lake", classOf[GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.lake.warehouse",
+    graft.ExtensionsSession.withCatalog("lake",
       spark.conf.get("spark.sql.catalog.lake.warehouse"))
-    s
   }
 
   test("extensions session: reads are substituted at analysis (no V1 boundary)") {

@@ -17,29 +17,8 @@ import java.nio.file.Files
   * compares full row sets. */
 class GraftSpjSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions()(_))
-      .create()
-    prevDefault match {
-      case Some(d) => SparkSession.setDefaultSession(d)
-      case None => SparkSession.clearDefaultSession()
-    }
-    prevActive match {
-      case Some(a) => SparkSession.setActiveSession(a)
-      case None => SparkSession.clearActiveSession()
-    }
-    val wh = Files.createTempDirectory("graft-spj-wh").toString
-    s.conf.set("spark.sql.catalog.lake", classOf[GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.lake.warehouse", wh)
-    s
-  }
+  lazy val spark: SparkSession = graft.ExtensionsSession.withCatalog("lake",
+    Files.createTempDirectory("graft-spj-wh").toString)
 
   def sql(q: String) = spark.sql(q)
 

@@ -14,28 +14,10 @@ import java.nio.file.Files
 class MvRouteSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    // create(), NOT getOrCreate(): a shared session from another suite
-    // would come back WITHOUT GraftExtensions and the routing rule
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions()(_))
-      .create()
-    prevDefault match {
-      case Some(d) => SparkSession.setDefaultSession(d)
-      case None => SparkSession.clearDefaultSession()
-    }
-    prevActive match {
-      case Some(a) => SparkSession.setActiveSession(a)
-      case None => SparkSession.clearActiveSession()
-    }
-    val wh = Files.createTempDirectory("graft-mvroute").toString
-    s.conf.set("spark.sql.catalog.lake", classOf[GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.lake.warehouse", wh)
+    // a fresh session, not getOrCreate(): a shared session from another
+    // suite would come back WITHOUT GraftExtensions and the routing rule
+    val s = graft.ExtensionsSession.withCatalog("lake",
+      Files.createTempDirectory("graft-mvroute").toString)
     org.apache.spark.sql.graftbridge.CatalogBridge.resetCatalogs(s)
     s.sql("CREATE DATABASE IF NOT EXISTS lake.db")
     s
