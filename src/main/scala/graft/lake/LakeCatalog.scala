@@ -505,7 +505,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
         "cloned-from" -> srcIdent,
         "cloned-from-location" -> src.location,
         "source-snapshot-id" -> snap.snapshotId.toString,
-        "total-records" -> snap.files.map(_.rowCount).sum.toString) ++
+        "total-records" -> snap.liveRecords.toString) ++
         snap.summary.get(BloomSkip.BundleSummaryKey)
           .map(BloomSkip.BundleSummaryKey -> _),
       staged = false,

@@ -2,7 +2,8 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -286,6 +287,19 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
 
   private def resolveWriteBranch(explicit: Option[String]): String =
     explicit.orElse(wapBranch).getOrElse(MainBranch)
+
+  /** Where a write planned against `m0` lands: the branch it commits to,
+    * whether it stages its snapshot for WAP audit (a `spark.wap.id`
+    * session on a `write.wap.enabled` table, with no explicit branch), and
+    * the snapshot it plans against. Refuses an ambiguous WAP session. */
+  private def writeTarget(m0: TableMeta,
+                          toBranch: Option[String]): (String, Boolean, Option[Snapshot]) = {
+    requireWapUnambiguous(m0)
+    val branch = resolveWriteBranch(toBranch)
+    val staged = wapId.isDefined &&
+      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
+    (branch, staged, m0.snapshotFor(branch).orElse(m0.currentSnapshot))
+  }
 
   // ---- write path ----------------------------------------------------------
 
@@ -604,7 +618,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def append(df: DataFrame, toBranch: Option[String] = None,
              extraSummary: Map[String, String] = Map.empty): TableMeta = {
     val m0 = mergeSchemaIfEnabled(df)
-    requireWapUnambiguous(m0)
+    val (branch, staged, _) = writeTarget(m0, toBranch)
     val (df1, idPlan) = assignIdentity(m0, df)
     val newFiles = writeDataFiles(
       toPhysical(withCheckConstraints(m0, df1), m0.schema), m0, filePrefix = "app")
@@ -612,25 +626,12 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // manifest blooms for the new files (one aggregate over just-written
     // data; a no-op unless the table declares graft.bloom.columns)
     val bloomBundle = BloomSkip.buildBundleFor(spark, metaStore, m0, newFiles)
-    val staged = wapId.isDefined &&
-      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-    val branch = resolveWriteBranch(toBranch)
     commit { m =>
-      require(m.refs.get(branch).forall(_.kind != "tag"), s"cannot write to tag $branch")
       requireIdentityUnmoved(m, idPlan)
       val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val base = parent.map(_.files).getOrElse(Seq.empty)
-      val parentDels = parent.map(_.deleteFiles).getOrElse(Seq.empty)
-      val parentEq = parent.map(_.eqDeleteFiles).getOrElse(Seq.empty)
       val summary = Map(
-        "operation" -> "append",
         "added-data-files" -> newFiles.size.toString,
-        "added-records" -> newFiles.map(_.rowCount).sum.toString,
-        "total-records" -> (base.map(_.rowCount).sum + newFiles.map(_.rowCount).sum -
-          parentDels.map(_.rowCount).sum).toString
-      ) ++ (if (parentEq.nonEmpty) Map("has-equality-deletes" -> "true") else Map.empty) ++
+        "added-records" -> newFiles.map(_.rowCount).sum.toString) ++
         wapId.map("wap.id" -> _) ++
         bloomBundle.map(BloomSkip.BundleSummaryKey -> _) ++
         extraSummary
@@ -638,15 +639,12 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // all still apply, unpruned; the new files are stamped with this
       // commit's id so no LIVE equality delete (all strictly older) masks
       // them
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "append", summary,
-        base ++ newFiles.map(_.copy(addedSnapshotId = snapId)),
-        staged = staged, deleteFiles = parentDels, eqDeleteFiles = parentEq)
-      val m2 = m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        properties = m.properties ++ idProps)
-      if (staged) m2
-      else m2.copy(
-        refs = m.refs + (branch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, branch))
+      m.withSnapshot(branch, parent, "append", summary,
+        parent.map(_.files).getOrElse(Seq.empty) ++
+          newFiles.map(_.copy(addedSnapshotId = m.nextSnapshotId)),
+        deleteFiles = parent.map(_.deleteFiles).getOrElse(Seq.empty),
+        eqDeleteFiles = parent.map(_.eqDeleteFiles).getOrElse(Seq.empty),
+        staged = staged, properties = idProps)
     }
   }
 
@@ -772,32 +770,22 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       val taken = parentFiles.map(f => new Path(f.path).getName).toSet
       names.find(taken.contains).foreach(n => throw new IllegalArgumentException(
         s"add_files: basename $n already referenced by the table"))
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
       val newFiles = stats.map { case (p, (rows, bytes, st)) =>
         val pv = partSources.map { case (pf, sc) =>
           pf.physicalName -> pathTuples(p)(sc.name)
         }.toMap
         DataFile(p.toString, m.spec.specId, importSchema.schemaId, pv,
-          rows, bytes, st, addedSnapshotId = snapId)
+          rows, bytes, st, addedSnapshotId = m.nextSnapshotId)
       }
       val summary = Map(
-        "operation" -> "append",
         "imported-files" -> newFiles.size.toString,
         "added-data-files" -> newFiles.size.toString,
         "added-records" -> newFiles.map(_.rowCount).sum.toString,
-        "source" -> source,
-        "total-records" -> (parentFiles.map(_.rowCount).sum +
-          newFiles.map(_.rowCount).sum -
-          parent.map(_.deleteFiles.map(_.rowCount).sum).getOrElse(0L)).toString)
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "append",
-        summary, parentFiles ++ newFiles,
-        deleteFiles = parent.map(_.deleteFiles).getOrElse(Seq.empty),
-        eqDeleteFiles = parent.map(_.eqDeleteFiles).getOrElse(Seq.empty))
-      m.copy(schemas = m.schemas :+ importSchema,
-        snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (LakeTable.MainBranch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, LakeTable.MainBranch))
+        "source" -> source)
+      m.copy(schemas = m.schemas :+ importSchema)
+        .withSnapshot(MainBranch, parent, "append", summary, parentFiles ++ newFiles,
+          deleteFiles = parent.map(_.deleteFiles).getOrElse(Seq.empty),
+          eqDeleteFiles = parent.map(_.eqDeleteFiles).getOrElse(Seq.empty))
     }
   }
 
@@ -950,9 +938,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // so their count is bounded by live equality deletes + 1 (churn since
     // compaction), NOT by the table's commit count — the steady state
     // after compaction is one class with one anti-join.
-    val classOf_ = (f: DataFile) => eqDels.count(_.addedAt > f.addedSnapshotId)
+    val classOf_ = (f: DataFile) => eqDels.count(_.masks(f))
     files.groupBy(classOf_).toSeq.sortBy(_._1).map { case (_, bucket) =>
-      val applicable = eqDels.filter(_.addedAt > bucket.head.addedSnapshotId)
+      val applicable = eqDels.filter(_.masks(bucket.head))
       val src = maskPositions(m, snap, bucket, withMeta)
       applicable.groupBy(_.keyIds).foldLeft(src) { case (acc, (keyIds, dels)) =>
         val keyNames = keyIds.map(id => m.schema.byId(id).getOrElse(throw
@@ -1128,11 +1116,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def delete(condition: Column, toBranch: Option[String] = None,
              extraSummary: Map[String, String] = Map.empty): TableMeta = {
     val m0 = meta
-    requireWapUnambiguous(m0)
-    val branch = resolveWriteBranch(toBranch)
-    val stagedWap = wapId.isDefined &&
-      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-    val snap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val (branch, stagedWap, snap) = writeTarget(m0, toBranch)
     val all = snap.map(_.files).getOrElse(Seq.empty)
     val p = Pruning.translate(condition)
     val keep = scala.collection.mutable.ArrayBuffer[DataFile]()
@@ -1338,11 +1322,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def update(assignments: Map[String, Column], condition: Option[Column] = None,
              toBranch: Option[String] = None): TableMeta = {
     val m0 = meta
-    requireWapUnambiguous(m0)
-    val branch = resolveWriteBranch(toBranch)
-    val stagedWap = wapId.isDefined &&
-      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-    val snap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val (branch, stagedWap, snap) = writeTarget(m0, toBranch)
     val all = snap.map(_.files).getOrElse(Seq.empty)
     val (touched, untouched) = condition match {
       case Some(c) => partitionTouched(m0, all, Pruning.translate(c))
@@ -1436,53 +1416,22 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * IcebergStream.java:118 equalityFieldColumns): delete every table row
     * whose `key` is in `keys`, then append `upserts`. Only files whose key
     * bounds overlap `keys` are rewritten — at scale the rewrite set is the
-    * files the changelog touches, never the whole table. */
+    * files the changelog touches, never the whole table. The key list
+    * becomes a driver-local frame typed by the key column, so
+    * [[mergeByKeys]] reads it on the driver in either merge mode. */
   def mergeByKey(key: String, keys: Seq[Any], upserts: DataFrame,
                  extraSummary: Map[String, String] = Map.empty,
                  toBranch: Option[String] = None): TableMeta = {
-    // NULL keys can never equal a delete key: drop them from the key set
-    // (a null in an IN-list would make the predicate NULL for every
-    // non-matching row and wipe whole files) and keep null-keyed table rows
-    // via the coalesce below.
-    val ks = keys.filter(_ != null)
-    val m0 = meta
-    // merge-on-read upserts share the DataFrame-keyed path (one equality
-    // delete + appends); lift the key list into a typed 1-column frame
-    if (m0.properties.get("write.merge.mode").contains("merge-on-read")) {
-      val kt = m0.schema.byName(key).getOrElse(
-        throw new IllegalArgumentException(s"merge key column $key not in schema"))
-      val keyDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(ks.map(v => Row(v)), 1),
-        StructType(Seq(StructField(key, kt.sparkType))))
-      return mergeByKeys(key, keyDf, upserts, extraSummary, toBranch)
-    }
-    requireWapUnambiguous(m0)
-    val branch = resolveWriteBranch(toBranch)
-    val stagedWap = wapId.isDefined &&
-      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-    val snap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
-    val all = snap.map(_.files).getOrElse(Seq.empty)
-    val p = Pruning.In(key, ks)
-    val (touched, untouched) =
-      if (ks.isEmpty) (Seq.empty[DataFile], all)
-      else partitionTouched(m0, all, p)
-    val survivors: Seq[DataFile] = if (touched.isEmpty) Seq.empty else {
-      val remaining = dataFrameForLive(m0, snap, touched)
-        .filter(!coalesce(col(key).isin(ks: _*), lit(false)))
-      writeDataFiles(toPhysical(remaining, m0.schema), m0)
-    }
-    // upserts are new rows — identity assignment + advance, like append
-    val (upserts1, idPlan) = assignIdentity(m0, upserts)
-    val inserted =
-      if (upserts.isEmpty) Seq.empty
-      else writeDataFiles(
-          toPhysical(withCheckConstraints(m0, upserts1), m0.schema), m0, filePrefix = "app")
-    commitReplace(branch, untouched ++ survivors ++ inserted, "overwrite",
-      extraSummary ++ Map(
-        "merge-keys" -> ks.size.toString,
-        "rewritten-data-files" -> touched.size.toString), base = snap,
-      conflictPredicate = if (ks.isEmpty) None else Some(p), staged = stagedWap,
-      identityPlan = idPlan, identityProps = identityAdvance(idPlan, inserted))
+    val dt = meta.schema.byName(key).getOrElse(
+      throw new IllegalArgumentException(s"merge key column $key not in schema")).sparkType
+    // NULL keys can never equal a delete key (null-keyed table rows survive);
+    // the rest take the key column's type, like an IN list's literals
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val rows = keys.filter(_ != null).map(v => Row(toScala(Cast(Literal(v), dt, tz).eval())))
+    val keyDf = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField(key, dt))))
+    mergeByKeys(key, keyDf, upserts, extraSummary, toBranch)
   }
 
   /** Distributed equality-field upsert: like [[mergeByKey]] but the delete
@@ -1560,11 +1509,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       val nKeys = bounds.fold(probe.size.toLong)(_.getLong(0))
       if (batchKeys && nKeys == 0 && nullKeyDelete.isEmpty) return meta
       val m0 = meta
-      requireWapUnambiguous(m0)
-      val branch = resolveWriteBranch(toBranch)
-      val stagedWap = wapId.isDefined &&
-        m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-      val snap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+      val (branch, stagedWap, snap) = writeTarget(m0, toBranch)
       val all = snap.map(_.files).getOrElse(Seq.empty)
       // write.merge.mode=merge-on-read (the Flink/Iceberg CDC upsert
       // design, ref IcebergStream.java:118 equalityFieldColumns + upsert):
@@ -1716,34 +1661,22 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
           "active WAP session (spark.wap.id / spark.wap.branch is set and " +
           "write.wap.enabled=true): a replace resets all branches and " +
           "cannot be audit-staged. Publish or abandon the WAP session first.")
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val snap = Snapshot(snapId, m.currentSnapshot.map(_.snapshotId), now, "replace-table",
-        Map("operation" -> "replace-table",
-          "added-data-files" -> files.size.toString,
-          "total-records" -> files.map(_.rowCount).sum.toString), files)
-      m.copy(
+      val m2 = m.withSnapshot(MainBranch, m.currentSnapshot, "replace-table",
+        Map("added-data-files" -> files.size.toString), files)
+      m2.copy(
         schemas = m.schemas.filterNot(_.schemaId == pendingSchema.schemaId) :+ pendingSchema,
         currentSchemaId = pendingSchema.schemaId,
         partitionSpecs = m.partitionSpecs.filterNot(_.specId == pendingSpec.specId) :+ pendingSpec,
         defaultSpecId = pendingSpec.specId,
         properties = props,
-        snapshots = m.snapshots :+ snap,
-        lastSnapshotId = snapId,
         lastColumnId = math.max(m.lastColumnId,
           pendingSchema.columns.map(_.id).maxOption.getOrElse(0)),
-        refs = Map("main" -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, "main"))
+        refs = Map(MainBranch -> Ref(m2.lastSnapshotId)))
     }
 
   def truncate(toBranch: Option[String] = None): TableMeta = {
-    val m0 = meta
-    requireWapUnambiguous(m0)
-    val branch = resolveWriteBranch(toBranch)
-    val stagedWap = wapId.isDefined &&
-      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-    commitReplace(branch, Seq.empty, "truncate", Map.empty,
-      base = m0.snapshotFor(branch).orElse(m0.currentSnapshot), strict = true,
+    val (branch, stagedWap, base) = writeTarget(meta, toBranch)
+    commitReplace(branch, Seq.empty, "truncate", Map.empty, base = base, strict = true,
       staged = stagedWap)
   }
 
@@ -1762,8 +1695,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * silently skip its audit gate. */
   def overwrite(df: DataFrame, toBranch: Option[String] = None): TableMeta = {
     val m0 = meta
-    requireWapUnambiguous(m0)
-    val branch = resolveWriteBranch(toBranch)
+    val (branch, staged, base) = writeTarget(m0, toBranch)
     // identity continues across an overwrite (Delta semantics: TRUNCATE/
     // OVERWRITE never restarts the sequence — restarting would reissue
     // ids that time travel still exposes)
@@ -1771,25 +1703,14 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val newFiles = writeDataFiles(
       toPhysical(withCheckConstraints(m0, df1), m0.schema), m0, filePrefix = "app")
     val idProps = identityAdvance(idPlan, newFiles)
-    val staged = wapId.isDefined &&
-      m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
     val summary = Map(
       "added-data-files" -> newFiles.size.toString,
       "added-records" -> newFiles.map(_.rowCount).sum.toString)
     if (staged) commit { m =>
       requireIdentityUnmoved(m, idPlan)
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
-      val snapId = m.lastSnapshotId + 1
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), System.currentTimeMillis(),
-        "overwrite", summary ++ Map(
-          "operation" -> "overwrite",
-          "total-records" -> newFiles.map(_.rowCount).sum.toString) ++
-          wapId.map("wap.id" -> _),
-        newFiles, staged = true)
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        properties = m.properties ++ idProps)
-    } else commitReplace(branch, newFiles, "overwrite", summary,
-      base = m0.snapshotFor(branch).orElse(m0.currentSnapshot), strict = true,
+      m.withSnapshot(branch, m.snapshotFor(branch).orElse(m.currentSnapshot), "overwrite",
+        summary ++ wapId.map("wap.id" -> _), newFiles, staged = true, properties = idProps)
+    } else commitReplace(branch, newFiles, "overwrite", summary, base = base, strict = true,
       identityPlan = idPlan, identityProps = idProps)
   }
 
@@ -1850,7 +1771,6 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val summaryWithBloom =
       extraSummary ++ bloomBundle.map(BloomSkip.BundleSummaryKey -> _)
     commit { m =>
-      require(m.refs.get(branch).forall(_.kind != "tag"), s"cannot write to tag $branch")
       requireIdentityUnmoved(m, identityPlan)
       val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
       val reconciled =
@@ -1890,8 +1810,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
           }
           files ++ added
         }
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
+      val snapId = m.nextSnapshotId
       // carry the parent's merge-on-read delete entries pruned to files
       // still present (a rewrite/drop of a data file retires its entries —
       // the rewritten file was produced from the delete-masked read), then
@@ -1910,31 +1829,16 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // (strictly older) remains; full compaction re-stamps everything
       // and retires the whole set
       val carriedEq = parent.map(_.eqDeleteFiles).getOrElse(Seq.empty)
-        .filter(d => stamped.exists(_.addedSnapshotId < d.addedAt)) ++
+        .filter(d => stamped.exists(d.masks)) ++
         extraEqDeleteFiles.map(_.copy(addedAt = snapId))
-      val summary = summaryWithBloom ++ Map(
-        "operation" -> op,
-        // total-records is EXACT under positional masks (counts are pruned
-        // to live files); an equality mask makes it an upper bound, flagged
-        "total-records" -> (stamped.map(_.rowCount).sum -
-          carriedDels.map(_.rowCount).sum).toString) ++
-        (if (carriedEq.nonEmpty) Map("has-equality-deletes" -> "true") else Map.empty) ++
-        (if (staged) wapId.map("wap.id" -> _) else None)
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, op, summary, stamped,
-        staged = staged, deleteFiles = carriedDels, eqDeleteFiles = carriedEq)
       // a STAGED replacement (row-level op under a wap.id session) records
       // the snapshot but leaves the ref unmoved — invisible to plain reads,
       // auditable via VERSION AS OF '<wap.id>', published by cherrypick
       // (which, for replacement ops, refuses if the branch moved meanwhile)
-      if (staged)
-        m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-          properties = m.properties ++ identityProps)
-      else m.copy(
-        snapshots = m.snapshots :+ snap,
-        lastSnapshotId = snapId,
-        refs = m.refs + (branch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, branch),
-        properties = m.properties ++ identityProps)
+      m.withSnapshot(branch, parent, op,
+        summaryWithBloom ++ (if (staged) wapId.map("wap.id" -> _) else None), stamped,
+        deleteFiles = carriedDels, eqDeleteFiles = carriedEq, staged = staged,
+        properties = identityProps)
     }
   }
 
@@ -2160,17 +2064,13 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       }
       require(found, s"$name (${cur.snapshotId}) is not an ancestor of $to ($target) — not a fast-forward")
     }
-    m.copy(
-      refs = m.refs + (name -> Ref(target)),
-      history = m.history :+ HistoryEntry(System.currentTimeMillis(), target, name))
+    m.moveRef(name, target)
   }
 
   /** CALL rollback_to_snapshot (D17, Getting Started.ipynb c36). */
   def rollbackTo(snapshotId: Long): TableMeta = commit { m =>
     require(m.snapshot(snapshotId).isDefined, s"no snapshot $snapshotId")
-    m.copy(
-      refs = m.refs + (MainBranch -> Ref(snapshotId)),
-      history = m.history :+ HistoryEntry(System.currentTimeMillis(), snapshotId, MainBranch))
+    m.moveRef(MainBranch, snapshotId)
   }
 
   /** CALL cherrypick_snapshot (D18): publish a staged WAP snapshot onto main
@@ -2242,27 +2142,17 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         s"staged ${staged.operation} $snapshotId planned against snapshot " +
           s"${staged.parentId.getOrElse(-1L)} but main moved to " +
           s"${mainSnap.map(_.snapshotId).getOrElse(-1L)} — re-run the operation")
-    val snapId = m.lastSnapshotId + 1
-    val now = System.currentTimeMillis()
-    val files =
-      if (isReplace) staged.files
-      else mainSnap.map(_.files).getOrElse(Seq.empty) ++ added
-    // a staged replacement publishes with the delete set it planned (main
-    // is verified unmoved above); a grafted append keeps main's delete set
-    // (its entries' files are all still present in the superset list)
-    val dels =
-      if (isReplace) staged.deleteFiles
-      else mainSnap.map(_.deleteFiles).getOrElse(Seq.empty)
-    val eqDels =
-      if (isReplace) staged.eqDeleteFiles
-      else mainSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
-    val snap = Snapshot(snapId, mainSnap.map(_.snapshotId), now, staged.operation,
+    // a staged replacement publishes with the file and delete sets it
+    // planned (main is verified unmoved above); a grafted append keeps
+    // main's delete set (its entries' files are all still present in the
+    // superset list)
+    val from = if (isReplace) Some(staged) else mainSnap
+    m.withSnapshot(MainBranch, mainSnap, staged.operation,
       staged.summary ++ Map("published-wap-id" -> staged.summary.getOrElse("wap.id", ""),
         "source-snapshot-id" -> snapshotId.toString),
-      files, deleteFiles = dels, eqDeleteFiles = eqDels)
-    m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-      refs = m.refs + (MainBranch -> Ref(snapId)),
-      history = m.history :+ HistoryEntry(now, snapId, MainBranch))
+      if (isReplace) staged.files else mainSnap.map(_.files).getOrElse(Seq.empty) ++ added,
+      deleteFiles = from.map(_.deleteFiles).getOrElse(Seq.empty),
+      eqDeleteFiles = from.map(_.eqDeleteFiles).getOrElse(Seq.empty))
     }
   }
 
@@ -2668,12 +2558,27 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
     if (files.isEmpty) return m0
-    val totalBytes = files.map(_.sizeBytes).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetSizeBytes).toInt)
     // live read: compaction APPLIES merge-on-read position deletes — the
     // rewritten files carry only surviving rows, and commitReplace's
     // liveness pruning then retires every delete entry of the old files
-    val base = dataFrameForLive(m0, baseSnap, files)
+    val rewritten = writeClustered(m0, baseSnap, files, targetSizeBytes, sortBy, zorderBy)
+    commitReplace(branch, rewritten, "replace", Map(
+      "rewritten-data-files" -> files.size.toString,
+      "added-data-files" -> rewritten.size.toString) ++
+      (if (sortBy.nonEmpty) Map("sort-order" -> sortBy.mkString(",")) else Map.empty) ++
+      (if (zorderBy.nonEmpty) Map("zorder" -> zorderBy.mkString(",")) else Map.empty),
+      base = baseSnap)
+  }
+
+  /** Rewrite the live rows of `files` into ~`targetSizeBytes` outputs
+    * (the shared layout of full and predicate-scoped compaction):
+    * range-partitioned and sorted by the Morton key of `zorderBy` or by
+    * `sortBy`, else evenly repartitioned. */
+  private def writeClustered(m0: TableMeta, snap: Option[Snapshot], files: Seq[DataFile],
+                             targetSizeBytes: Long, sortBy: Seq[String],
+                             zorderBy: Seq[String]): Seq[DataFile] = {
+    val n = math.max(1, math.ceil(files.map(_.sizeBytes).sum.toDouble / targetSizeBytes).toInt)
+    val base = dataFrameForLive(m0, snap, files)
     val df =
       if (zorderBy.nonEmpty) {
         zorderBy.foreach(c => require(m0.schema.byName(c).isDefined, s"no column $c"))
@@ -2689,15 +2594,43 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       } else base.repartition(n)
     // sort-clustered rewrites must keep the row order INSIDE each written
     // file (see writeDataFiles scaladoc) — pass the sort columns through
-    val sortPhysical = sortBy.flatMap(c => m0.schema.byName(c).map(_.physicalName))
-    val rewritten = writeDataFiles(toPhysical(df, m0.schema), m0,
-      sortWithinPhysical = sortPhysical)
-    commitReplace(branch, rewritten, "replace", Map(
-      "rewritten-data-files" -> files.size.toString,
-      "added-data-files" -> rewritten.size.toString) ++
-      (if (sortBy.nonEmpty) Map("sort-order" -> sortBy.mkString(",")) else Map.empty) ++
-      (if (zorderBy.nonEmpty) Map("zorder" -> zorderBy.mkString(",")) else Map.empty),
-      base = baseSnap)
+    writeDataFiles(toPhysical(df, m0.schema), m0,
+      sortWithinPhysical = sortBy.flatMap(c => m0.schema.byName(c).map(_.physicalName)))
+  }
+
+  /** Whether a file carries a merge-on-read mask under `snap`: positional
+    * entries reference it, or a live equality delete masks it. */
+  private def carriesMask(snap: Option[Snapshot]): DataFile => Boolean = {
+    val posRef = snap.map(_.deleteFiles.flatMap(_.counts.keys).toSet).getOrElse(Set.empty[String])
+    val eqDels = snap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
+    f => posRef.contains(fileName(f.path)) || eqDels.exists(_.masks(f))
+  }
+
+  /** Commit a compaction that replaced the mask-free files `selected` of
+    * `branch`'s head by `rewritten`: a subset swap. Untouched files keep
+    * their entries (and `addedSnapshotId`, so equality-delete ordering is
+    * unaffected) and concurrent appends are kept; a concurrent commit that
+    * removed or masked a selected input aborts with
+    * [[CommitConflictException]] (`label` names the operation). */
+  private def commitSubsetSwap(label: String, branch: String, selected: Seq[DataFile],
+                               rewritten: Seq[DataFile],
+                               summary: Map[String, String]): TableMeta = {
+    val selectedPaths = selected.map(_.path).toSet
+    commit { m =>
+      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot).getOrElse(
+        throw CommitConflictException(s"$label: table emptied concurrently — re-plan"))
+      if (!selectedPaths.subsetOf(parent.files.map(_.path).toSet))
+        throw CommitConflictException(
+          s"$label: a concurrent commit removed an input file — re-plan and retry")
+      if (selected.exists(carriesMask(Some(parent))))
+        throw CommitConflictException(
+          s"$label: a concurrent merge-on-read delete masked an input file — " +
+            "re-plan and retry")
+      m.withSnapshot(branch, Some(parent), "replace", summary,
+        parent.files.filterNot(f => selectedPaths.contains(f.path)) ++
+          rewritten.map(_.copy(addedSnapshotId = m.nextSnapshotId)),
+        deleteFiles = parent.deleteFiles, eqDeleteFiles = parent.eqDeleteFiles)
+    }
   }
 
   /** Predicate-scoped rewrite (Iceberg's `rewrite_data_files(where)`,
@@ -2714,8 +2647,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * subset swap must not apply masks (retiring a delete entry that also
     * covers kept files would corrupt the remaining mask accounting) —
     * run `rewrite_position_deletes` first to fold masks, then scope-
-    * rewrite. Commit is binpack's fenced subset swap: concurrent removal
-    * or masking of an input file aborts with a re-plan error. */
+    * rewrite. Commits like binpack ([[commitSubsetSwap]]). */
   private def rewriteWhere(targetSizeBytes: Long, sortBy: Seq[String],
                            zorderBy: Seq[String], where: Column): TableMeta = {
     val m0 = meta
@@ -2723,68 +2655,16 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
     if (files.isEmpty) return m0
-    val posRef = baseSnap.map(_.deleteFiles.flatMap(_.counts.keys).toSet)
-      .getOrElse(Set.empty)
-    val eqDels = baseSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
-    def clean(f: DataFile): Boolean =
-      !posRef.contains(fileName(f.path)) &&
-        !eqDels.exists(_.addedAt > f.addedSnapshotId)
-    val p = Pruning.translate(where)
-    val selected = pruneFiles(m0, files, p).filter(clean)
+    val masked = carriesMask(baseSnap)
+    val selected = pruneFiles(m0, files, Pruning.translate(where)).filterNot(masked)
     if (selected.isEmpty) return m0
-    val totalBytes = selected.map(_.sizeBytes).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetSizeBytes).toInt)
-    val base = dataFrameForLive(m0, baseSnap, selected)
-    val df =
-      if (zorderBy.nonEmpty) {
-        zorderBy.foreach(c => require(m0.schema.byName(c).isDefined, s"no column $c"))
-        val zk = graft.functions.ZOrder.zorderKey(base, zorderBy)
-        base.withColumn("_zk", zk)
-          .repartitionByRange(n, col("_zk"))
-          .sortWithinPartitions(col("_zk"))
-          .drop("_zk")
-      } else if (sortBy.nonEmpty) {
-        sortBy.foreach(c => require(m0.schema.byName(c).isDefined, s"no column $c"))
-        val cols = sortBy.map(col)
-        base.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
-      } else base.repartition(n)
-    val sortPhysical = sortBy.flatMap(c => m0.schema.byName(c).map(_.physicalName))
-    val rewritten = writeDataFiles(toPhysical(df, m0.schema), m0,
-      sortWithinPhysical = sortPhysical)
-    val selectedPaths = selected.map(_.path).toSet
-    commit { m =>
-      require(m.refs.get(branch).forall(_.kind != "tag"), s"cannot write to tag $branch")
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot).getOrElse(
-        throw CommitConflictException("rewrite(where): table emptied concurrently — re-plan"))
-      if (!selectedPaths.subsetOf(parent.files.map(_.path).toSet))
-        throw CommitConflictException(
-          "rewrite(where): a concurrent commit removed an input file — re-plan and retry")
-      val refNow = parent.deleteFiles.flatMap(_.counts.keys).toSet
-      if (selected.exists(f => refNow.contains(fileName(f.path))) ||
-          parent.eqDeleteFiles.exists(ed => selected.exists(_.addedSnapshotId < ed.addedAt)))
-        throw CommitConflictException(
-          "rewrite(where): a concurrent merge-on-read delete masked an input " +
-            "file — re-plan and retry")
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val kept = parent.files.filterNot(f => selectedPaths.contains(f.path))
-      val stamped = rewritten.map(_.copy(addedSnapshotId = snapId))
-      val snap = Snapshot(snapId, Some(parent.snapshotId), now, "replace",
-        Map("operation" -> "replace",
-          "where-rewritten-files" -> selected.size.toString,
-          "where-rewritten-bytes" -> totalBytes.toString,
-          "added-data-files" -> rewritten.size.toString,
-          "total-records" -> ((kept ++ stamped).map(_.rowCount).sum -
-            parent.deleteFiles.map(_.rowCount).sum).toString) ++
-          (if (sortBy.nonEmpty) Map("sort-order" -> sortBy.mkString(",")) else Map.empty) ++
-          (if (zorderBy.nonEmpty) Map("zorder" -> zorderBy.mkString(",")) else Map.empty),
-        kept ++ stamped,
-        deleteFiles = parent.deleteFiles,
-        eqDeleteFiles = parent.eqDeleteFiles)
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (branch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, branch))
-    }
+    val rewritten = writeClustered(m0, baseSnap, selected, targetSizeBytes, sortBy, zorderBy)
+    commitSubsetSwap("rewrite(where)", branch, selected, rewritten, Map(
+      "where-rewritten-files" -> selected.size.toString,
+      "where-rewritten-bytes" -> selected.map(_.sizeBytes).sum.toString,
+      "added-data-files" -> rewritten.size.toString) ++
+      (if (sortBy.nonEmpty) Map("sort-order" -> sortBy.mkString(",")) else Map.empty) ++
+      (if (zorderBy.nonEmpty) Map("zorder" -> zorderBy.mkString(",")) else Map.empty))
   }
 
   /** Selective bin-pack compaction (Iceberg's `rewrite_data_files`
@@ -2804,12 +2684,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * excluding them keeps this commit a pure file-set swap whose logical
     * content provably doesn't change (the changelog emits nothing).
     *
-    * Commit: a subset swap — untouched files keep their metadata entries
-    * (and `addedSnapshotId`, so equality-delete ordering is unaffected).
-    * Concurrent appends reconcile automatically (their files are simply
-    * kept); a concurrent commit that removed or masked a selected input
-    * aborts with [[CommitConflictException]] — wrap in
-    * [[LakeTable.withConflictRetry]] to re-plan. */
+    * Commit: a subset swap ([[commitSubsetSwap]]) — wrap in
+    * [[LakeTable.withConflictRetry]] to re-plan on its conflict. */
   def binPack(targetSizeBytes: Long = 512L * 1024 * 1024,
               minInputSizeBytes: Long = -1L,
               minInputFiles: Int = 2,
@@ -2820,12 +2696,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val m0 = meta
     val branch = resolveWriteBranch(None)
     val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
-    val posRef = baseSnap.map(_.deleteFiles.flatMap(_.counts.keys).toSet)
-      .getOrElse(Set.empty)
-    val eqDels = baseSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
-    def clean(f: DataFile): Boolean =
-      !posRef.contains(fileName(f.path)) &&
-        !eqDels.exists(_.addedAt > f.addedSnapshotId)
+    val masked = carriesMask(baseSnap)
     // partitionFilter is keyed by the LOGICAL partition source column
     // (user-facing); file partitionValues are keyed by the spec field's
     // physical name — translate, rejecting columns that aren't partitioned
@@ -2836,7 +2707,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       pf.physicalName -> v
     }
     val groups = baseSnap.map(_.files).getOrElse(Seq.empty)
-      .filter(f => f.sizeBytes < minInput && clean(f) &&
+      .filter(f => f.sizeBytes < minInput && !masked(f) &&
         physFilter.forall { case (k, v) => f.partitionValues.get(k).contains(v) })
       .groupBy(_.partitionValues).filter(_._2.size >= minInputFiles)
     val selected = groups.values.flatten.toSeq
@@ -2862,37 +2733,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val sortPhysical = sortBy.flatMap(c => m0.schema.byName(c).map(_.physicalName))
     val rewritten = writeDataFiles(toPhysical(df, m0.schema), m0, filePrefix = "bp",
       sortWithinPhysical = sortPhysical)
-    val selectedPaths = selected.map(_.path).toSet
-    commit { m =>
-      require(m.refs.get(branch).forall(_.kind != "tag"), s"cannot write to tag $branch")
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot).getOrElse(
-        throw CommitConflictException("binpack: table emptied concurrently — re-plan"))
-      if (!selectedPaths.subsetOf(parent.files.map(_.path).toSet))
-        throw CommitConflictException(
-          "binpack: a concurrent commit removed an input file — re-plan and retry")
-      val refNow = parent.deleteFiles.flatMap(_.counts.keys).toSet
-      if (selected.exists(f => refNow.contains(fileName(f.path))) ||
-          parent.eqDeleteFiles.exists(ed => selected.exists(_.addedSnapshotId < ed.addedAt)))
-        throw CommitConflictException(
-          "binpack: a concurrent merge-on-read delete masked an input file — " +
-            "re-plan and retry")
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val kept = parent.files.filterNot(f => selectedPaths.contains(f.path))
-      val stamped = rewritten.map(_.copy(addedSnapshotId = snapId))
-      val snap = Snapshot(snapId, Some(parent.snapshotId), now, "replace",
-        Map("operation" -> "replace",
-          "binpack-rewritten-files" -> selected.size.toString,
-          "binpack-rewritten-bytes" -> selected.map(_.sizeBytes).sum.toString,
-          "added-data-files" -> rewritten.size.toString,
-          "total-records" -> ((kept ++ stamped).map(_.rowCount).sum -
-            parent.deleteFiles.map(_.rowCount).sum).toString),
-        kept ++ stamped,
-        deleteFiles = parent.deleteFiles, eqDeleteFiles = parent.eqDeleteFiles)
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (branch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, branch))
-    }
+    commitSubsetSwap("binpack", branch, selected, rewritten, Map(
+      "binpack-rewritten-files" -> selected.size.toString,
+      "binpack-rewritten-bytes" -> selected.map(_.sizeBytes).sum.toString,
+      "added-data-files" -> rewritten.size.toString))
   }
 
   /** Opportunistic maintenance for continuously-ingested tables: run
@@ -3093,13 +2937,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val dels = baseSnap.map(_.deleteFiles).getOrElse(Seq.empty)
     val eqDels = baseSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
     if (dels.isEmpty && eqDels.isEmpty) return m0
-    val refNames = dels.flatMap(_.counts.keys).toSet
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
-    // a file needs rewriting if positional entries reference it OR any
-    // equality delete is strictly newer than it (could mask its rows)
-    val (affected, clean) = files.partition(f =>
-      refNames.contains(fileName(f.path)) ||
-        eqDels.exists(_.addedAt > f.addedSnapshotId))
+    val (affected, clean) = files.partition(carriesMask(baseSnap))
     val rewritten: Seq[DataFile] =
       if (affected.isEmpty) Seq.empty
       else writeDataFiles(
@@ -3139,7 +2978,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val eqDels = baseSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
     if (eqDels.isEmpty) return m0
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
-    val candidates = files.filter(f => eqDels.exists(_.addedAt > f.addedSnapshotId))
+    val candidates = files.filter(f => eqDels.exists(_.masks(f)))
     val newDel =
       if (candidates.isEmpty) Seq.empty
       else writeDeleteFiles(equalityKilled(m0, baseSnap, candidates, eqDels))
@@ -3148,19 +2987,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       if (parent.map(_.snapshotId) != baseSnap.map(_.snapshotId))
         throw CommitConflictException(
           "convert_equality_deletes planned against a snapshot that moved — retry")
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val dels = parent.map(_.deleteFiles).getOrElse(Seq.empty) ++ newDel
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "replace",
-        Map("operation" -> "replace",
-          "converted-equality-delete-files" -> eqDels.size.toString,
-          "added-position-deletes" -> newDel.map(_.rowCount).sum.toString,
-          "total-records" -> (files.map(_.rowCount).sum -
-            dels.map(_.rowCount).sum).toString),
-        files, deleteFiles = dels, eqDeleteFiles = Seq.empty)
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (branch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, branch))
+      m.withSnapshot(branch, parent, "replace", Map(
+        "converted-equality-delete-files" -> eqDels.size.toString,
+        "added-position-deletes" -> newDel.map(_.rowCount).sum.toString),
+        files, deleteFiles = parent.map(_.deleteFiles).getOrElse(Seq.empty) ++ newDel)
     }
   }
 
@@ -3217,19 +3047,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       if (parent.map(_.snapshotId) != baseSnap.map(_.snapshotId))
         throw CommitConflictException(
           "rewrite_delete_files planned against a snapshot that moved — retry")
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "replace",
-        Map("operation" -> "replace",
-          "compacted-delete-files" -> dels.size.toString,
-          "total-records" -> (parent.map(_.files.map(_.rowCount).sum).getOrElse(0L) -
-            merged.map(_.rowCount).sum).toString),
-        parent.map(_.files).getOrElse(Seq.empty),
-        deleteFiles = merged,
+      m.withSnapshot(branch, parent, "replace",
+        Map("compacted-delete-files" -> dels.size.toString),
+        parent.map(_.files).getOrElse(Seq.empty), deleteFiles = merged,
         eqDeleteFiles = parent.map(_.eqDeleteFiles).getOrElse(Seq.empty))
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (branch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, branch))
     }
   }
 
@@ -3276,20 +3097,11 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       m.snapshotFor(branch).orElse(m.currentSnapshot) match {
         case None => m
         case Some(snap) =>
-          val snapId = m.lastSnapshotId + 1
-          val now = System.currentTimeMillis()
-          val next = Snapshot(snapId, Some(snap.snapshotId), now, "rewrite-blooms",
-            Map("operation" -> "rewrite-blooms",
-              "bloom-files-covered" -> uncovered.size.toString,
-              BloomSkip.BundleSummaryKey -> name,
-              "total-records" -> (snap.files.map(_.rowCount).sum -
-                snap.deleteFiles.map(_.rowCount).sum).toString),
-            snap.files, manifests = snap.manifests,
-            deleteFiles = snap.deleteFiles, eqDeleteFiles = snap.eqDeleteFiles,
-            deleteManifest = snap.deleteManifest)
-          m.copy(snapshots = m.snapshots :+ next, lastSnapshotId = snapId,
-            refs = m.refs + (branch -> Ref(snapId)),
-            history = m.history :+ HistoryEntry(now, snapId, branch))
+          m.withSnapshot(branch, Some(snap), "rewrite-blooms", Map(
+            "bloom-files-covered" -> uncovered.size.toString,
+            BloomSkip.BundleSummaryKey -> name),
+            snap.files, deleteFiles = snap.deleteFiles, eqDeleteFiles = snap.eqDeleteFiles,
+            manifests = snap.manifests)
       }
     }
   }
@@ -3304,20 +3116,11 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         if (names == snap.manifests) m // already compact — no-op commit
         else {
           Manifests.writeChunks(metaStore, fresh)
-          val snapId = m.lastSnapshotId + 1
-          val now = System.currentTimeMillis()
-          val next = Snapshot(snapId, Some(snap.snapshotId), now, "rewrite-manifests",
-            Map("operation" -> "rewrite-manifests",
-              "manifests-replaced" -> snap.manifests.size.toString,
-              "manifests-created" -> names.size.toString,
-              "total-records" -> (snap.files.map(_.rowCount).sum -
-                snap.deleteFiles.map(_.rowCount).sum).toString),
-            snap.files, manifests = names,
-            deleteFiles = snap.deleteFiles, eqDeleteFiles = snap.eqDeleteFiles,
-            deleteManifest = snap.deleteManifest)
-          m.copy(snapshots = m.snapshots :+ next, lastSnapshotId = snapId,
-            refs = m.refs + (branch -> Ref(snapId)),
-            history = m.history :+ HistoryEntry(now, snapId, branch))
+          m.withSnapshot(branch, Some(snap), "rewrite-manifests", Map(
+            "manifests-replaced" -> snap.manifests.size.toString,
+            "manifests-created" -> names.size.toString),
+            snap.files, deleteFiles = snap.deleteFiles, eqDeleteFiles = snap.eqDeleteFiles,
+            manifests = names)
         }
     }
   }
@@ -3663,7 +3466,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         if (newEq.isEmpty) None
         else {
           val candidates = s.files.filter(f => parentPaths.contains(f.path) &&
-            newEq.exists(_.addedAt > f.addedSnapshotId))
+            newEq.exists(_.masks(f)))
           if (candidates.isEmpty) None
           else {
             val live = dataFrameForLive(m, parentSnap, candidates)
@@ -3904,9 +3707,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       }
     // mask classes exactly as the engine's scan cuts them: an equality
     // delete applies only to files committed STRICTLY before it
-    val classSelects = files.groupBy(f => eqDels.count(_.addedAt > f.addedSnapshotId))
+    val classSelects = files.groupBy(f => eqDels.count(_.masks(f)))
       .toSeq.sortBy(_._1).map { case (_, bucket) =>
-        val applicable = eqDels.filter(_.addedAt > bucket.head.addedSnapshotId)
+        val applicable = eqDels.filter(_.masks(bucket.head))
         val scanSql = groupSelects(bucket).mkString("\nUNION ALL\n")
         val preds = posPred.toSeq ++ eqPreds(applicable)
         // with meta columns in play, EVERY class branch must project back

@@ -331,11 +331,8 @@ object LakeTransaction {
           require(m.snapshot(branchHead).isDefined,
             s"transaction $txnId: branch head $branchHead vanished " +
               "before publish")
-          m.copy(
-            refs = m.refs - branch + (LakeTable.MainBranch -> Ref(branchHead)),
-            properties = m.properties - FenceKey,
-            history = m.history :+ HistoryEntry(
-              System.currentTimeMillis(), branchHead, LakeTable.MainBranch))
+          val moved = m.moveRef(LakeTable.MainBranch, branchHead)
+          moved.copy(refs = moved.refs - branch, properties = m.properties - FenceKey)
         case _ => m // already completed (recovery or coordinator won)
       }
     })

@@ -195,7 +195,12 @@ final case class EqualityDeleteFile(
     /** String-encoded bounds of the FIRST key column (ColStat encoding)
       * for pruning which files need the mask join at all. */
     keyMin: Option[String] = None,
-    keyMax: Option[String] = None)
+    keyMax: Option[String] = None) {
+  /** The one equality-mask rule: this delete masks `f`'s rows iff `f`
+    * was committed strictly before it, so an upsert's own inserted rows
+    * survive its own delete. */
+  def masks(f: DataFile): Boolean = addedAt > f.addedSnapshotId
+}
 
 final case class Snapshot(
     snapshotId: Long,
@@ -248,7 +253,12 @@ final case class Snapshot(
     /** Content-addressed chunk (`metadata/manifest-del-<hash>.json`)
       * holding `deleteFiles` + `eqDeleteFiles`; None when both are empty.
       * Filled by [[Manifests.assign]] at commit time. */
-    deleteManifest: Option[String] = None)
+    deleteManifest: Option[String] = None) {
+  /** Data rows minus positional-delete rows: exact, because commits prune
+    * delete counts to live files; an upper bound while equality deletes
+    * are live (their masked-row count is unknowable without a scan). */
+  def liveRecords: Long = files.map(_.rowCount).sum - deleteFiles.map(_.rowCount).sum
+}
 
 /** Named ref: `branch` (movable, writable) or `tag` (immutable marker). */
 final case class Ref(snapshotId: Long, kind: String = "branch")
@@ -279,6 +289,61 @@ final case class TableMeta(
     refs.get(LakeTable.MainBranch).flatMap(r => snapshot(r.snapshotId))
   def snapshotFor(branch: String): Option[Snapshot] =
     refs.get(branch).flatMap(r => snapshot(r.snapshotId))
+
+  /** Id of the next minted snapshot: commits stamp the files and equality
+    * deletes they add with it before calling [[withSnapshot]]. */
+  def nextSnapshotId: Long = lastSnapshotId + 1
+
+  private def requireBranch(name: String): Unit =
+    require(refs.get(name).forall(_.kind != "tag"), s"cannot write to tag $name")
+
+  /** Point branch `name` at `snapshotId` and record the move in the
+    * history. Tags are immutable: moving one is refused. */
+  def moveRef(name: String, snapshotId: Long,
+              nowMs: Long = System.currentTimeMillis()): TableMeta = {
+    requireBranch(name)
+    copy(refs = refs + (name -> Ref(snapshotId)),
+      history = history :+ HistoryEntry(nowMs, snapshotId, name))
+  }
+
+  /** Mint one snapshot on `branch`: the single step every lake commit
+    * takes to extend the snapshot history. Pure: no Spark and no I/O.
+    *
+    * The new snapshot takes [[nextSnapshotId]] and the current time, with
+    * `parent`'s id as its parent. Its summary is `summary` plus the keys
+    * every snapshot carries:
+    *   - `operation`: `operation`;
+    *   - `total-records`: the new snapshot's [[Snapshot.liveRecords]];
+    *   - `has-equality-deletes` = `true` iff `eqDeleteFiles` is non-empty
+    *     (absent otherwise, even when `summary` copied it from a staged
+    *     snapshot).
+    * These keys override same-named keys in `summary`.
+    *
+    * A published snapshot advances `branch` and appends a history entry
+    * ([[moveRef]]); a `staged` (WAP) snapshot leaves refs and history
+    * alone until cherry-picked. Either way a tag is refused. `manifests`
+    * pre-sets the chunk list (otherwise [[Manifests.assign]] chunks the
+    * files at commit time), `properties` are merged into the table's. */
+  def withSnapshot(branch: String, parent: Option[Snapshot], operation: String,
+                   summary: Map[String, String], files: Seq[DataFile],
+                   deleteFiles: Seq[DeleteFile] = Seq.empty,
+                   eqDeleteFiles: Seq[EqualityDeleteFile] = Seq.empty,
+                   staged: Boolean = false,
+                   manifests: Seq[String] = Seq.empty,
+                   properties: Map[String, String] = Map.empty): TableMeta = {
+    requireBranch(branch)
+    val snapId = nextSnapshotId
+    val now = System.currentTimeMillis()
+    val snap0 = Snapshot(snapId, parent.map(_.snapshotId), now, operation, Map.empty,
+      files, staged = staged, manifests = manifests,
+      deleteFiles = deleteFiles, eqDeleteFiles = eqDeleteFiles)
+    val snap = snap0.copy(summary = summary - "has-equality-deletes" ++
+      Map("operation" -> operation, "total-records" -> snap0.liveRecords.toString) ++
+      (if (eqDeleteFiles.nonEmpty) Map("has-equality-deletes" -> "true") else Map.empty))
+    val next = copy(snapshots = snapshots :+ snap, lastSnapshotId = snapId,
+      properties = this.properties ++ properties)
+    if (staged) next else next.moveRef(branch, snapId, now)
+  }
 }
 
 /** Serialization model of one manifest chunk: an immutable, content-addressed

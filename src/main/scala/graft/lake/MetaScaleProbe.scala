@@ -40,22 +40,16 @@ object MetaScaleProbe {
         "c1" -> ColStat(Some((i * 1000).toString), Some((i * 1000 + 999).toString), 0L),
         "c2" -> ColStat(Some("0.0"), Some("99.9"), 12L)))
 
-  /** Metadata-only append of `n` synthetic files (the commit protocol and
-    * manifest assignment are EXACTLY the production path — only the
-    * parquet write is skipped). */
+  /** Metadata-only append of `n` synthetic files (snapshot minting, the
+    * commit protocol and manifest assignment are EXACTLY the production
+    * path — only the parquet write is skipped). */
   private def appendSynthetic(t: LakeTable, n: Int, idBase: Long): TableMeta =
     t.commit { m =>
       val parent = m.currentSnapshot
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
       val newFiles = (0 until n).map(k => synthFile(t.location, idBase + k))
-      val base = parent.map(_.files).getOrElse(Seq.empty)
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "append",
-        Map("operation" -> "append", "added-data-files" -> n.toString),
-        base ++ newFiles)
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (LakeTable.MainBranch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, LakeTable.MainBranch))
+      m.withSnapshot(LakeTable.MainBranch, parent, "append",
+        Map("added-data-files" -> n.toString),
+        parent.map(_.files).getOrElse(Seq.empty) ++ newFiles)
     }
 
   /** Direct java.nio listing — Hadoop's RawLocalFileSystem forks a process

@@ -37,14 +37,8 @@ object RetentionProbe {
   private def appendSynthetic(t: LakeTable, idBase: Long): Unit = {
     t.commit { m =>
       val parent = m.currentSnapshot
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "append",
-        Map("operation" -> "append", "added-data-files" -> "1"),
+      m.withSnapshot(LakeTable.MainBranch, parent, "append", Map("added-data-files" -> "1"),
         parent.map(_.files).getOrElse(Seq.empty) :+ synthFile(t.location, idBase))
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (LakeTable.MainBranch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, LakeTable.MainBranch))
     }
     ()
   }

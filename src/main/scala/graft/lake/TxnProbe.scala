@@ -42,16 +42,10 @@ object TxnProbe {
   private def appendSynthetic(t: LakeTable, n: Int, idBase: Long): Unit = {
     t.commit { m =>
       val parent = m.currentSnapshot
-      val snapId = m.lastSnapshotId + 1
-      val now = System.currentTimeMillis()
-      val newFiles = (0 until n).map(k => synthFile(t.location, idBase + k))
-      val base = parent.map(_.files).getOrElse(Seq.empty)
-      val snap = Snapshot(snapId, parent.map(_.snapshotId), now, "append",
-        Map("operation" -> "append", "added-data-files" -> n.toString),
-        base ++ newFiles)
-      m.copy(snapshots = m.snapshots :+ snap, lastSnapshotId = snapId,
-        refs = m.refs + (LakeTable.MainBranch -> Ref(snapId)),
-        history = m.history :+ HistoryEntry(now, snapId, LakeTable.MainBranch))
+      m.withSnapshot(LakeTable.MainBranch, parent, "append",
+        Map("added-data-files" -> n.toString),
+        parent.map(_.files).getOrElse(Seq.empty) ++
+          (0 until n).map(k => synthFile(t.location, idBase + k)))
     }
     ()
   }

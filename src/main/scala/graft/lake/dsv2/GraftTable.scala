@@ -144,8 +144,7 @@ case class GraftTable(
         case Some(s) if s.eqDeleteFiles.nonEmpty => None
         // merge-on-read position deletes subtract EXACTLY: commit-time
         // pruning keeps delete counts scoped to live files only
-        case Some(s) =>
-          Some(s.files.map(_.rowCount).sum - s.deleteFiles.map(_.rowCount).sum)
+        case Some(s) => Some(s.liveRecords)
         case None => Some(0L)
       }
   }

@@ -31,6 +31,18 @@ class CloneSpec extends AnyFunSuite {
   private def ids(t: LakeTable): Seq[Long] =
     t.toDF.select("id").collect().map(_.getLong(0)).sorted.toSeq
 
+  test("a clone of a merge-on-read table records its live rows as total-records") {
+    val cat = new LakeCatalog(spark, Files.createTempDirectory("graft-clone").toString)
+    val src = cat.createTable("db.mor", schema)
+    src.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+    src.append(df(1L -> "a", 2L -> "b", 3L -> "c"))
+    src.delete(col("id") === 2L)
+    assert(src.meta.currentSnapshot.get.deleteFiles.nonEmpty)
+    val t = cat.cloneTable("db.mor", "db.mor_cl")
+    assert(t.toDF.count() === 2L)
+    assert(t.meta.currentSnapshot.get.summary("total-records") === "2")
+  }
+
   test("clone reads the source's files in place; both sides diverge " +
     "independently; time travel and AS-OF cloning work") {
     val wh = Files.createTempDirectory("graft-clone").toString

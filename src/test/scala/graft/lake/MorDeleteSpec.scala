@@ -292,6 +292,26 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(t.meta.version === v)
   }
 
+  test("a WAP branch naming a tag refuses delete-file compaction and appends; the tag stays put") {
+    val cat = freshCatalog()
+    val t = threeFileTable(cat, "m.tagged")
+    t.delete(col("id") === 3)
+    t.delete(col("id") === 15)
+    assert(t.meta.currentSnapshot.get.deleteFiles.size === 2)
+    t.createTag("audit")
+    val tagged = t.meta.refs("audit")
+    val v0 = t.meta.version
+    spark.conf.set("spark.wap.branch", "audit")
+    try Seq[() => Any](() => t.rewriteDeleteFiles(), () => t.append(rows(30 until 31, "d")))
+      .foreach { op =>
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains("cannot write to tag audit"))
+      }
+    finally spark.conf.unset("spark.wap.branch")
+    assert(t.meta.refs("audit") === tagged)
+    assert(t.meta.version === v0)
+  }
+
   test("a large MoR DELETE rolls the position set across >1 delete file; compaction folds them back (r11)") {
     import spark.implicits._
     val cat = freshCatalog()
