@@ -145,52 +145,27 @@ object Bench {
     // near-zero "median" would make the bench look FASTER after a breaking
     // change. Report failures in their own field, excluded from the totals.
     val (ok, bad) = results.partition(!_._5)
-    val failedJson = bad.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val qs = ok.map { case (k, med, _, _, _) => "\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    val bests = ok.map { case (k, _, b, _, _) => "\"" + k + "\":" + b }
-      .mkString("{", ",", "}")
-    val total = ok.map(_._2).sum
-    val bestTotal = ok.map(_._3).sum
-    // heavy subtotal (r16): at 100+ queries the per-query median is
-    // ~0.3 s and the ±15-20% spread band is larger than most individual
-    // queries, so a regression in a heavy query can hide inside the
-    // noise of the long tail. Track the >0.5 s cohort separately —
-    // that's where round-over-round regressions are actually resolvable.
-    val heavy = ok.filter(_._2 > 0.5)
-    val heavyTotal = heavy.map(_._2).sum
     // median over queries of per-query (max-min)/median: the measurement
     // precision WITHIN this JVM. Cross-invocation totals additionally move
     // ~10% from per-JVM JIT/codegen differences (measured on byte-identical
     // code); a cross-round delta is only a regression if it clears both.
     val (noisePct, heavyNoisePct, heavyTrimPct) = spreadStats(ok)
-    val spinPct = spinInflation(spins)
-    // contended-box detector (r17 rebuild — the r11-r16 all-query 20%
-    // gate fired on provably-solo sf1 runs, see spreadStats): trips when
-    // EITHER the heavy cohort's trimmed spread clears 20% (sustained
-    // noise in the runs that can actually resolve it) OR the spin probe
-    // inflates past 50% (direct evidence of external CPU pressure).
-    // Flagged runs' totals should be compared only against other
-    // flagged runs, if at all.
-    val contended = heavyTrimPct > 20.0 || spinPct > 50.0
-    if (contended)
+    val result = Result(
+      medians = ok.map(r => r._1 -> r._2), bests = ok.map(r => r._1 -> r._3),
+      failed = bad.map(_._1), runs = runs, attempts = attempts,
+      noisePct = noisePct, heavyNoisePct = heavyNoisePct,
+      heavyTrimPct = heavyTrimPct, spinPct = spinInflation(spins),
+      setupSecs = setupSecs,
+      // measured ANN quality at this scale factor, reported next to the
+      // timings (recall@10 vs exact kNN at the registered q26/q27 params)
+      recall = queries.VectorOps.annRecall(spark, sfDir), sfDir = sfDir)
+    if (result.contended)
       System.err.println(f"[bench] CONTENDED RUN — heavy trimmed spread " +
-        f"$heavyTrimPct%.1f%% / spin inflation $spinPct%.1f%% exceed the " +
+        f"$heavyTrimPct%.1f%% / spin inflation ${result.spinPct}%.1f%% exceed the " +
         "contention thresholds (20%%/50%%); wall-clock numbers are not " +
         "comparable to idle-box rounds")
-    // measured ANN quality at this scale factor, reported next to the
-    // timings (recall@10 vs exact kNN at the registered q26/q27 params)
-    val recall = queries.VectorOps.annRecall(spark, sfDir)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val failedField = if (bad.isEmpty) "" else s""""failed":$failedJson,"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""runs_per_query":$runs,"best_total":$bestTotal,$failedField""" +
-      f""""heavy_total_s":$heavyTotal%.2f,"heavy_n":${heavy.size},""" +
-      f""""within_run_spread_pct":$noisePct%.1f,"heavy_spread_pct":$heavyNoisePct%.1f,""" +
-      f""""heavy_trim_spread_pct":$heavyTrimPct%.1f,"spin_inflation_pct":$spinPct%.1f,""" +
-      f""""contended_run":$contended,""" +
-      s""""sweep_attempts":$attempts,"queries_best":$bests,""" +
-      s""""setup":{"build_ivf_index":$setupSecs},"recall":$recall,"sf":"$sfDir"}""")
+    val (stdoutLine, fileLine, summaryLine) = result.lines
+    println(stdoutLine)
     // r18: persist the full per-query JSON to a file too. The round
     // artifact keeps only a 2000-char TAIL of stdout, which truncates the
     // per-query map — PERF_r17 lost its entire round-over-round baseline
@@ -202,31 +177,72 @@ object Bench {
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/last_run.json")
       val p = java.nio.file.Paths.get(outPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, java.util.Arrays.asList(
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-          s""""runs_per_query":$runs,"best_total":$bestTotal,$failedField""" +
-          f""""heavy_total_s":$heavyTotal%.2f,"heavy_n":${heavy.size},""" +
-          f""""within_run_spread_pct":$noisePct%.1f,"heavy_spread_pct":$heavyNoisePct%.1f,""" +
-          f""""heavy_trim_spread_pct":$heavyTrimPct%.1f,"spin_inflation_pct":$spinPct%.1f,""" +
-          f""""contended_run":$contended,""" +
-          s""""sweep_attempts":$attempts,""" +
-          s""""setup":{"build_ivf_index":$setupSecs},"recall":$recall,"sf":"$sfDir"}"""),
+      java.nio.file.Files.write(p, java.util.Arrays.asList(fileLine),
         java.nio.charset.StandardCharsets.UTF_8)
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not persist bench/last_run.json: ${e.getMessage}")
     }
-    // compact second line: the round artifact captures the TAIL of stdout,
-    // and r7's full JSON lost its head (headline total, q01-q03, the
-    // contended flag) to truncation. Everything verdict-critical repeats
-    // here so any tail capture stays self-contained.
-    println(f"""BENCH_SUMMARY {"total_s":$total%.2f,"best_total_s":$bestTotal%.2f,""" +
-      s""""n_queries":${ok.size},"n_failed":${bad.size},""" +
-      f""""heavy_total_s":$heavyTotal%.2f,"heavy_n":${heavy.size},""" +
-      f""""within_run_spread_pct":$noisePct%.1f,"heavy_spread_pct":$heavyNoisePct%.1f,""" +
-      f""""heavy_trim_spread_pct":$heavyTrimPct%.1f,"spin_inflation_pct":$spinPct%.1f,""" +
-      f""""contended_run":$contended,""" +
-      s""""sweep_attempts":$attempts,""" +
-      s""""runs_per_query":$runs,"recall":$recall,"sf":"$sfDir"}""")
+    println(summaryLine)
     spark.stop()
+  }
+
+  /** What one finished sweep reports: per-query medians and best runs of
+    * the queries that succeeded, the names of those that failed, and the
+    * run-quality statistics computed in `main`. */
+  private[graft] final case class Result(
+      medians: Seq[(String, Double)], bests: Seq[(String, Double)],
+      failed: Seq[String], runs: Int, attempts: Int,
+      noisePct: Double, heavyNoisePct: Double, heavyTrimPct: Double,
+      spinPct: Double, setupSecs: Double, recall: Map[String, Double],
+      sfDir: String) {
+
+    // contended-box detector (r17 rebuild — the r11-r16 all-query 20%
+    // gate fired on provably-solo sf1 runs, see spreadStats): trips when
+    // EITHER the heavy cohort's trimmed spread clears 20% (sustained
+    // noise in the runs that can actually resolve it) OR the spin probe
+    // inflates past 50% (direct evidence of external CPU pressure).
+    // Flagged runs' totals should be compared only against other
+    // flagged runs, if at all.
+    def contended: Boolean = heavyTrimPct > 20.0 || spinPct > 50.0
+
+    /** The stdout JSON line, the `bench/last_run.json` line and the
+      * `BENCH_SUMMARY` line, in that order. The file line is the stdout
+      * line without `queries_best`; the summary repeats the shared run
+      * statistics. Each field is formatted once here, so the three lines
+      * cannot drift apart. */
+    def lines: (String, String, String) = {
+      def obj(kv: Iterable[(String, Double)]) =
+        kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val total = medians.map(_._2).sum
+      val bestTotal = bests.map(_._2).sum
+      // heavy subtotal (r16): at 100+ queries the per-query median is
+      // ~0.3 s and the ±15-20% spread band is larger than most individual
+      // queries, so a regression in a heavy query can hide inside the
+      // noise of the long tail. Track the >0.5 s cohort separately —
+      // that's where round-over-round regressions are actually resolvable.
+      val heavy = medians.map(_._2).filter(_ > 0.5)
+      val failedField =
+        if (failed.isEmpty) ""
+        else failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "],")
+      val stats =
+        f""""heavy_total_s":${heavy.sum}%.2f,"heavy_n":${heavy.size},""" +
+          f""""within_run_spread_pct":$noisePct%.1f,"heavy_spread_pct":$heavyNoisePct%.1f,""" +
+          f""""heavy_trim_spread_pct":$heavyTrimPct%.1f,"spin_inflation_pct":$spinPct%.1f,""" +
+          s""""contended_run":$contended,"sweep_attempts":$attempts,"""
+      val tail = s""""recall":${obj(recall)},"sf":"$sfDir"}"""
+      val head = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(medians)},""" +
+        s""""runs_per_query":$runs,"best_total":$bestTotal,$failedField$stats"""
+      val setup = s""""setup":{"build_ivf_index":$setupSecs},"""
+      (head + s""""queries_best":${obj(bests)},""" + setup + tail,
+        head + setup + tail,
+        // compact second stdout line: the round artifact captures the
+        // TAIL of stdout, and r7's full JSON lost its head (headline
+        // total, q01-q03, the contended flag) to truncation. Every
+        // headline field repeats here so any tail capture stays
+        // self-contained.
+        f"""BENCH_SUMMARY {"total_s":$total%.2f,"best_total_s":$bestTotal%.2f,""" +
+          s""""n_queries":${medians.size},"n_failed":${failed.size},$stats""" +
+          s""""runs_per_query":$runs,""" + tail)
+    }
   }
 }

@@ -94,7 +94,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // stranded at v ≤ 1 (the hint pointed below the hole, or was
     // missing), or a hint naming a retired file. Fresh handles on large
     // tables with an accurate hint pay ZERO listings (measured 17 s for
-    // one listing at 4k commits' metadata on local fs — TxnProbe r14).
+    // one listing at 4k commits' metadata on local fs — SCALEPROBE.md
+    // "Multi-table transactions (r14)"; VersionHintSpec counts them).
     if ((lastSeenVersion == 0 && v <= 1) ||
         (v >= 1 && !metaStore.exists(versionName(v)))) {
       val pat = "^v(\\d+)\\.json$".r
@@ -2145,12 +2146,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // a staged replacement publishes with the file and delete sets it
     // planned (main is verified unmoved above); a grafted append keeps
     // main's delete set (its entries' files are all still present in the
-    // superset list)
+    // superset list). Grafted files take the publishing snapshot's id, as
+    // Iceberg gives cherry-picked files the new sequence number: an
+    // equality delete committed to main after staging must not mask them.
     val from = if (isReplace) Some(staged) else mainSnap
+    val grafted = added.map(_.copy(addedSnapshotId = m.nextSnapshotId))
     m.withSnapshot(MainBranch, mainSnap, staged.operation,
       staged.summary ++ Map("published-wap-id" -> staged.summary.getOrElse("wap.id", ""),
         "source-snapshot-id" -> snapshotId.toString),
-      if (isReplace) staged.files else mainSnap.map(_.files).getOrElse(Seq.empty) ++ added,
+      if (isReplace) staged.files else mainSnap.map(_.files).getOrElse(Seq.empty) ++ grafted,
       deleteFiles = from.map(_.deleteFiles).getOrElse(Seq.empty),
       eqDeleteFiles = from.map(_.eqDeleteFiles).getOrElse(Seq.empty))
     }

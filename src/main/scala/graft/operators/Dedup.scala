@@ -192,6 +192,15 @@ object Dedup {
     }
   }
 
+  /** Size-gate probe: counts distinct edges only up to `maxEdges + 1`.
+    * The limit bounds the probe's work on BOTH sides of the gate — a
+    * graph 1000× over the threshold stops scanning once threshold+1
+    * distinct edges have surfaced, instead of paying a full distinct+
+    * count over the candidate set whose result is then discarded.
+    * Package-private so PlanSpec can assert the limit is in the plan. */
+  private[graft] def gateProbe(directed: DataFrame, maxEdges: Long): Long =
+    directed.limit(math.min(maxEdges + 1, Int.MaxValue.toLong).toInt).count()
+
   /** Near-dup CLUSTER resolution: candidate pairs → connected components,
     * labeling every member with the minimum doc id of its component (the
     * canonical survivor a dedup pipeline keeps). Min-label propagation:
@@ -248,24 +257,9 @@ object Dedup {
     * scanning either way, and the probed edge set feeds the loop rather
     * than being recomputed. Pass `driverMaxEdges = 0` to force the
     * distributed loop. */
-  /** Size-gate probe: counts distinct edges only up to `maxEdges + 1`.
-    * The limit bounds the probe's work on BOTH sides of the gate — a
-    * graph 1000× over the threshold stops scanning once threshold+1
-    * distinct edges have surfaced, instead of paying a full distinct+
-    * count over the candidate set whose result is then discarded.
-    * Package-private so PlanSpec can assert the limit is in the plan. */
-  private[graft] def gateProbe(directed: DataFrame, maxEdges: Long): Long =
-    directed.limit(math.min(maxEdges + 1, Int.MaxValue.toLong).toInt).count()
-
-  /** `onRound` (instrumentation, e.g. ScaleProbe): invoked on the DRIVER
-    * after each distributed round's materializing action with (round,
-    * labels-changed, seconds); round 0 fires once after the setup action
-    * (edge materialization + initial labels) with changed = -1. Never
-    * invoked on the driver union-find path (no rounds exist there). */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20,
-                          driverMaxEdges: Long = 1L << 20,
-                          onRound: (Int, Long, Double) => Unit = null): DataFrame = {
+                          driverMaxEdges: Long = 1L << 20): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val spark = pairs.sparkSession
     val integralIds = Seq(idA, idB).forall(c => pairs.schema(c).dataType match {
@@ -324,15 +318,12 @@ object Dedup {
     val edges = directed
       .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
-    val tSetup = System.nanoTime()
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint(true)
-    if (onRound != null) onRound(0, -1L, (System.nanoTime() - tSetup) / 1e9)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
-      val tRound = System.nanoTime()
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy("src").agg(min("label").as("nl"))
@@ -346,7 +337,6 @@ object Dedup {
       changed = next.filter(col("label") =!= col("old")).count()
       labels = next.select("id", "label")
       i += 1
-      if (onRound != null) onRound(i, changed, (System.nanoTime() - tRound) / 1e9)
     }
     // hitting maxIter with changes pending means members of one component
     // would carry DIFFERENT labels — a dedup pipeline would silently keep

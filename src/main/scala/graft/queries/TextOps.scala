@@ -1129,7 +1129,7 @@ object TextOps {
     // aggregate's exchange, but each branch still re-ran the post-
     // shuffle aggregate + its TakeOrdered over it, and the static plan
     // carried two copies of everything (2× codegen). Interleaved A/B
-    // (tools/FluencyAB, parity-asserted): mat 0.65/0.81 s vs union
+    // (parity-asserted, OPTIMIZATION_r18.md §3): mat 0.65/0.81 s vs union
     // 0.78/0.89 s medians at sf0.1. The same trade measured NEGATIVE
     // for q22's collapse in r12 — the difference is sc's size (one row
     // per doc, trivially checkpointable) vs q22's payload-heavy groups.

@@ -3,10 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Materialize an N× derived dataset from sf0.1 for the full-bench scale
-  * probe (the r9 verdict's "run the FULL bench at sf1 once"): the driver
-  * ships no sf1 directory, so we derive one on disk with the SAME
-  * key-disjointness discipline [[ScaleProbe]] uses in memory:
+/** Materialize an N× derived dataset from sf0.1 for a full-bench scale
+  * run: the test data has no sf1 directory, so we derive one on disk
+  * with this key-disjointness discipline (ScaleUpSpec asserts it):
   *
   *   - fact/dim keys offset per copy (TPC-H dbgen's scaling shape), so
   *     joins keep referential integrity and per-key cardinalities — a
@@ -36,7 +35,19 @@ object ScaleUp {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    derive(spark, src, copies).foreach { case (name, df) =>
+      val t0 = System.nanoTime()
+      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
+      val rows = spark.read.parquet(s"$out/$name.parquet").count()
+      println(f"[scaleup] $name rows=$rows ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    }
+    spark.stop()
+  }
 
+  /** Every table of the `src` scale-factor directory as `copies`
+    * key-offset copies (see above), by table name. Lazy: nothing runs
+    * until a frame is written or counted. */
+  def derive(spark: SparkSession, src: String, copies: Int): Seq[(String, DataFrame)] = {
     def base(name: String): DataFrame = graft.Tables.load(spark, src, name)
 
     /** Union of `copies` key-offset copies; `offsets` maps column → span
@@ -55,7 +66,7 @@ object ScaleUp {
       }.reduce(_ unionByName _)
     }
 
-    val tables: Seq[(String, DataFrame)] = Seq(
+    Seq(
       "region" -> base("region"),
       "nation" -> base("nation"),
       "customer" -> scaled("customer", Map("c_custkey" -> 100000L)),
@@ -74,13 +85,5 @@ object ScaleUp {
           .withColumn("n_chars", length(col("text")).cast("long"))),
       "embeddings" -> scaled("embeddings",
         Map("vec_id" -> 100000L, "label" -> 1000L)))
-
-    tables.foreach { case (name, df) =>
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      val rows = spark.read.parquet(s"$out/$name.parquet").count()
-      println(f"[scaleup] $name rows=$rows ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    spark.stop()
   }
 }

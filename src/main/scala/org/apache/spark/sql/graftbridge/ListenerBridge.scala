@@ -2,9 +2,9 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** Dev-tool access to the private[spark] listener bus: lets a metrics
-  * probe (graft.tools.ShuffleProbe) drain pending stage-completed events
-  * before reading its accumulated counters. */
+/** Test access to the private[spark] listener bus: lets a listener-based
+  * metric (JobTrace, PlanSpec's shuffle counters) drain pending job and
+  * stage events before reading its accumulated counters. */
 object ListenerBridge {
   def flush(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

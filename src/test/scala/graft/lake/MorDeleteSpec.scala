@@ -464,4 +464,28 @@ class MorDeleteSpec extends AnyFunSuite {
       assert(ids(t.toDF) === (0L until 30L).filterNot(_ == 17))
     } finally spark.conf.unset("spark.wap.id")
   }
+
+  test("WAP: a staged append cherry-picked after an equality-delete upsert " +
+      "on main keeps its rows") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    val t = cat.createTable("m.cp", StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType))))
+    t.setProperties(Map("write.merge.mode" -> "merge-on-read",
+      "write.wap.enabled" -> "true"))
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    spark.conf.set("spark.wap.id", "cp-1")
+    try t.append(Seq((3L, "c")).toDF("id", "s"))
+    finally spark.conf.unset("spark.wap.id")
+    val staged = t.meta.snapshots.last
+    assert(staged.staged)
+    t.mergeByKey("id", Seq(3L), Seq((3L, "x")).toDF("id", "s"))
+    assert(t.meta.currentSnapshot.get.eqDeleteFiles.nonEmpty,
+      "the upsert on main must commit an equality delete")
+    // the published files are new to main: they take the publishing
+    // snapshot's id, so the earlier equality delete cannot mask them
+    t.cherrypick(staged.snapshotId)
+    assert(t.toDF.as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b"), (3L, "x"), (3L, "c")))
+  }
 }
