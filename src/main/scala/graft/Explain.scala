@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time + explain individual registry queries.
   * Usage: runMain graft.Explain <sfDir> <queryName> [explain] */
 object Explain {
@@ -10,13 +8,7 @@ object Explain {
     val names = args(1).split(",")
     val doExplain = args.length > 2 && args(2) == "explain"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     names.foreach { name =>
       val spec = QueryRegistry.byName(name)
       val df = spec.fn(spark, sfDir)

@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Mirrors the driver's t1 smoke: SparkEntry.entry(spark) must return >0 rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("4")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, false)

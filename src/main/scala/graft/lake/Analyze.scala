@@ -381,10 +381,10 @@ object Analyze {
         // rewrites — every op committed as "replace" preserves logical
         // rows by construction): the stats still describe the head's
         // content, so RESTAMP without scanning a byte
-        if (chainOps(m, prev.snapshotId, head).exists(
-            ops => ops.nonEmpty && ops.forall(_ == "replace")))
+        if (m.commitsBetween(Some(prev.snapshotId), head.snapshotId).exists(
+            cs => cs.nonEmpty && cs.forall(_.operation == "replace")))
           return restamp()
-        m.snapshots.find(_.snapshotId == prev.snapshotId) match {
+        m.snapshot(prev.snapshotId) match {
           case None => full(cols) // stamp expired from history
           case Some(stamped)
             // any logical row removal breaks mergeability
@@ -392,11 +392,10 @@ object Analyze {
                stamped.eqDeleteFiles != head.eqDeleteFiles =>
             full(cols)
           case Some(stamped) =>
-            val stampedPaths = stamped.files.map(_.path).toSet
-            val headPaths = head.files.map(_.path).toSet
-            if (!stampedPaths.subsetOf(headPaths)) full(cols) // rewrite/CoW
+            val diff = CommitDiff(Some(stamped), head)
+            if (diff.removed.nonEmpty) full(cols) // rewrite/CoW
             else {
-              val appended = head.files.filterNot(f => stampedPaths(f.path))
+              val appended = diff.added
               val schema = table.read(snapshotId = Some(head.snapshotId)).schema
               val targets =
                 try targetsOf(schema, cols, m.name)
@@ -416,23 +415,6 @@ object Analyze {
             }
         }
     }
-  }
-
-  /** Operations on the parent chain from `from` (exclusive) to `to`
-    * (inclusive), newest first; None when the walk cannot reach `from`
-    * (rollback, expired history, divergent branch). */
-  private def chainOps(m: TableMeta, from: Long, to: Snapshot): Option[Seq[String]] = {
-    val byId = m.snapshots.map(s => s.snapshotId -> s).toMap
-    var cur = to
-    val ops = Seq.newBuilder[String]
-    while (cur.snapshotId != from) {
-      ops += cur.operation
-      cur.parentId.flatMap(byId.get) match {
-        case Some(p) => cur = p
-        case None => return None
-      }
-    }
-    Some(ops.result())
   }
 
   /** The persisted stats, if any. */

@@ -1764,11 +1764,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // to stats-only. Built once, before the commit race — the bundle is
     // content-addressed, so retries reuse it; concurrently added files
     // carry their own commits' bundles.
-    val bloomBundle = {
-      val baseF = base.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
-      BloomSkip.buildBundleFor(spark, metaStore, meta,
-        files.filterNot(f => baseF.contains(f.path)))
-    }
+    val bloomBundle =
+      BloomSkip.buildBundleFor(spark, metaStore, meta, CommitDiff(base, files).added)
     val summaryWithBloom =
       extraSummary ++ bloomBundle.map(BloomSkip.BundleSummaryKey -> _)
     commit { m =>
@@ -1792,14 +1789,12 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
           if (strict) throw CommitConflictException(
             s"$op planned against snapshot ${base.map(_.snapshotId).getOrElse(-1L)} " +
               s"but branch '$branch' moved to ${parent.map(_.snapshotId).getOrElse(-1L)}")
-          val baseF = base.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
-          val headF = parent.map(_.files).getOrElse(Seq.empty)
-          val removed = baseF -- headF.map(_.path).toSet
-          if (removed.nonEmpty) throw CommitConflictException(
+          val concurrent = CommitDiff(base, parent.map(_.files).getOrElse(Seq.empty))
+          if (concurrent.removed.nonEmpty) throw CommitConflictException(
             s"$op planned against snapshot ${base.map(_.snapshotId).getOrElse(-1L)}; " +
-              s"a concurrent commit removed ${removed.size} file(s) it relied on — " +
+              s"a concurrent commit removed ${concurrent.removed.size} file(s) it relied on — " +
               "re-plan and retry")
-          val added = headF.filterNot(f => baseF.contains(f.path))
+          val added = concurrent.added
           if (m.properties.get("commit.isolation").contains("serializable")) {
             conflictPredicate.foreach { p =>
               val conflicting = added.filter(f => Pruning.mayMatch(p, fileBounds(m, f)))
@@ -1820,9 +1815,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // metadata-only COUNT(*) fast path subtracts.
       // stamp files new to this lineage with the committing snapshot id —
       // the data-sequence number equality deletes order against
-      val parentPaths = parent.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
+      val fresh = CommitDiff(parent, reconciled)
       val stamped = reconciled.map(f =>
-        if (parentPaths.contains(f.path)) f else f.copy(addedSnapshotId = snapId))
+        if (fresh.adds(f)) f.copy(addedSnapshotId = snapId) else f)
       val liveNames = stamped.map(f => fileName(f.path)).toSet
       val carriedDels = pruneDeleteFiles(
         parent.map(_.deleteFiles).getOrElse(Seq.empty), liveNames) ++ extraDeleteFiles
@@ -2056,14 +2051,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val target = m.refs.getOrElse(to,
       throw new IllegalArgumentException(s"no ref $to")).snapshotId
     m.refs.get(name).foreach { cur =>
-      // walk ancestry from target back; cur must appear
-      var node = m.snapshot(target)
-      var found = false
-      while (node.isDefined && !found) {
-        if (node.get.snapshotId == cur.snapshotId) found = true
-        else node = node.get.parentId.flatMap(m.snapshot)
-      }
-      require(found, s"$name (${cur.snapshotId}) is not an ancestor of $to ($target) — not a fast-forward")
+      require(m.ancestry(m.snapshot(target)).exists(_.snapshotId == cur.snapshotId),
+        s"$name (${cur.snapshotId}) is not an ancestor of $to ($target) — not a fast-forward")
     }
     m.moveRef(name, target)
   }
@@ -2127,9 +2116,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
           s"(staged snapshot $snapshotId is a re-stage of the same session) — " +
           "cherry-picking it would apply the write twice")
     }
-    val parentFiles = staged.parentId.flatMap(m.snapshot).map(_.files.map(_.path).toSet)
-      .getOrElse(Set.empty)
-    val added = staged.files.filterNot(f => parentFiles.contains(f.path))
+    val added = m.commitDiff(staged).added
     val mainSnap = m.currentSnapshot
     // any staged non-append is a REPLACEMENT of its parent's file list
     // (overwrite, row-level delete/update/merge, truncate): publishing it
@@ -2462,11 +2449,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       .split(";").filter(_.nonEmpty).toSeq
       .flatMap { loc =>
         val c = sibling(loc)
-        if (!c.metaStore.exists("v1.json")) Seq.empty
-        else c.meta.snapshots.flatMap(s =>
-          s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-            s.deleteFiles.flatMap(_.vectors.values.map(_.bundle)) ++
-            s.eqDeleteFiles.map(_.path))
+        if (!c.metaStore.exists("v1.json")) Set.empty[String]
+        else c.meta.referencedFiles
       }
       .map(p => new Path(p).toUri.getPath).toSet
 
@@ -2475,12 +2459,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * files no surviving snapshot references. */
   def expireSnapshots(olderThanMs: Long, retainLast: Int = 1): TableMeta = {
     val m0 = meta
-    val before = m0.snapshots.flatMap(s =>
-      s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-        s.deleteFiles.flatMap(_.vectors.values.map(_.bundle)) ++
-        s.eqDeleteFiles.map(_.path)).toSet
-    val beforeChunks = m0.snapshots.flatMap(s =>
-      s.manifests ++ s.manifestList ++ s.deleteManifest).toSet
+    val before = m0.referencedFiles
+    val beforeChunks = m0.referencedMetadata
     val m2 = commit { m =>
       val refTargets = m.refs.values.map(_.snapshotId).toSet
       val newest = m.snapshots.filter(!_.staged).sortBy(s => (s.timestampMs, s.snapshotId))
@@ -2510,10 +2490,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         harvested("graft.published-source-snapshot-ids", "source-snapshot-id") ++
         harvested("graft.published-wap-ids", "published-wap-id"))
     }
-    val live = m2.snapshots.flatMap(s =>
-      s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-        s.deleteFiles.flatMap(_.vectors.values.map(_.bundle)) ++
-        s.eqDeleteFiles.map(_.path)).toSet
+    val live = m2.referencedFiles
     // physical deletion stays INSIDE the table's own directory: files
     // registered in place by add_files live in foreign directories the
     // table references but does not own — expiring the snapshots that
@@ -2531,9 +2508,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     }
     // Manifest chunks are SHARED across snapshots (that's the point), so a
     // chunk is reclaimable only when no SURVIVING snapshot references it.
-    val liveChunks = m2.snapshots.flatMap(s =>
-      s.manifests ++ s.manifestList ++ s.deleteManifest).toSet
-    (beforeChunks -- liveChunks).foreach(n =>
+    (beforeChunks -- m2.referencedMetadata).foreach(n =>
       metaStore.delete(n))
     m2
   }
@@ -2760,14 +2735,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
                   sortBy: Seq[String] = Seq.empty): Boolean = {
     require(everyCommits > 0, "everyCommits must be positive")
     val m = meta
-    var cur = m.currentSnapshot
-    var n = 0
-    while (cur.isDefined && n < everyCommits &&
-        !cur.get.summary.contains("binpack-rewritten-files")) {
-      n += 1
-      cur = cur.get.parentId.flatMap(m.snapshot)
-    }
-    val due = n >= everyCommits
+    val due = m.ancestry(m.currentSnapshot)
+      .takeWhile(!_.summary.contains("binpack-rewritten-files"))
+      .take(everyCommits).size >= everyCommits
     if (due) {
       val before = m.currentSnapshot.map(_.snapshotId)
       val after = LakeTable.withConflictRetry() {
@@ -2893,21 +2863,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * blocks maintenance. Metadata-only. */
   private def siblingWatermarkFloor(): Option[Int] = {
     val m0 = meta
-    def pinOf(st: LakeTable, key: String): Option[Long] = {
-      val m = st.meta
-      var cur = m.currentSnapshot
-      while (cur.isDefined) {
-        cur.get.summary.get(key) match {
-          case Some(v) => return v.toLongOption
-          case None => cur = cur.get.parentId.flatMap(m.snapshot)
-        }
-      }
-      None
-    }
     def wmsAt(routingKey: String, pinKey: String): Seq[Long] =
       m0.properties.get(routingKey).toSeq.flatMap(_.split(";")).filter(_.nonEmpty)
         .flatMap { loc =>
-          try pinOf(sibling(loc), pinKey)
+          try sibling(loc).meta.latestSummary(pinKey).flatMap(_.toLongOption)
           catch { case scala.util.control.NonFatal(_) => None }
         }
     val wms = wmsAt(MaterializedAgg.ViewsKey, MaterializedAgg.WatermarkKey) ++
@@ -3141,11 +3100,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // (usually unqualified) — comparing raw strings would mark every live
     // file an orphan.
     val m = meta
-    val referenced = m.snapshots.flatMap(s =>
-      s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-        s.deleteFiles.flatMap(_.vectors.values.map(_.bundle)) ++
-        s.eqDeleteFiles.map(_.path))
-      .map(p => new Path(p).toUri.getPath).toSet
+    val referenced = m.referencedFiles.map(p => new Path(p).toUri.getPath)
     val orphans = scala.collection.mutable.ArrayBuffer[String]()
     // a registered clone's snapshots reference files in this directory
     // that THIS table's metadata may no longer know — never orphans
@@ -3169,8 +3124,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // reclaim any that no snapshot of the CURRENT metadata references.
     // (Superseded version files may still name such chunks, but they are
     // write-protocol artifacts — only the latest version is ever resolved.)
-    val liveChunks = m.snapshots.flatMap(s =>
-      s.manifests ++ s.manifestList ++ s.deleteManifest).toSet
+    val liveChunks = m.referencedMetadata
     // bloom bundles live exactly as long as a snapshot summary names them
     val liveBundles = m.snapshots
       .flatMap(_.summary.get(BloomSkip.BundleSummaryKey))
@@ -3315,22 +3269,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def readAddedBetween(fromSnapshotId: Option[Long], toSnapshotId: Long): DataFrame = {
     val m = meta
     require(m.snapshot(toSnapshotId).isDefined, s"no snapshot $toSnapshotId")
-    // walk parent links from `to` back to `from` (or the root), collecting
-    // newly-added app-* files (append snapshots add only those; overwrite
-    // snapshots also carry rw-* rewrite output, which is not new data)
-    val added = scala.collection.mutable.ArrayBuffer[DataFile]()
-    var cur = m.snapshot(toSnapshotId)
-    while (cur.isDefined && !fromSnapshotId.contains(cur.get.snapshotId)) {
-      val s = cur.get
-      val parentPaths = s.parentId.flatMap(m.snapshot).map(_.files.map(_.path).toSet)
-        .getOrElse(Set.empty)
-      added ++= s.files.filterNot(f => parentPaths.contains(f.path))
-        .filter(f => new Path(f.path).getName.startsWith("app-"))
-      cur = s.parentId.flatMap(m.snapshot)
-    }
-    require(fromSnapshotId.isEmpty || cur.isDefined,
+    // the app-* files each commit after `from` (or since the root) on
+    // `to`'s ancestry added, newest commit first (append snapshots add
+    // only those; overwrite snapshots also carry rw-* rewrite output,
+    // which is not new data)
+    val commits = m.commitsBetween(fromSnapshotId, toSnapshotId)
+    require(commits.isDefined,
       s"snapshot ${fromSnapshotId.get} is not an ancestor of $toSnapshotId")
-    dataFrameFor(m, added.toSeq)
+    dataFrameFor(m, commits.get.reverse.flatMap(s => m.commitDiff(s).added
+      .filter(f => new Path(f.path).getName.startsWith("app-"))))
   }
 
   /** Row-level CDC changelog between two snapshots — the batch analog of
@@ -3372,12 +3319,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   private[graft] def isAncestorRetained(fromSnapshotId: Long,
                                         toSnapshotId: Long): Boolean = {
     val m = meta
-    var cur = m.snapshot(toSnapshotId)
-    while (cur.isDefined) {
-      if (cur.get.snapshotId == fromSnapshotId) return true
-      cur = cur.get.parentId.flatMap(m.snapshot)
-    }
-    false
+    m.ancestry(m.snapshot(toSnapshotId)).exists(_.snapshotId == fromSnapshotId)
   }
 
   /** Metadata-only proof that no existing row became dead in the snapshot
@@ -3390,19 +3332,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * ancestor of `to`. Zero data I/O — walks snapshot file LISTS only. */
   private[graft] def windowLossFree(fromSnapshotId: Long, toSnapshotId: Long): Boolean = {
     val m = meta
-    var cur = m.snapshot(toSnapshotId)
-    while (cur.isDefined && cur.get.snapshotId != fromSnapshotId) {
-      val s = cur.get
-      val parent = s.parentId.flatMap(m.snapshot)
-      val curPaths = s.files.map(_.path).toSet
-      val parentDel = parent.map(_.deleteFiles.map(_.path).toSet).getOrElse(Set.empty)
-      val parentEq = parent.map(_.eqDeleteFiles.map(_.path).toSet).getOrElse(Set.empty)
-      if (parent.exists(_.files.exists(f => !curPaths.contains(f.path))) ||
-          s.deleteFiles.exists(d => !parentDel.contains(d.path)) ||
-          s.eqDeleteFiles.exists(d => !parentEq.contains(d.path))) return false
-      cur = parent
-    }
-    cur.isDefined
+    m.commitsBetween(Some(fromSnapshotId), toSnapshotId).exists(_.forall { s =>
+      val d = m.commitDiff(s)
+      d.removed.isEmpty && d.addedDeletes.isEmpty && d.addedEqDeletes.isEmpty
+    })
   }
 
   def changelog(fromSnapshotId: Option[Long], toSnapshotId: Long,
@@ -3411,43 +3344,32 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     require(m.snapshot(toSnapshotId).isDefined, s"no snapshot $toSnapshotId")
     identifierFields.foreach(f => require(m.schema.sparkSchema.fieldNames.contains(f),
       s"identifier field $f is not a column of the table"))
-    var path = List.empty[Snapshot]
-    var cur = m.snapshot(toSnapshotId)
-    while (cur.isDefined && !fromSnapshotId.contains(cur.get.snapshotId)) {
-      path = cur.get :: path
-      cur = cur.get.parentId.flatMap(m.snapshot)
-    }
-    require(fromSnapshotId.isEmpty || cur.isDefined,
+    val commits = m.commitsBetween(fromSnapshotId, toSnapshotId)
+    require(commits.isDefined,
       s"snapshot ${fromSnapshotId.get} is not an ancestor of $toSnapshotId")
     def tag(df: DataFrame, tpe: String, ordinal: Int, snapId: Long): DataFrame = df
       .withColumn("_change_type", lit(tpe))
       .withColumn("_change_ordinal", lit(ordinal))
       .withColumn("_commit_snapshot_id", lit(snapId))
-    val perCommit = path.zipWithIndex.map { case (s, ordinal) =>
-      val parentSnap = s.parentId.flatMap(m.snapshot)
-      val parentFiles = parentSnap.map(_.files).getOrElse(Seq.empty)
-      val parentPaths = parentFiles.map(_.path).toSet
-      val curPaths = s.files.map(_.path).toSet
+    val perCommit = commits.get.zipWithIndex.map { case (s, ordinal) =>
+      val parentSnap = m.parentOf(s)
+      val diff = CommitDiff(parentSnap, s)
       // each side reads under ITS OWN snapshot's delete mask, so the diff
       // is over LOGICAL content: a compaction that applies merge-on-read
       // deletes cancels exactly (removed-live == rewritten), and a CoW
       // rewrite never re-emits rows an earlier MoR commit already deleted
-      val addedFiles = s.files.filterNot(f => parentPaths.contains(f.path))
-      val removedFiles = parentFiles.filterNot(f => curPaths.contains(f.path))
-      val addedDf = dataFrameForLive(m, Some(s), addedFiles)
-      val removedDf = dataFrameForLive(m, parentSnap, removedFiles)
+      val addedDf = dataFrameForLive(m, Some(s), diff.added)
+      val removedDf = dataFrameForLive(m, parentSnap, diff.removed)
       // merge-on-read transitions: delete FILES added by this commit mark
       // rows of KEPT data files live→dead — read just those positions
       // (churn-sized; the kept files' scan is pruned to referenced names)
-      val parentDelPaths = parentSnap.map(_.deleteFiles.map(_.path).toSet)
-        .getOrElse(Set.empty)
-      val newDels = s.deleteFiles.filterNot(d => parentDelPaths.contains(d.path))
+      val newDels = diff.addedDeletes
       val morDeleted: Option[DataFrame] =
         if (newDels.isEmpty) None
         else {
           val refNames = newDels.flatMap(_.counts.keys).toSet
           val kept = s.files.filter(f =>
-            parentPaths.contains(f.path) && refNames.contains(fileName(f.path)))
+            !diff.adds(f) && refNames.contains(fileName(f.path)))
           if (kept.isEmpty) None
           else Some(
             // read LIVE UNDER THE PARENT (both masks): a position that was
@@ -3463,14 +3385,11 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // this commit kill every strictly-older live row with that key —
       // read kept older files LIVE UNDER THE PARENT's masks, semi-join the
       // new keys. Churn-sized: the key set is the upsert batch.
-      val parentEqPaths = parentSnap.map(_.eqDeleteFiles.map(_.path).toSet)
-        .getOrElse(Set.empty)
-      val newEq = s.eqDeleteFiles.filterNot(d => parentEqPaths.contains(d.path))
+      val newEq = diff.addedEqDeletes
       val eqDeleted: Option[DataFrame] =
         if (newEq.isEmpty) None
         else {
-          val candidates = s.files.filter(f => parentPaths.contains(f.path) &&
-            newEq.exists(_.masks(f)))
+          val candidates = s.files.filter(f => !diff.adds(f) && newEq.exists(_.masks(f)))
           if (candidates.isEmpty) None
           else {
             val live = dataFrameForLive(m, parentSnap, candidates)
@@ -3488,9 +3407,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       // compensation, CDC streaming). The cancellation semantics only
       // matter when BOTH sides are non-empty (CoW rewrites).
       val inserted =
-        if (removedFiles.isEmpty) addedDf else addedDf.exceptAll(removedDf)
+        if (diff.removed.isEmpty) addedDf else addedDf.exceptAll(removedDf)
       val removedRows =
-        if (addedFiles.isEmpty) removedDf else removedDf.exceptAll(addedDf)
+        if (diff.added.isEmpty) removedDf else removedDf.exceptAll(addedDf)
       val deleted = Seq(Some(removedRows), morDeleted, eqDeleted)
         .flatten.reduce(_ unionByName _)
       if (identifierFields.isEmpty)
@@ -3534,58 +3453,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     require(maxCommitsPerBatch > 0, s"maxCommitsPerBatch must be positive: $maxCommitsPerBatch")
     val m = meta
     require(m.snapshot(toSnapshotId).isDefined, s"no snapshot $toSnapshotId")
-    var ids = List.empty[Long]
-    var cur = m.snapshot(toSnapshotId)
-    while (cur.isDefined && !fromSnapshotId.contains(cur.get.snapshotId)) {
-      ids = cur.get.snapshotId :: ids
-      cur = cur.get.parentId.flatMap(m.snapshot)
-    }
-    require(fromSnapshotId.isEmpty || cur.isDefined,
+    val commits = m.commitsBetween(fromSnapshotId, toSnapshotId)
+    require(commits.isDefined,
       s"snapshot ${fromSnapshotId.get} is not an ancestor of $toSnapshotId")
-    val ends = ids.grouped(maxCommitsPerBatch).map(_.last).toList
+    val ends = commits.get.map(_.snapshotId).grouped(maxCommitsPerBatch).map(_.last).toList
     val starts = fromSnapshotId :: ends.init.map(Some(_))
     starts.iterator.zip(ends.iterator).map { case (from, to) =>
       changelog(from, to, identifierFields)
     }
   }
-
-  /** String procedure dispatcher for CALL-style parity (SURVEY §2.11). */
-  def call(procedure: String, args: Map[String, String] = Map.empty): TableMeta =
-    procedure match {
-      case "rollback_to_snapshot" => rollbackTo(args("snapshot_id").toLong)
-      case "cherrypick_snapshot" => cherrypick(args("snapshot_id").toLong)
-      case "expire_snapshots" => expireSnapshots(
-        args.get("older_than").map(_.toLong).getOrElse(System.currentTimeMillis()),
-        args.get("retain_last").map(_.toInt).getOrElse(1))
-      case "rewrite_data_files" if args.get("strategy").contains("binpack") =>
-        // where => "k=v[,k=v]" (quote-aware) scopes to matching partition tuples
-        binPack(
-          args.get("target-file-size-bytes").map(_.toLong).getOrElse(512L * 1024 * 1024),
-          args.get("min-input-size-bytes").map(_.toLong).getOrElse(-1L),
-          args.get("min-input-files").map(_.toInt).getOrElse(2),
-          args.get("where").map(LakeTable.parsePartitionWhere).getOrElse(Map.empty),
-          args.get("sort_by").map(_.split(",").toSeq.map(_.trim)).getOrElse(Seq.empty))
-      case "rewrite_data_files" => rewriteDataFiles(
-        args.get("target-file-size-bytes").map(_.toLong).getOrElse(512L * 1024 * 1024),
-        args.get("sort_by").map(_.split(",").toSeq.map(_.trim)).getOrElse(Seq.empty),
-        args.get("zorder_by").map(_.split(",").toSeq.map(_.trim)).getOrElse(Seq.empty),
-        // full SQL predicate (r16): scope the rewrite to may-match files
-        args.get("where").map(org.apache.spark.sql.functions.expr))
-      case "rewrite_manifests" => rewriteManifests()
-      case "auto_maintain" =>
-        autoMaintain(
-          args.get("every_commits").map(_.toInt).getOrElse(-1),
-          maxEqDeleteFiles = args.get("max_eq_delete_files").map(_.toInt).getOrElse(-1),
-          maxDeleteFiles = args.get("max_delete_files").map(_.toInt).getOrElse(-1))
-        meta
-      case "fast_forward" =>
-        fastForward(args.getOrElse("branch", MainBranch), args("to"))
-      case "remove_orphan_files" =>
-        removeOrphanFiles(args.get("older_than").map(_.toLong)
-          .getOrElse(System.currentTimeMillis() - 3600_000L))
-        meta
-      case other => throw new IllegalArgumentException(s"unknown procedure $other")
-    }
 
   // ---- properties (D9) --------------------------------------------------------
 

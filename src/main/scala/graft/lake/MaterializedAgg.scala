@@ -252,17 +252,12 @@ final class MaterializedAgg private[lake] (
     val from = watermark
     if (from.isEmpty) return None
     if (from.contains(to)) return Some(state.toDF)
-    // commit-count walk: metadata-only, bails (None) when `from` is not
-    // an ancestor of `to` — the changelog would throw there anyway
+    // commit-count walk of at most `maxCommits` steps: metadata-only,
+    // bails (None) when `from` is not an ancestor of `to` — the changelog
+    // would throw there anyway
     val bm = base.meta
-    var n = 0
-    var cur = bm.snapshot(to)
-    while (cur.isDefined && !from.contains(cur.get.snapshotId)) {
-      n += 1
-      if (n > maxCommits) return None
-      cur = cur.get.parentId.flatMap(bm.snapshot)
-    }
-    if (cur.isEmpty) return None
+    if (!bm.ancestry(bm.snapshot(to)).zipWithIndex.takeWhile(_._2 <= maxCommits)
+        .exists { case (s, _) => from.contains(s.snapshotId) }) return None
     if (dims.nonEmpty &&
         !state.meta.properties.get(DimSnapshotsKey).contains(dimSnapshots(dims)))
       return None
@@ -370,17 +365,8 @@ object MaterializedAgg {
 
   /** [[MaterializedAgg#watermark]] for a state table loaded by location
     * (the query-routing rule has no MaterializedAgg instance). */
-  private[graft] def watermarkOf(state: LakeTable): Option[Long] = {
-    val m = state.meta
-    var cur = m.currentSnapshot
-    while (cur.isDefined) {
-      cur.get.summary.get(WatermarkKey) match {
-        case Some(v) => return Some(v.toLong)
-        case None => cur = cur.get.parentId.flatMap(m.snapshot)
-      }
-    }
-    None
-  }
+  private[graft] def watermarkOf(state: LakeTable): Option[Long] =
+    state.meta.latestSummary(WatermarkKey).map(_.toLong)
 
   private[lake] val KeyCol = "_ivm_key"
   private[lake] val RowsCol = "_ivm_rows"

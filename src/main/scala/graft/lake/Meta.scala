@@ -344,6 +344,96 @@ final case class TableMeta(
       properties = this.properties ++ properties)
     if (staged) next else next.moveRef(branch, snapId, now)
   }
+
+  /** `start` and its retained parent chain, newest first: the one walk
+    * every reader of snapshot history takes. Pure and lazy — a caller
+    * that stops early pays only for the steps it took. The chain ends at
+    * the root or at the first parent that expiry dropped. A staged (WAP)
+    * snapshot is never the parent of a published one, so a walk from a
+    * ref never meets it. The id index is built once, on the first step. */
+  def ancestry(start: Option[Snapshot]): Iterator[Snapshot] = {
+    lazy val byId = snapshots.iterator.map(s => s.snapshotId -> s).toMap
+    Iterator.iterate(start)(_.flatMap(_.parentId).flatMap(byId.get))
+      .takeWhile(_.isDefined).map(_.get)
+  }
+
+  /** The commits in `(from, to]` on `to`'s retained ancestry, oldest
+    * first; `from = None` reaches back as far as [[ancestry]] does. None
+    * when `from` is not a retained ancestor of `to` (expired, rolled
+    * back, another branch). Pure. */
+  def commitsBetween(from: Option[Long], to: Long): Option[Seq[Snapshot]] = {
+    val (window, rest) = ancestry(snapshot(to)).span(s => !from.contains(s.snapshotId))
+    val commits = window.toList.reverse
+    if (from.isEmpty || rest.hasNext) Some(commits) else None
+  }
+
+  /** The newest value of summary key `key` on main's retained ancestry. */
+  def latestSummary(key: String): Option[String] =
+    ancestry(currentSnapshot).flatMap(_.summary.get(key)).nextOption()
+
+  /** `s`'s parent, if expiry has not dropped it. */
+  def parentOf(s: Snapshot): Option[Snapshot] = s.parentId.flatMap(snapshot)
+
+  /** What commit `s` changed against its retained parent. */
+  def commitDiff(s: Snapshot): CommitDiff = CommitDiff(parentOf(s), s)
+
+  /** Paths of every object a retained snapshot reads: data files,
+    * position-delete files, their deletion-vector bundles and equality
+    * delete files. Expiry and orphan removal delete only what is outside
+    * this set. Pure. */
+  def referencedFiles: Set[String] =
+    snapshots.iterator.flatMap(s =>
+      s.files.iterator.map(_.path) ++
+        s.deleteFiles.iterator.flatMap(d => d.path +: d.vectors.values.map(_.bundle).toSeq) ++
+        s.eqDeleteFiles.iterator.map(_.path)).toSet
+
+  /** Names of every metadata object a retained snapshot reads: manifest
+    * chunks, manifest lists and delete manifests. Pure. */
+  def referencedMetadata: Set[String] =
+    snapshots.iterator.flatMap(s => s.manifests ++ s.manifestList ++ s.deleteManifest).toSet
+}
+
+/** What a commit changed against the snapshot before it (`before = None`:
+  * nothing before it — the root, or a parent that expiry dropped). Data
+  * and delete files are matched by path. Pure; each part is computed on
+  * first use. */
+final class CommitDiff(before: Option[Snapshot], files: Seq[DataFile],
+                       deleteFiles: Seq[DeleteFile], eqDeleteFiles: Seq[EqualityDeleteFile]) {
+  private lazy val beforePaths: Set[String] =
+    before.fold(Set.empty[String])(_.files.iterator.map(_.path).toSet)
+
+  /** Whether `f` is new against `before`. */
+  def adds(f: DataFile): Boolean = !beforePaths.contains(f.path)
+
+  /** Data files not in `before`. */
+  lazy val added: Seq[DataFile] = files.filter(adds)
+
+  /** Data files of `before` that are gone. */
+  lazy val removed: Seq[DataFile] = before.fold(Seq.empty[DataFile]) { b =>
+    val now = files.iterator.map(_.path).toSet
+    b.files.filterNot(f => now.contains(f.path))
+  }
+
+  /** Position-delete files not in `before`. */
+  lazy val addedDeletes: Seq[DeleteFile] = {
+    val was = before.fold(Set.empty[String])(_.deleteFiles.iterator.map(_.path).toSet)
+    deleteFiles.filterNot(d => was.contains(d.path))
+  }
+
+  /** Equality-delete files not in `before`. */
+  lazy val addedEqDeletes: Seq[EqualityDeleteFile] = {
+    val was = before.fold(Set.empty[String])(_.eqDeleteFiles.iterator.map(_.path).toSet)
+    eqDeleteFiles.filterNot(d => was.contains(d.path))
+  }
+}
+
+object CommitDiff {
+  def apply(before: Option[Snapshot], after: Snapshot): CommitDiff =
+    new CommitDiff(before, after.files, after.deleteFiles, after.eqDeleteFiles)
+
+  /** Diff of a data-file list not yet committed (its delete sets empty). */
+  def apply(before: Option[Snapshot], files: Seq[DataFile]): CommitDiff =
+    new CommitDiff(before, files, Seq.empty, Seq.empty)
 }
 
 /** Serialization model of one manifest chunk: an immutable, content-addressed

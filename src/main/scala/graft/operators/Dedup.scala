@@ -192,15 +192,6 @@ object Dedup {
     }
   }
 
-  /** Size-gate probe: counts distinct edges only up to `maxEdges + 1`.
-    * The limit bounds the probe's work on BOTH sides of the gate — a
-    * graph 1000× over the threshold stops scanning once threshold+1
-    * distinct edges have surfaced, instead of paying a full distinct+
-    * count over the candidate set whose result is then discarded.
-    * Package-private so PlanSpec can assert the limit is in the plan. */
-  private[graft] def gateProbe(directed: DataFrame, maxEdges: Long): Long =
-    directed.limit(math.min(maxEdges + 1, Int.MaxValue.toLong).toInt).count()
-
   /** Near-dup CLUSTER resolution: candidate pairs → connected components,
     * labeling every member with the minimum doc id of its component (the
     * canonical survivor a dedup pipeline keeps). Min-label propagation:
@@ -252,11 +243,13 @@ object Dedup {
     * returned shape are identical on both paths, including types: integral
     * ids come back as long on BOTH paths (both are built from the same
     * casted distinct edge set), so the output contract never depends on
-    * data size. The gate probe itself is bounded — `limit(threshold+1)
-    * .count()` — so deciding the path costs at most threshold+1 rows of
-    * scanning either way, and the probed edge set feeds the loop rather
-    * than being recomputed. Pass `driverMaxEdges = 0` to force the
-    * distributed loop. */
+    * data size. The gate probe itself is bounded — one
+    * `limit(driverMaxEdges + 1).collect()` over the distinct edges, so
+    * deciding the path costs at most threshold+1 rows either way (a graph
+    * 1000× over the threshold stops once threshold+1 distinct edges have
+    * surfaced), and under the threshold the probe already holds every
+    * edge (OperatorsSpec asserts the limit in the plan this runs). Pass
+    * `driverMaxEdges = 0` to force the distributed loop. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20,
                           driverMaxEdges: Long = 1L << 20): DataFrame = {

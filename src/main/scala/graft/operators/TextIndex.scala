@@ -66,11 +66,11 @@ final class TextIndex private (
   import TextIndex._
 
   /** Base snapshot the POSTINGS content reflects. */
-  def watermark: Option[Long] = summaryPin(state, WatermarkKey)
+  def watermark: Option[Long] = state.meta.latestSummary(WatermarkKey).map(_.toLong)
 
   /** Base snapshot the docs table (and the corpus constants) reflect —
     * ≥ [[watermark]] whenever a crash split the two-step refresh. */
-  def docsWatermark: Option[Long] = summaryPin(docsTable, WatermarkKey)
+  def docsWatermark: Option[Long] = docsTable.meta.latestSummary(WatermarkKey).map(_.toLong)
 
   /** (n_docs, total_len): corpus constants as of [[docsWatermark]] —
     * two driver longs off the docs table's snapshot summary. Resilient
@@ -80,17 +80,15 @@ final class TextIndex private (
     * from the docs table in one aggregate; the next refresh re-pins. */
   def corpusStats: (Long, Long) = {
     val m = docsTable.meta
-    var cur = m.currentSnapshot
-    while (cur.isDefined) {
-      (cur.get.summary.get(NDocsKey), cur.get.summary.get(TotalLenKey)) match {
-        case (Some(n), Some(t)) => return (n.toLong, t.toLong)
-        case _ => cur = cur.get.parentId.flatMap(m.snapshot)
+    m.ancestry(m.currentSnapshot).flatMap(s => pinnedStats(s.summary)).nextOption()
+      .getOrElse {
+        if (m.currentSnapshot.isEmpty) (0L, 0L)
+        else {
+          val r = docsTable.toDF.agg(count(lit(1)).as("n"),
+            coalesce(sum(col("len_d")), lit(0L)).as("len")).head()
+          (r.getLong(0), r.getLong(1))
+        }
       }
-    }
-    if (m.currentSnapshot.isEmpty) return (0L, 0L)
-    val r = docsTable.toDF.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("len_d")), lit(0L)).as("len")).head()
-    (r.getLong(0), r.getLong(1))
   }
 
   /** Corpus constants AS OF a given base watermark: the constants the
@@ -104,18 +102,15 @@ final class TextIndex private (
   private def corpusStatsAt(pin: Option[Long]): (Long, Long) = {
     if (pin.isEmpty) return corpusStats
     val m = docsTable.meta
-    var cur = m.currentSnapshot
-    while (cur.isDefined) {
-      val s = cur.get.summary
-      if (s.get(WatermarkKey).contains(pin.get.toString))
-        (s.get(NDocsKey), s.get(TotalLenKey)) match {
-          case (Some(n), Some(t)) => return (n.toLong, t.toLong)
-          case _ => ()
-        }
-      cur = cur.get.parentId.flatMap(m.snapshot)
-    }
-    corpusStats
+    m.ancestry(m.currentSnapshot).map(_.summary)
+      .filter(_.get(WatermarkKey).contains(pin.get.toString))
+      .flatMap(pinnedStats).nextOption()
+      .getOrElse(corpusStats)
   }
+
+  /** The corpus constants a docs commit's summary pinned, if it pinned them. */
+  private def pinnedStats(summary: Map[String, String]): Option[(Long, Long)] =
+    for (n <- summary.get(NDocsKey); t <- summary.get(TotalLenKey)) yield (n.toLong, t.toLong)
 
   /** The docs-table SNAPSHOT whose content reflects base watermark `pin`
     * — the same ancestry walk as [[corpusStatsAt]], returned as a
@@ -129,13 +124,8 @@ final class TextIndex private (
   private def docsSnapshotAt(pin: Option[Long]): Option[Long] = {
     if (pin.isEmpty) return None
     val m = docsTable.meta
-    var cur = m.currentSnapshot
-    while (cur.isDefined) {
-      if (cur.get.summary.get(WatermarkKey).contains(pin.get.toString))
-        return Some(cur.get.snapshotId)
-      cur = cur.get.parentId.flatMap(m.snapshot)
-    }
-    None
+    m.ancestry(m.currentSnapshot)
+      .find(_.summary.get(WatermarkKey).contains(pin.get.toString)).map(_.snapshotId)
   }
 
   /** q66's tokenizer, verbatim: whitespace split of the lowercased text
@@ -359,18 +349,6 @@ object TextIndex {
     * literal IN costs more in plan translation + per-file pruning than
     * the one doc-table scan it saves; measured 6× on a 10k-key batch). */
   private val MaxInKeys = 1024
-
-  private def summaryPin(t: LakeTable, key: String): Option[Long] = {
-    val m = t.meta
-    var cur = m.currentSnapshot
-    while (cur.isDefined) {
-      cur.get.summary.get(key) match {
-        case Some(v) => return Some(v.toLong)
-        case None => cur = cur.get.parentId.flatMap(m.snapshot)
-      }
-    }
-    None
-  }
 
   /** Build the index over `base`'s current snapshot: the docs table
     * (lengths + corpus constants) commits first, then the postings —

@@ -331,17 +331,8 @@ object VectorIndex {
   private[graft] val DriftImbalanceKey = "graft.vindex.drift-imbalance"
   private[graft] val DriftAtKey = "graft.vindex.drift-at"
 
-  private def summaryPin(state: LakeTable, key: String): Option[Long] = {
-    val m = state.meta
-    var cur = m.currentSnapshot
-    while (cur.isDefined) {
-      cur.get.summary.get(key) match {
-        case Some(v) => return Some(v.toLong)
-        case None => cur = cur.get.parentId.flatMap(m.snapshot)
-      }
-    }
-    None
-  }
+  private def summaryPin(state: LakeTable, key: String): Option[Long] =
+    state.meta.latestSummary(key).map(_.toLong)
 
   private def centroidsDf(spark: org.apache.spark.sql.SparkSession,
                           cs: Seq[Seq[Float]]): DataFrame = {

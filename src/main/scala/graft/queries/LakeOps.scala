@@ -61,23 +61,12 @@ object LakeOps {
       // against an older warehouse conf (another test suite, an earlier
       // ensure) — drop the cache so the conf above takes effect
       org.apache.spark.sql.graftbridge.CatalogBridge.resetCatalogs(s)
-      // builder().create() sets the NEW session as the JVM's default and
-      // active session — any later getOrCreate() (another test suite, a
-      // caller's lazy session) would silently receive this ext session,
-      // whose cached `lake` catalog points at OUR temp warehouse and
-      // ignores their conf. Snapshot and restore both slots.
-      val prevDefault = SparkSession.getDefaultSession
-      val prevActive = SparkSession.getActiveSession
-      val ext = SparkSession.builder()
-        .withExtensions(new graft.functions.GraftExtensions()(_)).create()
-      prevDefault match {
-        case Some(d) => SparkSession.setDefaultSession(d)
-        case None => SparkSession.clearDefaultSession()
-      }
-      prevActive match {
-        case Some(a) => SparkSession.setActiveSession(a)
-        case None => SparkSession.clearActiveSession()
-      }
+      // created aside: a later getOrCreate() (another test suite, a
+      // caller's lazy session) must not receive this ext session, whose
+      // cached `lake` catalog points at OUR temp warehouse and ignores
+      // their conf
+      val ext = graft.Sessions.createAside(SparkSession.builder()
+        .withExtensions(new graft.functions.GraftExtensions()(_)))
       ext.conf.set("spark.sql.catalog.lake", "graft.lake.dsv2.GraftCatalog")
       ext.conf.set("spark.sql.catalog.lake.warehouse", wh)
       graft.Tables.registerAll(ext, dir) // temp views are per-session

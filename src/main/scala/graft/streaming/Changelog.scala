@@ -328,13 +328,7 @@ object Changelog {
     def appliedMax(): Option[Long] =
       sinks.flatMap { s =>
         val m = catalog.loadTable(s.ident).meta
-        var cur = m.currentSnapshot
-        val found = Seq.newBuilder[Long]
-        while (cur.isDefined) {
-          cur.get.summary.get(marker).foreach(v => found += v.toLong)
-          cur = cur.get.parentId.flatMap(m.snapshot)
-        }
-        found.result()
+        m.ancestry(m.currentSnapshot).flatMap(_.summary.get(marker)).map(_.toLong)
       }.maxOption
     if (batchId >= 0 && appliedMax().exists(_ >= batchId)) return
     // stale attempts: resolve any fence first (a crashed attempt that

@@ -28,13 +28,7 @@ object ScaleUp {
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus)
     derive(spark, src, copies).foreach { case (name, df) =>
       val t0 = System.nanoTime()
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")

@@ -8,26 +8,13 @@ import org.apache.spark.sql.SparkSession
   * default and active session, so both are restored and other suites'
   * `getOrCreate()` keeps its own session. */
 object ExtensionsSession {
-  def create(): SparkSession = {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    val s = SparkSession.builder()
+  def create(): SparkSession =
+    Sessions.createAside(SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions()(_))
-      .create()
-    prevDefault match {
-      case Some(d) => SparkSession.setDefaultSession(d)
-      case None => SparkSession.clearDefaultSession()
-    }
-    prevActive match {
-      case Some(a) => SparkSession.setActiveSession(a)
-      case None => SparkSession.clearActiveSession()
-    }
-    s
-  }
+      .withExtensions(new graft.functions.GraftExtensions()(_)))
 
   /** [[create]] with a graft catalog named `catalog` over `warehouse`. */
   def withCatalog(catalog: String, warehouse: String): SparkSession = {

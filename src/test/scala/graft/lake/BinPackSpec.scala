@@ -192,10 +192,8 @@ class BinPackSpec extends AnyFunSuite {
     val t = cat.createTable("b.t8", schema, partitionBy = Seq("grp" -> "identity"))
     (0 until 2).foreach(i => t.append(rows(i * 10 until (i + 1) * 10, "a").coalesce(1)))
     (0 until 2).foreach(i => t.append(rows(100 + i * 10 until 100 + (i + 1) * 10, "b").coalesce(1)))
-    t.call("rewrite_data_files", Map(
-      "strategy" -> "binpack",
-      "target-file-size-bytes" -> (512L * 1024 * 1024).toString,
-      "where" -> "grp=a"))
+    t.binPack(targetSizeBytes = 512L * 1024 * 1024,
+      partitionFilter = LakeTable.parsePartitionWhere("grp=a"))
     val after = files(t)
     assert(after.count(f => partVal(t, f, "grp").contains("a")) === 1)
     assert(after.count(f => partVal(t, f, "grp").contains("b")) === 2)
@@ -308,8 +306,8 @@ class BinPackSpec extends AnyFunSuite {
     assert(t.meta.version === v1,
       "masked file must be excluded (rewrite_position_deletes' job)")
     assert(ids(t.toDF) === ((0L until 1200L).filterNot(_ == 500L)))
-    // CALL surface: predicate-scoped rewrite through the procedure args
-    t.call("rewrite_data_files", Map("where" -> "id >= 800"))
+    // predicate-scoped rewrite over a SQL predicate string
+    t.rewriteDataFiles(where = Some(expr("id >= 800")))
     assert(ids(t.toDF) === ((0L until 1200L).filterNot(_ == 500L)))
     assert(t.meta.currentSnapshot.get.summary("where-rewritten-files") === "1")
   }

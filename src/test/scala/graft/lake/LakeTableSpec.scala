@@ -386,7 +386,7 @@ class LakeTableSpec extends AnyFunSuite {
     val before = t.meta.currentSnapshot.get.snapshotId
     t.delete(col("fare") > 25.0)
     assert(t.toDF.count() === 2)
-    t.call("rollback_to_snapshot", Map("snapshot_id" -> before.toString))
+    t.rollbackTo(before)
     assert(t.toDF.count() === 5)
   }
 
@@ -405,7 +405,7 @@ class LakeTableSpec extends AnyFunSuite {
       // audit pass reads it explicitly by snapshot id (c30/c32)
       assert(t.read(snapshotId = Some(staged.snapshotId)).count() === 5)
       // publish
-      t.call("cherrypick_snapshot", Map("snapshot_id" -> staged.snapshotId.toString))
+      t.cherrypick(staged.snapshotId)
       assert(t.toDF.count() === 5)
     } finally spark.conf.unset("spark.wap.id")
   }
@@ -471,7 +471,7 @@ class LakeTableSpec extends AnyFunSuite {
     spark.conf.set("spark.wap.branch", "etl")
     try t.append(taxis.limit(1)) finally spark.conf.unset("spark.wap.branch")
     assert(t.toDF.count() === 5) // main unchanged pre-publish
-    t.call("fast_forward", Map("branch" -> "main", "to" -> "etl"))
+    t.fastForward("main", "etl")
     assert(t.toDF.count() === 6)
     // non-ancestor fast-forward is rejected (it would silently drop commits)
     t.createBranch("stale", at = Some(t.meta.snapshots.head.snapshotId))
@@ -505,7 +505,7 @@ class LakeTableSpec extends AnyFunSuite {
     val before = t.meta.currentSnapshot.get.files.size
     assert(before >= 4)
     val sumBefore = t.toDF.agg(sum("fare")).head.getDouble(0)
-    t.call("rewrite_data_files", Map("target-file-size-bytes" -> (64L * 1024 * 1024).toString))
+    t.rewriteDataFiles(targetSizeBytes = 64L * 1024 * 1024)
     val after = t.meta.currentSnapshot.get
     assert(after.operation === "replace")
     assert(after.files.size === 1)
@@ -536,8 +536,7 @@ class LakeTableSpec extends AnyFunSuite {
       }
     }
     val before = survivors(100, 120)
-    t.call("rewrite_data_files",
-      Map("target-file-size-bytes" -> "4096", "sort_by" -> "k"))
+    t.rewriteDataFiles(targetSizeBytes = 4096, sortBy = Seq("k"))
     val m = t.meta.currentSnapshot.get
     assert(m.summary("sort-order") === "k")
     assert(m.files.size >= 3, "compaction should still produce several files")
@@ -694,8 +693,7 @@ class LakeTableSpec extends AnyFunSuite {
         Pruning.mayMatch(p, method.invoke(t, m, f).asInstanceOf[Pruning.FileBounds])
       }
     }
-    t.call("rewrite_data_files",
-      Map("target-file-size-bytes" -> "8192", "zorder_by" -> "x,y"))
+    t.rewriteDataFiles(targetSizeBytes = 8192, zorderBy = Seq("x", "y"))
     val m = t.meta.currentSnapshot.get
     assert(m.summary("zorder") === "x,y")
     val nFiles = m.files.size

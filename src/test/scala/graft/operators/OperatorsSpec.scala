@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit specs for the training-data-pipeline operators (dedup, text
@@ -438,18 +441,31 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("hybrid-CC gate probe is bounded: a limit node caps the probe's scan") {
-    // the probe must never run an unbounded distinct+count just to pick a
-    // path — its physical plan carries the limit. A non-local source is
-    // needed for the assertion: a LocalRelation folds limit into the scan.
-    // (and a limit >= the child's known maxRows is elided, so the source
-    // must be larger than the probe threshold for the node to survive)
-    val directed = spark.range(10)
-      .selectExpr("id + 1 as src", "id + 2 as dst")
-    assert(Dedup.gateProbe(directed, 2L) === 3L, "probe stops at threshold+1")
-    val planStr = directed.limit(3).queryExecution.executedPlan.toString
-    assert(planStr.contains("Limit"), s"probe plan must contain a limit node:\n$planStr")
-    // threshold larger than the edge count: probe returns the true count
-    assert(Dedup.gateProbe(directed, 100L) === 10L)
+    // the size gate must never run an unbounded distinct+collect just to
+    // pick a path: the plan connectedComponents runs for it carries the
+    // limit. A non-local source is needed for the assertion: a
+    // LocalRelation folds limit into the scan. 10 distinct edges over a
+    // gate of 2: the probe collects 3 and the distributed loop runs. Two
+    // stars: hub 0 with the odd ids, hub 100 with the even ones.
+    val pairs = spark.range(10).selectExpr("(id % 2) * 100 as id_a", "id + 1 as id_b")
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString; () }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val labels =
+      try Dedup.connectedComponents(pairs, driverMaxEdges = 2).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally {
+        ListenerBridge.flush(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(plans.exists(p => "CollectLimit 3\\b".r.findFirstIn(p).isDefined),
+      s"the gate probe must run as a limit of 3:\n${plans.mkString("\n---\n")}")
+    assert(labels === ((0L +: (1L to 9L by 2)).map(_ -> 0L) ++
+      (100L +: (2L to 10L by 2)).map(_ -> 2L)).toMap)
   }
 
   test("CC output schema is (long, long) on BOTH paths for int-typed ids") {
