@@ -1466,10 +1466,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     *     distinct shuffle, and a batch without a non-null key commits
     *     nothing, even with `extraSummary`.
     * A 250-key merge-on-read changelog batch
-    * ([[graft.streaming.Changelog.mergeChangelog]]) runs six jobs: the
-    * probe (behind the caller's last-wins shuffle and the materialization
-    * of its cached batch), the upsert write, the equality-delete write and
-    * the manifest-bloom build (JobCountSpec). */
+    * ([[graft.streaming.Changelog.mergeChangelog]]) runs five jobs: the
+    * caller's last-wins shuffle, the probe (which stores the caller's
+    * pinned batch), the upsert write, the equality-delete write and the
+    * manifest-bloom build (JobCountSpec). */
   def mergeByKeys(key: String, keyDf: DataFrame, upserts: DataFrame,
                   extraSummary: Map[String, String] = Map.empty,
                   toBranch: Option[String] = None,
@@ -1483,14 +1483,14 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // values keep the row (ANSI: only TRUE deletes).
     val nonNull = keyDf.select(keyDf.col(key)).filter(col(key).isNotNull)
     // a key frame over a driver-local relation (SQL MERGE's small-source
-    // path) is read on the driver: no distinct, no cache, no probe job
+    // path) is read on the driver: no distinct, no pin, no probe job
     val localKeys = nonNull.queryExecution.optimizedPlan match {
       case _: LocalRelation =>
         Some(nonNull.collect().map(_.get(0)).distinct.toSeq)
           .filter(_.size <= LakeTable.SmallKeyBatch)
       case _ => None
     }
-    val kd = if (batchKeys || localKeys.isDefined) nonNull else nonNull.distinct().cache()
+    val kd = if (batchKeys || localKeys.isDefined) nonNull else graft.Materialize(nonNull.distinct())
     try {
       // ORDER BY + LIMIT plans as TakeOrderedAndProject, whose collect is
       // ONE job over every partition (a per-partition bounded top-k);
@@ -1613,7 +1613,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         conflictPredicate = conflictPred,
         staged = stagedWap,
         identityPlan = idPlan, identityProps = identityAdvance(idPlan, inserted))
-    } finally { if (!batchKeys && localKeys.isEmpty) kd.unpersist(); () }
+    } finally graft.Materialize.release(kd)
   }
 
   /** TRUNCATE (D3): new empty snapshot. "Table := empty" is planned
@@ -3457,7 +3457,8 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     require(commits.isDefined,
       s"snapshot ${fromSnapshotId.get} is not an ancestor of $toSnapshotId")
     val ends = commits.get.map(_.snapshotId).grouped(maxCommitsPerBatch).map(_.last).toList
-    val starts = fromSnapshotId :: ends.init.map(Some(_))
+    // an empty range has no ends, so the zip yields no window
+    val starts = fromSnapshotId :: ends.dropRight(1).map(Some(_))
     starts.iterator.zip(ends.iterator).map { case (from, to) =>
       changelog(from, to, identifierFields)
     }

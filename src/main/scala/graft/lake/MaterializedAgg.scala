@@ -115,9 +115,10 @@ final class MaterializedAgg private[lake] (
           "watermarks; keep manual expire_snapshots retention longer than " +
           "the view's maximum staleness.")
     }
-    val (delta, merged) = deltaMerge(from, to, eager = true, skipRescan = false)
-    state.mergeByKeys(KeyCol, delta.select(KeyCol), merged,
+    val (delta, merged) = deltaMerge(from, to, pin = true, skipRescan = false)
+    try state.mergeByKeys(KeyCol, delta.select(KeyCol), merged,
       extraSummary = Map(WatermarkKey -> to.toString))
+    finally graft.Materialize.release(delta)
     Some(to)
   }
 
@@ -126,13 +127,14 @@ final class MaterializedAgg private[lake] (
     * of affected groups) and those groups' NEW state rows in state-schema
     * column order. [[refresh]] commits these via mergeByKeys;
     * stale-route compensation ([[compensatedState]]) overlays them over
-    * the committed state read-side, without committing. `eager`
-    * checkpoint-materializes the delta — worth it on the write path,
-    * where the commit machinery consumes it twice; the read path stays
-    * lazy (the churn-sized delta just recomputes inside one query).
+    * the committed state read-side, without committing. `pin` holds the
+    * delta through [[graft.Materialize]] — worth it on the write path,
+    * where the commit machinery consumes it twice (the caller releases
+    * it); the read path stays unpinned (the churn-sized delta just
+    * recomputes inside one query).
     * `skipRescan` elides the lost-extreme base rescan; callers must
     * first prove the window loss-free or the view MIN/MAX-free. */
-  private def deltaMerge(from: Option[Long], to: Long, eager: Boolean,
+  private def deltaMerge(from: Option[Long], to: Long, pin: Boolean,
                          skipRescan: Boolean): (DataFrame, DataFrame) = {
     val keyCol = jsonKey(groupBy)
     val cl = enrich(base.changelog(from, to))
@@ -166,7 +168,7 @@ final class MaterializedAgg private[lake] (
       .groupBy((keyCol.as(KeyCol) +: groupBy.map(col)): _*)
       .agg(deltaAggs.head, (deltaAggs.tail ++ lostExtras): _*)
     // write path: consumed by the join below AND as the merge key set
-    val delta = if (eager) deltaRaw.localCheckpoint(true) else deltaRaw
+    val delta = if (pin) graft.Materialize(deltaRaw) else deltaRaw
 
     val old = state.toDF
     val joined = delta.as("d").join(old.as("o"), col("d." + KeyCol) === col("o." + KeyCol), "left")
@@ -263,7 +265,7 @@ final class MaterializedAgg private[lake] (
       return None
     if (aggs.exists(a => a.func == "min" || a.func == "max") &&
         !base.windowLossFree(from.get, to)) return None
-    val (delta, merged) = deltaMerge(from, to, eager = false, skipRescan = true)
+    val (delta, merged) = deltaMerge(from, to, pin = false, skipRescan = true)
     val old = state.toDF
     Some(old.join(delta.select(KeyCol), Seq(KeyCol), "left_anti")
       .unionByName(merged))

@@ -147,12 +147,11 @@ case class MergeIntoGraftCommand(
       case Some(local) => mergeMarked(spark, markedLocal(spark, local), None)
       case None =>
         val src = ColumnBridge.ofRows(spark, source)
-        // cached: `marked` (source query + matched-ness join) is consumed
+        // pinned: `marked` (source query + matched-ness join) is consumed
         // once per winning action branch plus once for the delete-key set —
-        // without the cache an expensive source query re-executes 3-5 times
-        val marked = markedDistributed(src).cache()
-        try mergeMarked(spark, marked, notMatchedBySourceKeys(src))
-        finally { marked.unpersist(); () }
+        // unpinned, an expensive source query re-executes 3-5 times
+        graft.Materialize.using(markedDistributed(src))(
+          mergeMarked(spark, _, notMatchedBySourceKeys(src)))
     }
     Seq.empty
   }

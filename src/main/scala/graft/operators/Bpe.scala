@@ -26,8 +26,10 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *      over the symbol array (again pure SQL: the accumulator carries
   *      (out, prev) and a broadcast `map` literal holds pair→merged).
   *
-  * Lineage is truncated with `localCheckpoint` every few rounds — the
-  * same discipline as the connected-components loop (Dedup.scala).
+  * Every few rounds the evolving words frame is pinned through
+  * [[graft.Materialize]] — a leaf plan over stored rows, the same
+  * discipline as the connected-components loop (Dedup.scala) — and every
+  * pinned generation is released before `train` returns.
   *
   * Encoding/inference is [[graft.functions.BpeTokens]]: the learned
   * ranks ride the plan as a literal, so tokenization is a scan-local map.
@@ -58,37 +60,16 @@ object Bpe {
     * training when the best remaining pair is rarer than it.
     * Deterministic: candidates are ranked (freq DESC, pair ASC). */
   def train(hist: DataFrame, numMerges: Int,
-            candidatesPerRound: Int = 64, minFreq: Long = 2,
-            storageLevel: Option[org.apache.spark.storage.StorageLevel] = None)
-      : Model = {
+            candidatesPerRound: Int = 64, minFreq: Long = 2): Model = {
     require(numMerges >= 0 && candidatesPerRound >= 1)
-    // storageLevel (r17): pin the evolving words frame at the caller's
-    // level and UNPERSIST every pinned generation before returning —
-    // localCheckpoint (the default) pins at Spark's fixed local-checkpoint
-    // level and leaks each generation until RDD GC. Same round loop,
-    // bit-identical merges either way.
     val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def pin(df: DataFrame, eager: Boolean): DataFrame = storageLevel match {
-      case Some(lvl) =>
-        val p = df.persist(lvl)
-        if (eager) { p.count(); () }
-        pinned += p
-        p
-      case None => df.localCheckpoint(eager)
-    }
-    try trainRounds(numMerges, candidatesPerRound, minFreq, hist, pin)
-    finally pinned.foreach(_.unpersist(blocking = false))
-  }
-
-  private def trainRounds(numMerges: Int, candidatesPerRound: Int,
-                          minFreq: Long, hist: DataFrame,
-                          pin: (DataFrame, Boolean) => DataFrame): Model = {
+    def pin(df: DataFrame): DataFrame = { val p = graft.Materialize(df); pinned += p; p }
     val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
     // symbols: the word as its character array
     var words = pin(hist.select(
-      split(col("word"), "").as("symbols"), col("freq")), false)
+      split(col("word"), "").as("symbols"), col("freq")))
     var rounds = 0
-    while (merges.size < numMerges) {
+    try while (merges.size < numMerges) {
       val remaining = numMerges - merges.size
       val top = pairCounts(words)
         .orderBy(col("pfreq").desc, col("pair").asc)
@@ -114,10 +95,9 @@ object Bpe {
       words = applyMerges(words, batch)
       rounds += 1
       if (rounds % 4 == 0)
-        // truncate the chained-aggregate lineage like the CC loop does
-        // (persist mode: materialize a fresh pinned generation instead)
-        words = pin(words, true)
-    }
+        // cut the chained-fold plan like the CC loop does
+        words = pin(words)
+    } finally pinned.foreach(graft.Materialize.release(_))
     Model(merges.toSeq)
   }
 

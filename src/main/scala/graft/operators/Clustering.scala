@@ -36,11 +36,10 @@ import graft.functions.NearestCentroidInt
   * literal (k·dim·8 bytes on every executor, no join), then a map-side-
   * combined partial aggregation whose shuffle payload is k·dim partial
   * sums PER TASK, not per row. Driver state is O(k·dim) longs. No
-  * all-pairs stage, no unbounded collect. `kmeansTrain`'s `storageLevel`
-  * option (r17) persists the quantized projection for the round loop and
-  * unpersists it before returning — over a cold 100 TB source that turns
-  * `1 + iters` source scans into ONE; left `None`, the operator stays
-  * storage-agnostic and re-scans (correct either way, bit-identical).
+  * all-pairs stage, no unbounded collect. `kmeansTrain` pins the
+  * quantized projection through [[graft.Materialize]] for the seed pass
+  * and the round loop and releases it before returning — over a cold
+  * 100 TB source that turns `1 + iters` source scans into ONE.
   */
 object Clustering {
 
@@ -61,22 +60,13 @@ object Clustering {
 
   /** Train: `iters` Lloyd rounds from the k lowest-id seeds.
     * `df` must have `idCol` (orderable, unique) and `vecCol`
-    * (`array<float>` or `array<double>`). `storageLevel` persists the
-    * quantized projection across the seed pass + round loop (ONE source
-    * scan total; the seed pass materializes the cache) and unpersists it
-    * before returning. */
+    * (`array<float>` or `array<double>`). The quantized projection is
+    * pinned across the seed pass + round loop (ONE source scan total; the
+    * seed pass stores it) and released before returning. */
   def kmeansTrain(df: DataFrame, vecCol: String, idCol: String,
-                  k: Int, iters: Int, scale: Int = 1024,
-                  storageLevel: Option[org.apache.spark.storage.StorageLevel] = None)
-      : KMeansModel = {
-    val q = df.select(col(idCol).as("_id"), quantize(col(vecCol), scale).as("_qv"))
-    storageLevel.foreach(lvl => { q.persist(lvl); () })
-    try kmeansRounds(q, k, iters)
-    finally storageLevel.foreach(_ => { q.unpersist(blocking = false); () })
-  }
-
-  private def kmeansRounds(q: DataFrame, k: Int, iters: Int): KMeansModel = {
-
+                  k: Int, iters: Int, scale: Int = 1024): KMeansModel =
+    graft.Materialize.using(df.select(col(idCol).as("_id"),
+        quantize(col(vecCol), scale).as("_qv"))) { q =>
     // Seeds: k lowest NON-NULL, NON-EMPTY ids — TakeOrderedAndProject,
     // k rows to the driver (null vectors train nothing, so they may not
     // seed; an empty vector would seed a zero-dim centroid, equally

@@ -76,19 +76,21 @@ object Decontaminate {
     * build is already an eager job, so the key pipeline (eval scan +
     * fingerprint + distinct exchange) used to run twice: once for the
     * filter bytes and once, re-planned from source, under the anti
-    * join. It now materializes ONCE behind an eager localCheckpoint
-    * (one short row per distinct key — the same narrow-cut-point
-    * criterion as q77's score table); the bloom aggregate and the anti
-    * join both read the checkpointed rows. Inside the caller's timed
-    * region, recomputed from source on every invocation — nothing
-    * persists across runs. */
+    * join. It is now pinned ONCE through [[graft.Materialize]] (one short
+    * row per distinct key — the same narrow-cut-point criterion as q77's
+    * score table): the bloom build computes and stores the rows, and the
+    * anti join reads them. The returned frame holds the pin, so a lost
+    * block is recomputed from the eval source; an empty eval set releases
+    * it before returning the corpus. Recomputed from source on every
+    * invocation — nothing is shared across calls. */
   def decontaminate(corpus: DataFrame, evalKeys: DataFrame,
                     corpusKey: Column, evalKeyCol: String,
                     expectedItems: Long = 1L << 20,
                     numBits: Long = 1L << 23): DataFrame = {
-    val keys = evalKeys.select(col(evalKeyCol)).distinct().localCheckpoint()
+    val keys = graft.Materialize(evalKeys.select(col(evalKeyCol)).distinct())
     val bloom = bloomBytes(keys, evalKeyCol, expectedItems, numBits)
-    if (bloom.isEmpty) return corpus // nothing to subtract
+    // nothing to subtract
+    if (bloom.isEmpty) { graft.Materialize.release(keys); return corpus }
     val hit = mightContain(bloom, corpusKey)
     val clean = corpus.filter(!hit)
     val verified = corpus.filter(hit)

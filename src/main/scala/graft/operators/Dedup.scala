@@ -80,8 +80,8 @@ object Dedup {
     * LSH): join shingle sets, |A∩B| / (|A|+|B|-|A∩B|). */
   def jaccardForPairs(df: DataFrame, pairs: DataFrame, textCol: String = "text",
                       idCol: String = "doc_id", n: Int = 3): DataFrame = {
-    // NOT cached: the exploded shingle set is far larger than the corpus,
-    // and a cache here has no unpersist point (the result is lazy) — in a
+    // NOT pinned: the exploded shingle set is far larger than the corpus,
+    // and a pin here has no release point (the result is lazy) — in a
     // long-lived session each call would pin another full shingle set in
     // executor storage. Recomputing the explode per consumer (3×) is a
     // codegen-only projection, no shuffle.
@@ -210,26 +210,25 @@ object Dedup {
     * self-join doubles every round's DAG, and dup-cluster diameters are
     * too shallow to amortize it.
     *
-    * Each round the labels are materialized with `localCheckpoint` — NOT
-    * a plain persist. Persist caches the DATA but leaves the LOGICAL plan
-    * intact, and this loop's plan references the previous round's labels
-    * twice (neighbor join + carry-through join), so the tree DOUBLES per
-    * round: by round r the analyzer/optimizer walks O(2^r) nodes and
-    * driver-side planning, not the data, dominates wall clock (measured:
-    * the seeded-graph property test spent minutes in planning by round
-    * ~12). localCheckpoint truncates lineage to the materialized blocks,
-    * keeping every round's plan O(1) — the GraphX/GraphFrames iteration
-    * pattern. Caveat (documented Spark semantics): localCheckpoint blocks
-    * are non-replayable, so an executor loss mid-loop fails the job and
-    * the caller re-runs — acceptable for a bounded maxIter-round loop.
-    * Superseded rounds' blocks are freed by the ContextCleaner when the
-    * old DataFrames go unreachable. Only docs appearing in some pair are
-    * labeled (singletons are their own cluster by definition — callers
-    * left-anti or coalesce, or use [[resolveClusters]]). Throws if
-    * `maxIter` rounds don't reach the fixpoint (silently-partial labels
-    * would keep duplicates). The returned (id, label) DataFrame is backed
-    * by its own checkpoint blocks; `unpersist()` is a harmless no-op on
-    * it, and the blocks free when the reference drops.
+    * Each round the labels are pinned through [[graft.Materialize]] — a
+    * leaf plan over the stored rows, NOT a plain persist. Persist caches the
+    * DATA but leaves the LOGICAL plan intact, and this loop's plan
+    * references the previous round's labels twice (neighbor join +
+    * carry-through join), so the tree DOUBLES per round: by round r the
+    * analyzer/optimizer walks O(2^r) nodes and driver-side planning, not
+    * the data, dominates wall clock (measured: the seeded-graph property
+    * test spent minutes in planning by round ~12). The leaf keeps every
+    * round's plan O(1) — the GraphX/GraphFrames iteration pattern — and,
+    * unlike a local checkpoint, keeps RDD lineage, so a lost block is
+    * recomputed instead of failing the loop (OperatorsSpec gates the
+    * returned plan's size). Each superseded round is released once the
+    * next one is stored, and the edge set when the loop ends. Only docs
+    * appearing in some pair are labeled (singletons are their own cluster
+    * by definition — callers left-anti or coalesce, or use
+    * [[resolveClusters]]). Throws if `maxIter` rounds don't reach the
+    * fixpoint (silently-partial labels would keep duplicates). The
+    * returned (id, label) DataFrame holds the last round's pin; its
+    * blocks free when the reference drops.
     *
     * Hybrid execution, size-gated like a broadcast join: when the DISTINCT
     * edge count is at most `driverMaxEdges` (default 2^20 ≈ 16 MB of id
@@ -308,29 +307,28 @@ object Dedup {
     }
     // symmetric closure of the already-distinct directed set; distinct()
     // again only collapses pairs present in both orientations
-    val edges = directed
+    val edges = graft.Materialize(directed
       .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
+      .distinct())
+    var labels = graft.Materialize(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = 1L
     var i = 0
-    while (changed > 0 && i < maxIter) {
+    try while (changed > 0 && i < maxIter) {
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy("src").agg(min("label").as("nl"))
-      // eager localCheckpoint = the round's one materializing action;
-      // the convergence count below reads the checkpointed blocks
-      val next = labels
+      // the convergence count is the round's one action: it computes and
+      // stores the pinned round, which the next round reads
+      val next = graft.Materialize(labels
         .join(neighborMin.select(col("src").as("id"), col("nl")), Seq("id"), "left")
         .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .localCheckpoint(true)
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label")))
       changed = next.filter(col("label") =!= col("old")).count()
-      labels = next.select("id", "label")
+      graft.Materialize.release(labels)
+      labels = next
       i += 1
-    }
+    } finally graft.Materialize.release(edges)
     // hitting maxIter with changes pending means members of one component
     // would carry DIFFERENT labels — a dedup pipeline would silently keep
     // duplicates. Fail loudly; callers with genuinely deep graphs raise
@@ -339,8 +337,7 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           s"($changed labels still changing) — raise maxIter")
-    edges.unpersist()
-    labels
+    labels.select("id", "label")
   }
 
   /** Full dedup cluster resolution: EVERY document gets a cluster id.

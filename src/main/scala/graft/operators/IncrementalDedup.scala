@@ -100,8 +100,8 @@ object IncrementalDedup {
     val needed = math.ceil(threshold * k).toLong
     val sig = Dedup.minHashSignatures(batch, textCol, idCol, n, k)
     // the candidate joins and CC below consume the banded batch several
-    // times; it is batch-sized, so materialize once
-    val bb = banded(sig, idCol, k, bands).localCheckpoint(true)
+    // times; it is batch-sized, so pin it (released after the index append)
+    val bb = graft.Materialize(banded(sig, idCol, k, bands))
 
     // --- cross-batch: batch vs indexed survivors --------------------
     val batchBuckets = bb.select(col("bucket")).distinct()
@@ -130,18 +130,20 @@ object IncrementalDedup {
     val innerDup = labels.filter(col("id") =!= col("label"))
       .select(col("id").as(idCol), col("label").as("dup_of"))
 
-    // materialized: consumed by survivors, the index append, and the
-    // caller; also pins the result against the index commit below (the
-    // lake read is already snapshot-pinned at DataFrame creation — this
-    // just avoids recomputing the joins per consumer)
-    val dropped = crossDup.unionByName(innerDup).localCheckpoint(true)
+    // pinned: consumed by the index append, survivors and the caller,
+    // which owns the pin (the lake read is already snapshot-pinned at
+    // DataFrame creation — this just avoids recomputing the joins per
+    // consumer)
+    val dropped = graft.Materialize(crossDup.unionByName(innerDup))
     val survivors = batch.join(dropped.select(idCol), Seq(idCol), "left_anti")
 
     // --- index the survivors (one lake commit) ----------------------
     val newRows = bb
       .join(dropped.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
       .select("band", "bucket", "doc_id", "signature")
-    index.append(newRows)
+    // the append computes `dropped`: its last reads of bb and the labels
+    try index.append(newRows)
+    finally graft.Materialize.release(bb, labels)
     IngestResult(survivors, dropped)
   }
 }

@@ -253,7 +253,7 @@ object TextOps {
       // binding constraint.
       // Note on reuse: g feeds four consumers and per-branch column
       // pruning makes their exchanges non-identical, so Spark recomputes
-      // the collapse per branch. A localCheckpoint barrier was measured
+      // the collapse per branch. A materialization barrier was measured
       // SLOWER at sf0.1 (materialization + lost stage fusion outweigh
       // the recompute of a cheap map-side collapse); at 100 TB a real
       // pipeline persists the collapsed corpus as its exact-dedup output
@@ -1122,9 +1122,10 @@ object TextOps {
     // both sides of a self-join (2 Generate + 2 Exchange saved; results
     // bit-identical, DuckDB oracle unchanged).
     //
-    // r18: the tiny per-doc score table (one BIGINT row per doc)
-    // MATERIALIZES behind an eager localCheckpoint before the top/bot
-    // passes. The r17 UNION form planned the whole scoring pipeline
+    // r18: the tiny per-doc score table (one BIGINT row per doc) is
+    // pinned through graft.Materialize before the top/bot passes (its
+    // shuffle stages run inside fn; the first ranking pass stores its
+    // rows). The r17 UNION form planned the whole scoring pipeline
     // under BOTH branches — runtime ReusedExchange deduped the final
     // aggregate's exchange, but each branch still re-ran the post-
     // shuffle aggregate + its TakeOrdered over it, and the static plan
@@ -1133,12 +1134,12 @@ object TextOps {
     // 0.78/0.89 s medians at sf0.1. The same trade measured NEGATIVE
     // for q22's collapse in r12 — the difference is sc's size (one row
     // per doc, trivially checkpointable) vs q22's payload-heavy groups.
-    // The materialization is inside the timed fn — recomputed from
-    // parquet on every invocation, nothing persists across runs.
+    // Recomputed from parquet on every invocation — nothing is shared
+    // across runs; the returned frame holds the pin.
     fn = (s, dir) => {
       import org.apache.spark.sql.functions._
       graft.Tables.registerAll(s, dir)
-      val sc = s.sql("""WITH t AS (
+      val sc = graft.Materialize(s.sql("""WITH t AS (
         |  SELECT doc_id, split(lower(trim(text)), '\\s+') AS w FROM documents),
         |tok AS (SELECT wx AS w FROM t LATERAL VIEW explode(w) e AS wx),
         |c1 AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
@@ -1152,8 +1153,7 @@ object TextOps {
         |        (((bgc.c2 + 1) * 1000000) DIV (c1.c + v.v)) AS p_fp
         |      FROM bgc JOIN c1 ON bgc.w1 = c1.w CROSS JOIN v)
         |SELECT doc_id, SUM(p_fp) DIV COUNT(*) AS fluency_fp
-        |FROM p GROUP BY doc_id""".stripMargin)
-        .localCheckpoint() // eager; one row per doc
+        |FROM p GROUP BY doc_id""".stripMargin)) // one row per doc
       val top = sc.orderBy(col("fluency_fp").desc, col("doc_id")).limit(10)
         .select(lit("fluent").as("band"), col("doc_id"), col("fluency_fp"))
       val bot = sc.orderBy(col("fluency_fp").asc, col("doc_id")).limit(10)

@@ -221,9 +221,8 @@ object VectorOps {
     * recall@10 vs exact kNN over 5 fixed query vectors. Bench records
     * this next to the q26/q27 timings so the approximation quality is a
     * reported number, not a one-time test artifact. */
-  def annRecall(s: org.apache.spark.sql.SparkSession, dir: String): Map[String, Double] = {
-    val emb = graft.Tables.load(s, dir, "embeddings").cache()
-    try {
+  def annRecall(s: org.apache.spark.sql.SparkSession, dir: String): Map[String, Double] =
+    graft.Materialize.using(graft.Tables.load(s, dir, "embeddings")) { emb =>
       val queryIds = Seq(0L, 7L, 42L, 99L, 123L)
       def vecOf(qid: Long): Seq[Float] =
         emb.filter(col("vec_id") === qid).select("embedding").head.getSeq[Float](0)
@@ -234,14 +233,12 @@ object VectorOps {
       val lsh = avg(q => Similarity.annTopK(emb, vecOf(q), k = 10,
         planes = 3, tables = 12).collect().map(_.getLong(0)).toSet)
       val centroids = ensureIvfIndex(s, dir)
-      val assigned = Similarity.ivfAssignWith(emb, centroids).cache()
-      val ivf =
-        try avg(q => Similarity.ivfTopK(assigned, centroids, vecOf(q),
+      val ivf = graft.Materialize.using(Similarity.ivfAssignWith(emb, centroids)) { assigned =>
+        avg(q => Similarity.ivfTopK(assigned, centroids, vecOf(q),
           k = 10, nprobe = IvfNprobe).collect().map(_.getLong(0)).toSet)
-        finally { assigned.unpersist(); () }
+      }
       Map("q26_ann_lsh" -> lsh, "q27_ann_ivf" -> ivf)
-    } finally { emb.unpersist(); () }
-  }
+    }
 
   /** SemDeDup ([[graft.operators.SemDedup]]): k-means-clustered semantic
     * dedup over the embedding table — within-cluster cosine pairs (q24's

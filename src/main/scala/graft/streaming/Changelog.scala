@@ -219,13 +219,11 @@ object Changelog {
     import org.apache.spark.sql.expressions.Window
     // null-keyed changelog rows are unmergeable noise — drop them up front
     // (a null key must never reach the delete-key set)
-    val latest = batch
+    graft.Materialize.using(batch
       .filter(col(key).isNotNull)
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col(key)).orderBy(col(seqCol).desc)))
-      .filter(col("_rn") === 1).drop("_rn")
-      .cache()
-    try {
+      .filter(col("_rn") === 1).drop("_rn")) { latest =>
       val upserts = latest.filter(col(opCol).isin(Insert, UpdateAfter)).drop(opCol)
       // `latest` holds each key once and every upsert's key, so it is the
       // batch's key set as is (`batchKeys`): no distinct shuffle, only a
@@ -240,7 +238,7 @@ object Changelog {
           batchKeys = true)
       }
       ()
-    } finally { latest.unpersist(); () }
+    }
   }
 
   /** Start a continuous changelog ingest: 5 s micro-batches (the

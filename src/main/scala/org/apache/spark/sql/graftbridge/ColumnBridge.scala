@@ -26,4 +26,16 @@ object ColumnBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A frame whose plan is one `LogicalRDD` leaf over `rows`, the executed
+    * rows of `origin`, carrying origin's output, statistics and
+    * partitioning ([[graft.Materialize]]; `LogicalRDD.fromDataset` is
+    * `private[sql]`). */
+  def leaf(origin: org.apache.spark.sql.DataFrame,
+           rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame = {
+    val ds = origin.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
 }

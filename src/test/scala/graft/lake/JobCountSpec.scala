@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.{ExtensionsSession, JobTrace}
+import graft.operators.{Decontaminate, Dedup}
 import graft.streaming.Changelog
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -82,9 +83,9 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
     t
   }
 
-  // the last-wins shuffle, the materialization of the cached batch, the
-  // key probe, the upsert write, the equality-delete write and the
-  // manifest-bloom build
+  // the last-wins shuffle, the key probe (which also stores the pinned
+  // batch), the upsert write, the equality-delete write and the
+  // manifest-bloom build: five jobs
   test("a 250-key merge-on-read mergeChangelog batch runs at most 6 Spark jobs") {
     val t = cdcTable("j.merge")
     val rnd = new Random(11)
@@ -162,5 +163,58 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
   test("a 10-row VALUES MERGE INTO a merge-on-read table runs at most 3 Spark jobs") {
     assertJobs(notebookMergeJobs("mor", " TBLPROPERTIES ('write.merge.mode'='merge-on-read')"),
       3, "a small-source merge-on-read MERGE")
+  }
+
+  // A source over the small-source bound (1,024 rows) takes the distributed
+  // path: the bounded source probe (2), the key bounds (2), the pinned
+  // matched-ness join's shuffles (3), the key probe that stores it, and the
+  // survivor and upsert writes.
+  test("a 1,100-row-source MERGE INTO a copy-on-write table runs at most 10 Spark jobs") {
+    val t = "jc.db.bigsrc"
+    sqlSpark.sql("CREATE DATABASE IF NOT EXISTS jc.db")
+    sqlSpark.sql(s"CREATE TABLE $t (id BIGINT, grp STRING, v BIGINT)")
+    sqlSpark.sql(s"INSERT INTO $t SELECT id, concat('g', id % 3), id FROM range(2000)")
+    // keys 1500..2599: 500 matched, 600 new
+    val (_, jobs) = jobsOf(sqlSpark.sql(
+      s"""MERGE INTO $t t USING (SELECT id, 'n' AS grp, id + 1000 AS v FROM range(1500, 2600)) s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect())
+    val got = sqlSpark.sql(s"SELECT id, grp, v FROM $t").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val want = (0L until 2600L).map { i =>
+      if (i >= 1500L) (i, "n", i + 1000L) else (i, s"g${i % 3}", i)
+    }.toSet
+    assert(got === want)
+    assertJobs(jobs, 10, "a distributed-source copy-on-write MERGE")
+  }
+
+  // the distinct eval keys' shuffle, the bloom build that stores the
+  // pinned keys (2) and the result's read (2)
+  test("one Decontaminate call, its result read, runs at most 5 Spark jobs") {
+    val corpus = spark.range(2000).select(col("id").as("doc_id"),
+      concat(lit("doc "), col("id")).as("text"))
+    val eval = corpus.filter(col("doc_id") % 7 === 0).select(md5(col("text")).as("fp"))
+    val (n, jobs) = jobsOf(
+      Decontaminate.decontaminate(corpus, eval, md5(col("text")), "fp").collect().length)
+    assert(n === 2000 - 286)
+    assertJobs(jobs, 5, "a decontaminate call and its read")
+  }
+
+  // The distributed min-label loop, round by round: the neighbor join and
+  // label update's shuffles, and the convergence count, which stores the
+  // pinned round. Measured as the difference between a 10-round and a
+  // 3-round chain.
+  test("seven more distributed connected-components rounds run at most 43 more Spark jobs") {
+    def chainJobs(edges: Int): Int = {
+      val pairs = spark.range(edges).selectExpr("id as id_a", "id + 1 as id_b")
+      val (labels, jobs) = jobsOf(Dedup.connectedComponents(pairs, driverMaxEdges = 0))
+      assert(labels.filter(col("label") =!= 0L).isEmpty)
+      jobs.count
+    }
+    val short = chainJobs(2) // 3 rounds
+    val long = chainJobs(9) // 10 rounds
+    info(s"3 rounds: $short jobs, 10 rounds: $long jobs")
+    assert(long - short <= 43, s"7 more rounds ran ${long - short} more Spark jobs, budget 43")
+    assert(long <= 60, s"a 10-round run ran $long Spark jobs, budget 60")
   }
 }

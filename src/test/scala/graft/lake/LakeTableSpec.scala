@@ -940,6 +940,17 @@ class LakeTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](t.changelogWindows(Some(s0), head, 0))
   }
 
+  test("changelogWindows: an empty range (from == to) yields no window, as changelog yields no row") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    val t = cat.createTable("nyc.cdcwin0", StructType(Seq(
+      StructField("id", LongType), StructField("v", DoubleType))))
+    t.append(Seq((0L, 0.0)).toDF("id", "v"))
+    val head = t.meta.currentSnapshot.get.snapshotId
+    assert(t.changelog(Some(head), head).count() === 0L)
+    assert(t.changelogWindows(Some(head), head, maxCommitsPerBatch = 7).isEmpty)
+  }
+
   test("changelog: compaction and z-order rewrites produce ZERO change events") {
     import spark.implicits._
     val cat = freshCatalog()

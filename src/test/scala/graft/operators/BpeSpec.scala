@@ -104,14 +104,12 @@ class BpeSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("storageLevel pins the round loop at the caller's level, merges " +
-    "bit-identical, every pinned generation released (r17)") {
+  test("train pins the round loop, merges match the reference, " +
+    "every pinned generation released") {
     val hist = Bpe.wordHistogram(corpusDf, "text")
-    val plain = Bpe.train(hist, 12, candidatesPerRound = 1)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val pinned = Bpe.train(hist, 12, candidatesPerRound = 1,
-      storageLevel = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    assert(pinned.merges === plain.merges, "persist must not change training")
+    val pinned = Bpe.train(hist, 12, candidatesPerRound = 1)
+    assert(pinned.merges === refTrain(corpus, 12), "pinning must not change training")
     // unpersist is async — poll for our generations to vanish
     val deadline = System.currentTimeMillis() + 5000
     while (spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty &&

@@ -130,37 +130,32 @@ class ClusteringSpec extends AnyFunSuite {
     assert(got(0L).isDefined && got(1L).isDefined && got(2L).isEmpty)
   }
 
-  test("storageLevel persists the quantized projection: ONE source scan " +
-    "for seed pass + all rounds, bit-identical model, cache released (r17)") {
+  test("kmeansTrain pins the quantized projection: ONE source scan " +
+    "for seed pass + all rounds, bit-identical model, pin released") {
     import spark.implicits._
     val n = 64
     val data = (0L until n).map(i => (i, Seq((i % 9).toFloat, (i % 5).toFloat)))
     // count every row READ from the source: passes × n. The accumulator
-    // rides a typed filter UNDER the quantized projection, so a cache hit
-    // on the projection skips it entirely.
+    // rides a typed filter UNDER the quantized projection, so a read of
+    // the pinned projection skips it entirely.
     val acc = spark.sparkContext.longAccumulator("source-rows-read")
     def counted = data.toDF("id", "v").filter { (_: org.apache.spark.sql.Row) =>
       acc.add(1); true
     }
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val plain = Clustering.kmeansTrain(counted, "v", "id", k = 3, iters = 3)
-    val uncachedReads = acc.value
-    assert(uncachedReads > n,
-      s"without persist the loop must re-scan (got $uncachedReads reads)")
-    acc.reset()
-    val cached = Clustering.kmeansTrain(counted, "v", "id", k = 3, iters = 3,
-      storageLevel = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pinned = Clustering.kmeansTrain(counted, "v", "id", k = 3, iters = 3)
     assert(acc.value === n,
-      s"with persist the source must be read exactly once (got ${acc.value})")
-    assert(cached.centroids === plain.centroids, "persist must not change results")
-    assert(cached.inertiaTrace === plain.inertiaTrace)
-    // the projection is unpersisted before returning — no leaked cache
+      s"the source must be read exactly once (got ${acc.value})")
+    val (_, expCents) = naive(data, k = 3, iters = 3, scale = 1024)
+    assert(pinned.centroids.map(_.toSeq) === expCents.map(_.toSeq),
+      "pinning must not change results")
+    // the projection is released before returning — no leaked pin
     // (unpersist is async: poll; other suites may own unrelated entries)
     val deadline = System.currentTimeMillis() + 5000
     while (spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "kmeansTrain must release its cache")
+      "kmeansTrain must release its pin")
   }
 
   test("k larger than the row count degrades to row count") {

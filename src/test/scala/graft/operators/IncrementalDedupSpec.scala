@@ -120,6 +120,27 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(idx.select("doc_id").distinct().collect().map(_.getLong(0)).toSet === expKept)
   }
 
+  test("ingest leaves only the returned dropped frame pinned") {
+    import spark.implicits._
+    val docs = corpus.toDF("doc_id", "text")
+    val cat = new graft.lake.LakeCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-incdedup-pins").toString)
+    val index = cat.createTable("dedup.pins", IndexSchema)
+    val sc = spark.sparkContext
+    for (batch <- Seq(0L until 30L, 30L until 60L)) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val res = IncrementalDedup.ingest(index, docs.filter(col("doc_id").isin(batch: _*)),
+        n = N, k = K, bands = Bands, threshold = Threshold)
+      val droppedRdd = res.dropped.queryExecution.logical match {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+        case p => fail(s"dropped must be a pinned leaf:\n$p")
+      }
+      assert(sc.getPersistentRDDs.keySet.toSet.diff(before) === Set(droppedRdd),
+        "the banded batch and the CC labels must be released")
+      assert(res.dropped.count() > 0L, "the seeded corpus drops duplicates in each batch")
+    }
+  }
+
   test("online contract: a chain split across batches keeps the far end") {
     import spark.implicits._
     // B's near-dups A (tail edit) and C (head edit) are similar to B but

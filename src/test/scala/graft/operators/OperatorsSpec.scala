@@ -468,6 +468,24 @@ class OperatorsSpec extends AnyFunSuite {
       (100L +: (2L to 10L by 2)).map(_ -> 2L)).toMap)
   }
 
+  test("distributed CC returns a fixed-size plan whatever the round count") {
+    // a chain's labels converge in diameter + 1 rounds; each round reads
+    // the previous round's labels twice, so an un-cut plan doubles per
+    // round. The returned plan must be as small after 10 rounds as after 3.
+    def chain(edges: Int) = spark.range(edges).selectExpr("id as id_a", "id + 1 as id_b")
+    def planNodes(df: DataFrame): Int = df.queryExecution.logical.collect { case n => n }.size
+    // the short chain first: an un-cut plan already fails here, before a
+    // 10-round loop could spend minutes planning a 2^10-fold tree
+    val short = Dedup.connectedComponents(chain(2), driverMaxEdges = 0)
+    assert(planNodes(short) <= 3,
+      s"the loop's plan must stay a leaf:\n${short.queryExecution.logical.treeString}")
+    val long = Dedup.connectedComponents(chain(9), driverMaxEdges = 0)
+    assert(long.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (0L to 9L).map(_ -> 0L).toMap)
+    assert(planNodes(long) === planNodes(short),
+      s"the loop's plan must not grow with rounds:\n${long.queryExecution.logical.treeString}")
+  }
+
   test("CC output schema is (long, long) on BOTH paths for int-typed ids") {
     import spark.implicits._
     import org.apache.spark.sql.types.LongType
@@ -563,6 +581,39 @@ class OperatorsSpec extends AnyFunSuite {
       s"anti join must read the checkpointed key set:\n$planStr")
     assert(!planStr.contains("HashAggregate"),
       s"eval distinct must not re-plan under the verify join:\n$planStr")
+  }
+
+  /** A 500-row corpus, every 7th document's fingerprint as the eval set. */
+  private def deconInputs = {
+    val corpus = spark.range(500).select(col("id").as("doc_id"),
+      concat(lit("doc content number "), col("id")).as("text"))
+    val eval = corpus.filter(col("doc_id") % 7 === 0).select(md5(col("text")).as("fp"))
+    (corpus, eval, md5(col("text")))
+  }
+
+  private def persistentRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("decontaminate: the pinned eval keys survive lost blocks — recomputed, not fatal") {
+    val (corpus, eval, key) = deconInputs
+    val before = persistentRddIds
+    val out = Decontaminate.decontaminate(corpus, eval, key, "fp")
+    val gained = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(gained.nonEmpty, "the distinct eval keys must be pinned")
+    // every stored block of the call is gone, as after an executor loss
+    gained.values.foreach(_.unpersist(blocking = true))
+    val exact = corpus.join(eval, key === col("fp"), "left_anti")
+    assert(out.count() === exact.count())
+    assert(out.exceptAll(exact).isEmpty && exact.exceptAll(out).isEmpty,
+      "a lost pinned block must be recomputed from its lineage")
+  }
+
+  test("decontaminate with an empty eval set leaves nothing pinned") {
+    val (corpus, eval, key) = deconInputs
+    val before = persistentRddIds
+    val none = Decontaminate.decontaminate(corpus, eval.limit(0), key, "fp")
+    assert(persistentRddIds.diff(before).isEmpty,
+      "the early return must release the key set it pinned")
+    assert(none.count() === 500L)
   }
 
   test("bloom build never collects eval rows: filter bytes bounded") {
