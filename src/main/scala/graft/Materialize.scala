@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
@@ -35,9 +35,18 @@ object Materialize {
   /** Names the pinned RDDs, so [[release]] never drops someone else's. */
   private val Name = "graft.Materialize"
 
-  /** `df` pinned behind a leaf plan (see the object doc). */
-  def apply(df: DataFrame): DataFrame =
-    ColumnBridge.leaf(df, df.queryExecution.toRdd.map(_.copy()).setName(Name).persist(Level))
+  /** `df` pinned behind a leaf plan (see the object doc). Outside any SQL
+    * execution, the shuffle stages pinning runs belong to an execution of
+    * their own ("materialize"); inside one (a MERGE command) they belong
+    * to it. */
+  def apply(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rows =
+      if (df.sparkSession.sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY) != null)
+        qe.toRdd
+      else SQLExecution.withNewExecutionId(qe, Some("materialize"))(qe.toRdd)
+    ColumnBridge.leaf(df, rows.map(_.copy()).setName(Name).persist(Level))
+  }
 
   /** Drops the stored rows of frames [[apply]] returned; a later read
     * recomputes them. A no-op on any other frame. */

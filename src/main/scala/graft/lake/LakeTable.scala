@@ -299,7 +299,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val branch = resolveWriteBranch(toBranch)
     val staged = wapId.isDefined &&
       m0.properties.get("write.wap.enabled").contains("true") && toBranch.isEmpty
-    (branch, staged, m0.snapshotFor(branch).orElse(m0.currentSnapshot))
+    (branch, staged, m0.branchHead(branch))
   }
 
   // ---- write path ----------------------------------------------------------
@@ -629,7 +629,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val bloomBundle = BloomSkip.buildBundleFor(spark, metaStore, m0, newFiles)
     commit { m =>
       requireIdentityUnmoved(m, idPlan)
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
+      val parent = m.branchHead(branch)
       val summary = Map(
         "added-data-files" -> newFiles.size.toString,
         "added-records" -> newFiles.map(_.rowCount).sum.toString) ++
@@ -1709,7 +1709,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       "added-records" -> newFiles.map(_.rowCount).sum.toString)
     if (staged) commit { m =>
       requireIdentityUnmoved(m, idPlan)
-      m.withSnapshot(branch, m.snapshotFor(branch).orElse(m.currentSnapshot), "overwrite",
+      m.withSnapshot(branch, m.branchHead(branch), "overwrite",
         summary ++ wapId.map("wap.id" -> _), newFiles, staged = true, properties = idProps)
     } else commitReplace(branch, newFiles, "overwrite", summary, base = base, strict = true,
       identityPlan = idPlan, identityProps = idProps)
@@ -1770,7 +1770,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       extraSummary ++ bloomBundle.map(BloomSkip.BundleSummaryKey -> _)
     commit { m =>
       requireIdentityUnmoved(m, identityPlan)
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
+      val parent = m.branchHead(branch)
       val reconciled =
         if (parent.map(_.snapshotId) == base.map(_.snapshotId)) files
         else {
@@ -2534,7 +2534,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     where.foreach(w => return rewriteWhere(targetSizeBytes, sortBy, zorderBy, w))
     val m0 = meta
     val branch = resolveWriteBranch(None)
-    val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val baseSnap = m0.branchHead(branch)
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
     if (files.isEmpty) return m0
     // live read: compaction APPLIES merge-on-read position deletes — the
@@ -2596,7 +2596,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
                                summary: Map[String, String]): TableMeta = {
     val selectedPaths = selected.map(_.path).toSet
     commit { m =>
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot).getOrElse(
+      val parent = m.branchHead(branch).getOrElse(
         throw CommitConflictException(s"$label: table emptied concurrently — re-plan"))
       if (!selectedPaths.subsetOf(parent.files.map(_.path).toSet))
         throw CommitConflictException(
@@ -2631,7 +2631,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
                            zorderBy: Seq[String], where: Column): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
-    val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val baseSnap = m0.branchHead(branch)
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
     if (files.isEmpty) return m0
     val masked = carriesMask(baseSnap)
@@ -2674,7 +2674,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       if (minInputSizeBytes > 0) minInputSizeBytes else targetSizeBytes * 3 / 4
     val m0 = meta
     val branch = resolveWriteBranch(None)
-    val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val baseSnap = m0.branchHead(branch)
     val masked = carriesMask(baseSnap)
     // partitionFilter is keyed by the LOGICAL partition source column
     // (user-facing); file partitionValues are keyed by the spec field's
@@ -2896,7 +2896,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def rewritePositionDeletes(): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
-    val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val baseSnap = m0.branchHead(branch)
     val dels = baseSnap.map(_.deleteFiles).getOrElse(Seq.empty)
     val eqDels = baseSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
     if (dels.isEmpty && eqDels.isEmpty) return m0
@@ -2937,7 +2937,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def convertEqualityDeletes(): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
-    val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val baseSnap = m0.branchHead(branch)
     val eqDels = baseSnap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
     if (eqDels.isEmpty) return m0
     val files = baseSnap.map(_.files).getOrElse(Seq.empty)
@@ -2946,7 +2946,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       if (candidates.isEmpty) Seq.empty
       else writeDeleteFiles(equalityKilled(m0, baseSnap, candidates, eqDels))
     commit { m =>
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
+      val parent = m.branchHead(branch)
       if (parent.map(_.snapshotId) != baseSnap.map(_.snapshotId))
         throw CommitConflictException(
           "convert_equality_deletes planned against a snapshot that moved — retry")
@@ -2989,7 +2989,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   def rewriteDeleteFiles(): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
-    val baseSnap = m0.snapshotFor(branch).orElse(m0.currentSnapshot)
+    val baseSnap = m0.branchHead(branch)
     val dels = baseSnap.map(_.deleteFiles).getOrElse(Seq.empty)
     if (dels.size <= 1) return m0
     // prune to LIVE data files before merging: the raw parquet entries may
@@ -3006,7 +3006,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val merged = writeDeleteFiles(
       deleteEntriesDf(dels).join(liveDf, Seq("_gd_file"), "left_semi"))
     commit { m =>
-      val parent = m.snapshotFor(branch).orElse(m.currentSnapshot)
+      val parent = m.branchHead(branch)
       if (parent.map(_.snapshotId) != baseSnap.map(_.snapshotId))
         throw CommitConflictException(
           "rewrite_delete_files planned against a snapshot that moved — retry")
@@ -3057,7 +3057,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       .getOrElse(return m0)
     commit { m =>
       val branch = resolveWriteBranch(None)
-      m.snapshotFor(branch).orElse(m.currentSnapshot) match {
+      m.branchHead(branch) match {
         case None => m
         case Some(snap) =>
           m.withSnapshot(branch, Some(snap), "rewrite-blooms", Map(
@@ -3071,7 +3071,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
 
   def rewriteManifests(): TableMeta = commit { m =>
     val branch = resolveWriteBranch(None)
-    m.snapshotFor(branch).orElse(m.currentSnapshot) match {
+    m.branchHead(branch) match {
       case None => m
       case Some(snap) =>
         val (names, fresh) =
@@ -3145,100 +3145,6 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       }
     }
     orphans.toSeq
-  }
-
-  /** Exact MIN/MAX of an integer-domain column (int family, date = epoch
-    * days, timestamp = epoch micros) computed purely from file stats for
-    * `snap`: Some((min, max)) when EVERY data-bearing file carries
-    * decodable bounds for the column (the inner Options are None when the
-    * column is null in every row); None → stats can't vouch (missing
-    * bounds, non-integer written type) and the caller must scan. Float/
-    * double/decimal/string columns always return None: their stat
-    * encodings are pruning-safe but not guaranteed value-exact. */
-  def statsMinMax(snap: Snapshot, colName: String): Option[(Option[Long], Option[Long])] = {
-    // merge-on-read deletes (positional or equality) make footer bounds
-    // over-approximate (the extreme row may be deleted) — stats can prune
-    // but not vouch
-    if (snap.deleteFiles.nonEmpty || snap.eqDeleteFiles.nonEmpty) return None
-    statsMinMaxOver(meta, snap.files, colName)
-  }
-
-  /** [[statsMinMax]]'s per-file-set core (no delete check — the caller
-    * owns that): exact MIN/MAX over exactly `files`, used both table-wide
-    * and per identity-partition group (GraftTable.metadataGroupedAgg). */
-  private[lake] def statsMinMaxOver(m: TableMeta, files: Seq[DataFile],
-                                    colName: String): Option[(Option[Long], Option[Long])] = {
-    def intFamily(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-           TimestampType | TimestampNTZType => true
-      case _ => false
-    }
-    val cur = m.schema.byName(colName).orNull
-    if (cur == null || !intFamily(cur.sparkType)) return None
-    var lo = Option.empty[Long]
-    var hi = Option.empty[Long]
-    val it = files.iterator
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.rowCount > 0) {
-        val written = m.schemas.find(_.schemaId == f.schemaId).getOrElse(m.schema)
-        val wcol = written.byId(cur.id).orNull
-        if (wcol == null) {
-          // column added after this file was written: rows read the
-          // frozen exists-default — NULL contributes nothing, but a
-          // non-null default makes footer-derived bounds wrong, so stats
-          // can't vouch (the scan fills it via the read mapping)
-          if (cur.existsDefaultSql.exists(_.trim.toUpperCase != "NULL")) return None
-        } else if (!intFamily(wcol.sparkType)) return None
-        else f.stats.get(wcol.physicalName) match {
-          case Some(st) => (st.min, st.max) match {
-            case (Some(mn), Some(mx)) =>
-              val l = mn.toLong; val h = mx.toLong
-              lo = Some(lo.fold(l)(math.min(_, l)))
-              hi = Some(hi.fold(h)(math.max(_, h)))
-            case (None, None) if st.nullCount >= f.rowCount => () // all-null file
-            case _ => return None // bounds not collected — can't vouch
-          }
-          case None => return None
-        }
-      }
-    }
-    Some((lo, hi))
-  }
-
-  /** Exact COUNT(col) — non-null row count — over exactly `files`, purely
-    * from footer null counts. Trust discipline per file: decoded bounds
-    * imply every block set its null count (Stats.fromFooter drops bounds
-    * otherwise), and an all-null column proves itself by nullCount ≥
-    * rowCount; anything else declines. Unlike MIN/MAX this holds for ANY
-    * top-level primitive column (bounds are used as a trust proof, not a
-    * value), but like MIN/MAX the caller must reject merge-on-read masks
-    * (deleted rows have unknown null distribution). */
-  private[lake] def statsCountColOver(m: TableMeta, files: Seq[DataFile],
-                                      colName: String): Option[Long] = {
-    val cur = m.schema.byName(colName).orNull
-    if (cur == null) return None
-    var total = 0L
-    val it = files.iterator
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.rowCount > 0) {
-        val written = m.schemas.find(_.schemaId == f.schemaId).getOrElse(m.schema)
-        val wcol = written.byId(cur.id).orNull
-        if (wcol == null) {
-          // rows read the frozen exists-default: a literal NULL adds
-          // nothing; any other SQL would need evaluating — decline
-          if (cur.existsDefaultSql.exists(_.trim.toUpperCase != "NULL"))
-            return None
-        } else f.stats.get(wcol.physicalName) match {
-          case Some(st) if st.min.isDefined || st.max.isDefined =>
-            total += f.rowCount - st.nullCount
-          case Some(st) if st.nullCount >= f.rowCount => () // all-null file
-          case _ => return None // null count not provably exact
-        }
-      }
-    }
-    Some(total)
   }
 
   /** Incremental batch read: rows ADDED strictly after `fromSnapshotId`

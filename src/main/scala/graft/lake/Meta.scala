@@ -289,6 +289,10 @@ final case class TableMeta(
     refs.get(LakeTable.MainBranch).flatMap(r => snapshot(r.snapshotId))
   def snapshotFor(branch: String): Option[Snapshot] =
     refs.get(branch).flatMap(r => snapshot(r.snapshotId))
+  /** The snapshot a write to `branch` builds on: the branch's head, or
+    * the current snapshot while the branch does not exist yet. */
+  def branchHead(branch: String): Option[Snapshot] =
+    snapshotFor(branch).orElse(currentSnapshot)
 
   /** Id of the next minted snapshot: commits stamp the files and equality
     * deletes they add with it before calling [[withSnapshot]]. */

@@ -1,7 +1,7 @@
 package graft.lake.dsv2
 
+import graft.lake.MetaAggregate.{Agg, CountOf, CountStar, GroupKey, MaxOf, MinOf}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -20,13 +20,13 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * SupportsWrite, DELETE needs SupportsDelete), so those relations are
   * excluded by reference identity.
   *
-  * Also rewrites unfiltered, ungrouped COUNT(*) / MIN(col) / MAX(col)
-  * over a graft relation to a metadata lookup (snapshot row counts and
-  * integer-domain column bounds from parquet footers) — zero data files
-  * touched, any table size. Filters, grouping, DISTINCT, null-sensitive
-  * COUNT(col), and columns the stats layer can't vouch for (float/
-  * double/decimal/string, missing bounds) all fall through to the
-  * normal scan.
+  * Also answers an unfiltered aggregate over a graft relation from
+  * snapshot metadata — zero data files touched, any table size: one
+  * Aggregate case, ungrouped or grouped by a single column, whose outputs
+  * are all COUNT(*), COUNT(col), MIN(col), MAX(col) or the group column,
+  * goes to [[GraftTable.metadataAggregate]]. Which of those metadata can
+  * answer exactly is [[graft.lake.MetaAggregate]]'s decision; anything it
+  * declines, and filters, DISTINCT or other shapes, scan normally.
   */
 case class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -55,14 +55,9 @@ case class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case m: MergeIntoTable => addTarget(m.targetTable)
       case _ => ()
     }
-    // metadata-only COUNT(*): an unfiltered, ungrouped count over a graft
-    // relation reads the answer from snapshot metadata (footer row counts)
-    // instead of scanning data files — the lakehouse classic. Pre-pass
-    // (transformDown) because the transformUp below substitutes the
-    // relation out from under the Aggregate before it would match.
-    // child must be exactly the relation, optionally behind aliases or an
-    // attribute-only Project — any Filter/Generate/… breaks the match and
-    // the count scans normally
+    // the aggregate's child must be exactly the relation, optionally
+    // behind aliases or an attribute-only Project — any Filter/Generate/…
+    // breaks the match and the aggregate scans normally
     def unwrapScan(p: LogicalPlan): Option[(DataSourceV2Relation, GraftTable)] = p match {
       case SubqueryAlias(_, c) => unwrapScan(c)
       case Project(projectList, c) if projectList.forall(_.isInstanceOf[AttributeReference]) =>
@@ -73,15 +68,10 @@ case class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
       case _ => None
     }
-    // metadata-answerable aggregate shapes: COUNT(*), and MIN/MAX of a
-    // plain column (the stats layer vouches only for integer-domain
-    // columns — metadataMinMax returns None otherwise and the scan runs)
-    sealed trait MetaAgg
-    case object CountStar extends MetaAgg
-    case class CountOf(col: String) extends MetaAgg
-    case class MinOf(col: String) extends MetaAgg
-    case class MaxOf(col: String) extends MetaAgg
-    def classify(e: Expression): Option[MetaAgg] = e match {
+    // one output column of a metadata-answerable aggregate, or None
+    def classify(e: Expression, group: Option[AttributeReference]): Option[Agg] = e match {
+      case a: AttributeReference if group.exists(_.exprId == a.exprId) => Some(GroupKey)
+      case Alias(a: AttributeReference, _) => classify(a, group)
       case Alias(ae: AggregateExpression, _) if !ae.isDistinct && ae.filter.isEmpty =>
         ae.aggregateFunction match {
           case Count(Seq(Literal(1, _))) => Some(CountStar)
@@ -92,91 +82,28 @@ case class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case _ => None
     }
-    def toTableAgg(a: MetaAgg): GraftTable.MetaAgg = a match {
-      case CountStar => GraftTable.MetaCountStar
-      case CountOf(c) => GraftTable.MetaCountCol(c)
-      case MinOf(c) => GraftTable.MetaMin(c)
-      case MaxOf(c) => GraftTable.MetaMax(c)
-    }
-    // internal value for a stats bound in the agg output's type domain
-    def internal(v: Long, dt: org.apache.spark.sql.types.DataType): Any = dt match {
-      case org.apache.spark.sql.types.ByteType => v.toByte
-      case org.apache.spark.sql.types.ShortType => v.toShort
-      case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.DateType => v.toInt
-      case _ => v // LongType, TimestampType (micros), TimestampNTZType
-    }
     // materialized-view routing pre-pass: an aggregate a maintained MV
     // already answers reads the (fresh) view state instead of scanning
     // the base — see GraftMvRoute for the match/freshness contract. Runs
-    // before the metadata-count pass (a routed plan has no relation left
-    // for it) and leaves non-matching aggregates untouched for it.
+    // before the metadata pass (a routed plan has no relation left for
+    // it) and leaves non-matching aggregates untouched for it.
     val routed = plan.transformDown {
       case agg: Aggregate =>
         GraftMvRoute.route(spark, agg, unwrapScan, writeTargets.contains)
           .getOrElse(agg)
     }
+    // metadata-only aggregates (the scaladoc above). Pre-pass
+    // (transformDown) because the transformUp below substitutes the
+    // relation out from under the Aggregate before it would match.
     val counted = routed.transformDown {
-      // metadata-only GROUP BY partition-column aggregation: a grouped
-      // COUNT(*) / COUNT(col) / MIN(col) / MAX(col) keyed by an IDENTITY
-      // partition column reads the answer from the per-file partition
-      // values + footer stats (the `partitions` metadata table as a query
-      // plan) — zero data files at any table size. COUNT(*) stays exact
-      // under merge-on-read POSITION deletes (per-file masked counts
-      // subtract); everything else bails (→ normal scan) under any mask,
-      // partition evolution gaps, non-identity transforms, or stats that
-      // can't vouch (GraftTable.metadataGroupedAgg).
-      case agg @ Aggregate(Seq(g: AttributeReference), aggExprs, child, _)
-          if agg.resolved && aggExprs.nonEmpty && aggExprs.forall {
-            case a: AttributeReference => a.exprId == g.exprId
-            case Alias(a: AttributeReference, _) => a.exprId == g.exprId
-            case e => classify(e).isDefined
-          } =>
+      case agg @ Aggregate(groupings @ (Seq() | Seq(_: AttributeReference)), aggExprs, child, _)
+          if agg.resolved && aggExprs.nonEmpty =>
+        val group = groupings.headOption.collect { case g: AttributeReference => g }
+        val aggs = aggExprs.map(classify(_, group))
         unwrapScan(child) match {
-          case Some((r, gt)) if !writeTargets.contains(r) =>
-            val aggOnly = aggExprs.flatMap(classify(_))
-            gt.metadataGroupedAgg(g.name, aggOnly.map(toTableAgg)) match {
-              case Some(rows) =>
-                LocalRelation(agg.output.map(_.toAttribute), rows.map {
-                  case (v, vals) =>
-                    var i = -1
-                    InternalRow.fromSeq(aggExprs.map {
-                      case _: AttributeReference => v
-                      case Alias(_: AttributeReference, _) => v
-                      case e =>
-                        i += 1
-                        (classify(e).get, vals(i)) match {
-                          case (CountStar | CountOf(_), n: java.lang.Long) =>
-                            n.longValue()
-                          case (_, bound: Option[_]) => bound
-                            .map(b => internal(b.asInstanceOf[Long], e.dataType))
-                            .orNull
-                          case (_, other) => other
-                        }
-                    })
-                })
-              case None => agg
-            }
-          case _ => agg
-        }
-      case agg @ Aggregate(groupings, aggExprs, child, _)
-          if agg.resolved && groupings.isEmpty && aggExprs.nonEmpty &&
-            aggExprs.forall(e => classify(e).isDefined) =>
-        unwrapScan(child) match {
-          case Some((r, gt)) if !writeTargets.contains(r) =>
-            val answered = aggExprs.map { e =>
-              classify(e).get match {
-                case CountStar => gt.metadataRowCount
-                case CountOf(c) => gt.metadataCountCol(c)
-                case MinOf(c) => gt.metadataMinMax(c).map(mm =>
-                  mm._1.map(internal(_, e.dataType)).orNull)
-                case MaxOf(c) => gt.metadataMinMax(c).map(mm =>
-                  mm._2.map(internal(_, e.dataType)).orNull)
-              }
-            }
-            if (answered.forall(_.isDefined))
-              LocalRelation(agg.output.map(_.toAttribute),
-                Seq(InternalRow.fromSeq(answered.map(_.get))))
-            else agg
+          case Some((r, gt)) if !writeTargets.contains(r) && aggs.forall(_.isDefined) =>
+            gt.metadataAggregate(group.map(_.name), aggs.flatten)
+              .fold[LogicalPlan](agg)(LocalRelation(agg.output.map(_.toAttribute), _))
           case _ => agg
         }
     }

@@ -102,7 +102,7 @@ object GraftSpj {
   /** Internal (InternalRow) value of one partition-field cell from its
     * string-encoded metadata value. Bucket ordinals are Int; identity
     * values are typed per source; Hive's null marker maps to null. */
-  private[dsv2] def internalKeyValue(transform: String, srcType: DataType,
+  private[lake] def internalKeyValue(transform: String, srcType: DataType,
                                      raw: String): Option[Any] =
     scala.util.Try {
       transform match {

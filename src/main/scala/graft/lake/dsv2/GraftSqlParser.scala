@@ -387,18 +387,8 @@ case class BranchDdlCommand(nameParts: Seq[String], op: String, ref: String,
                             ifExists: Boolean = false) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val cm = spark.sessionState.catalogManager
-    val (cat, tableParts) = nameParts match {
-      case head +: rest if rest.nonEmpty && cm.isCatalogRegistered(head) =>
-        (cm.catalog(head), rest)
-      case _ => (cm.currentCatalog, nameParts)
-    }
-    val gc = cat match {
-      case g: GraftCatalog => g
-      case other => throw new UnsupportedOperationException(
-        s"branch DDL requires a graft catalog, got '${other.name}'")
-    }
-    val t = gc.lake.loadTable(tableParts.mkString("."))
+    val (gc, ident) = GraftDdlResolve(spark, nameParts, "branch DDL")
+    val t = gc.lake.loadTable(ident)
     op match {
       case "create_branch" => t.createBranch(ref, snapshotId, ifNotExists)
       case "drop_branch" => t.dropBranch(ref, ifExists)
@@ -418,18 +408,8 @@ case class PartitionFieldDdlCommand(nameParts: Seq[String], add: Boolean,
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val cm = spark.sessionState.catalogManager
-    val (cat, tableParts) = nameParts match {
-      case head +: rest if rest.nonEmpty && cm.isCatalogRegistered(head) =>
-        (cm.catalog(head), rest)
-      case _ => (cm.currentCatalog, nameParts)
-    }
-    val gc = cat match {
-      case g: GraftCatalog => g
-      case other => throw new UnsupportedOperationException(
-        s"partition-field DDL requires a graft catalog, got '${other.name}'")
-    }
-    val t = gc.lake.loadTable(tableParts.mkString("."))
+    val (gc, ident) = GraftDdlResolve(spark, nameParts, "partition-field DDL")
+    val t = gc.lake.loadTable(ident)
     val m = t.meta
     val current: Seq[(String, String)] = m.partitionSpecs
       .find(_.specId == m.defaultSpecId).map(_.fields).getOrElse(Seq.empty)
@@ -459,26 +439,14 @@ case class ShallowCloneCommand(dstParts: Seq[String], srcParts: Seq[String],
     extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val cm = spark.sessionState.catalogManager
-    def resolve(parts: Seq[String]) = parts match {
-      case head +: rest if rest.nonEmpty && cm.isCatalogRegistered(head) =>
-        (cm.catalog(head), rest)
-      case _ => (cm.currentCatalog, parts)
-    }
-    val (dcat, dparts) = resolve(dstParts)
-    val (scat, sparts) = resolve(srcParts)
-    val gc = dcat match {
-      case g: GraftCatalog => g
-      case other => throw new UnsupportedOperationException(
-        s"SHALLOW CLONE requires a graft catalog, got '${other.name}'")
-    }
-    require(scat eq dcat,
+    val (gc, dst) = GraftDdlResolve(spark, dstParts, "SHALLOW CLONE")
+    val (sgc, src) = GraftDdlResolve(spark, srcParts, "SHALLOW CLONE")
+    require(sgc eq gc,
       s"SHALLOW CLONE source and destination must live in the same " +
-        s"catalog (got '${scat.name}' and '${dcat.name}') — the clone's " +
+        s"catalog (got '${sgc.name}' and '${gc.name}') — the clone's " +
         "GC registration must be visible to the source's expire/orphan " +
         "sweeps")
-    gc.lake.cloneTable(sparts.mkString("."), dparts.mkString("."),
-      asOfSnapshotId)
+    gc.lake.cloneTable(src, dst, asOfSnapshotId)
     Seq.empty
   }
 }

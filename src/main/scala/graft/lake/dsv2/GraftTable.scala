@@ -1,8 +1,9 @@
 package graft.lake.dsv2
 
-import graft.lake.{LakeTable, MetadataTables}
+import graft.lake.{LakeTable, MetaAggregate, MetadataTables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
@@ -129,149 +130,18 @@ case class GraftTable(
         graft.lake.MaterializedAgg.presentState(raw, g, a) }
   }
 
-  /** Exact row count from snapshot metadata (parquet-footer counts summed
-    * over the resolved snapshot's files) — same snapshot resolution as
-    * [[readDataFrame]], so time travel and WAP routing hold. None for
-    * metadata tables. Lets COUNT(*) answer without touching data files. */
-  def metadataRowCount: Option[Long] = metaKind match {
-    // MV presentation is a pure projection (one view row per state row),
-    // so the metadata count stays exact for it too
-    case Some(_) => None
-    case None =>
-      lakeTable.resolveSnapshot(effectiveSnapshotId, effectiveBranch, pinnedTimestampMs) match {
-        // equality deletes mask an unknowable row count (a key may hit 0..n
-        // rows) — only a scan can answer
-        case Some(s) if s.eqDeleteFiles.nonEmpty => None
-        // merge-on-read position deletes subtract EXACTLY: commit-time
-        // pruning keeps delete counts scoped to live files only
-        case Some(s) => Some(s.liveRecords)
-        case None => Some(0L)
-      }
-  }
-
-  /** Exact per-value row counts of an IDENTITY-partitioned column, purely
-    * from snapshot metadata — `GROUP BY part_col → COUNT(*)` without
-    * touching a data file (the `partitions` metadata table as a query
-    * fast path). Some(values) only when EVERY file's spec identity-
-    * partitions this column AND the file carries a decodable value; None
-    * (→ scan) under any merge-on-read mask, a partition-evolved file
-    * missing the field, or a non-identity transform. Internal values
-    * (UTF8String etc.) — ready for a LocalRelation. */
-  def metadataPartitionCounts(colName: String): Option[Seq[(Any, Long)]] =
-    metadataGroupedAgg(colName, Seq(GraftTable.MetaCountStar)).map(_.map {
-      case (v, Seq(n: java.lang.Long)) => (v, n.longValue())
-      case (v, other) => (v, other.head.asInstanceOf[Long])
-    })
-
-  /** Grouped metadata aggregation by an IDENTITY-partitioned column:
-    * `GROUP BY part_col → COUNT(*) / COUNT(col) / MIN(col) / MAX(col)`
-    * without touching a data file. Per group: COUNT(*) is exact even
-    * under merge-on-read POSITION deletes (per-file masked counts are
-    * exact metadata and subtract — the same argument as
-    * [[metadataRowCount]]); COUNT(col) and MIN/MAX require an unmasked
-    * snapshot and per-file stats that can vouch
-    * ([[graft.lake.LakeTable.statsCountColOver]] /
-    * [[graft.lake.LakeTable.statsMinMaxOver]]). Returns internal values
-    * ready for a LocalRelation — COUNT slots are java.lang.Long, MIN/MAX
-    * slots are Option[Long] (None = null, the all-null group); any
-    * decline anywhere → None → the caller scans. Equality deletes,
-    * partition-evolution gaps, and non-identity transforms always
-    * decline. */
-  def metadataGroupedAgg(groupCol: String,
-                         aggs: Seq[GraftTable.MetaAgg]): Option[Seq[(Any, Seq[Any])]] = metaKind match {
-    case Some(_) => None
-    case None =>
-      val m = lakeTable.meta
-      lakeTable.resolveSnapshot(effectiveSnapshotId, effectiveBranch, pinnedTimestampMs) match {
-        case None => Some(Seq.empty)
-        case Some(s) if s.eqDeleteFiles.nonEmpty => None
-        // position deletes: exact for COUNT(*), opaque for null counts and
-        // bounds (the masked rows' values are unknowable from metadata)
-        case Some(s) if s.deleteFiles.nonEmpty &&
-            aggs.exists(_ != GraftTable.MetaCountStar) => None
-        case Some(s) =>
-          m.schema.byName(groupCol).flatMap { c =>
-            val groups = scala.collection.mutable.LinkedHashMap[Any, Vector[graft.lake.DataFile]]()
-            // zero-row files contribute no group — including them would
-            // fabricate a (value, 0) row a real scan never produces
-            val ok = s.files.filter(_.rowCount > 0).forall { f =>
-              val pf = m.partitionSpecs.find(_.specId == f.specId)
-                .flatMap(_.fields.find(p =>
-                  p.sourceId == c.id && p.transform == "identity"))
-              pf.flatMap(p => f.partitionValues.get(p.physicalName))
-                .flatMap(raw =>
-                  GraftSpj.internalKeyValue("identity", c.sparkType, raw)) match {
-                case Some(v) =>
-                  groups(v) = groups.getOrElse(v, Vector.empty) :+ f; true
-                case None => false
-              }
-            }
-            if (!ok) return None
-            val deleted: Map[String, Long] = s.deleteFiles
-              .flatMap(_.counts).groupMapReduce(_._1)(_._2)(_ + _)
-            def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
-            val rows = groups.toSeq.map { case (v, files) =>
-              val vals = aggs.map {
-                case GraftTable.MetaCountStar =>
-                  val n = files.map(f =>
-                    f.rowCount - deleted.getOrElse(name(f.path), 0L)).sum
-                  java.lang.Long.valueOf(n): Any
-                case GraftTable.MetaCountCol(col) =>
-                  lakeTable.statsCountColOver(m, files, col) match {
-                    case Some(n) => java.lang.Long.valueOf(n): Any
-                    case None => return None
-                  }
-                case GraftTable.MetaMin(col) =>
-                  lakeTable.statsMinMaxOver(m, files, col) match {
-                    case Some((lo, _)) => lo: Any
-                    case None => return None
-                  }
-                case GraftTable.MetaMax(col) =>
-                  lakeTable.statsMinMaxOver(m, files, col) match {
-                    case Some((_, hi)) => hi: Any
-                    case None => return None
-                  }
-              }
-              (v, vals)
-            }
-            // a group whose every row was position-deleted would still
-            // list here — but a real scan produces no such group: drop it
-            // (COUNT(*) = 0 can only arise via deletes, where it is the
-            // only allowed aggregate)
-            Some(rows.filterNot { case (_, vals) =>
-              aggs.zip(vals).exists {
-                case (GraftTable.MetaCountStar, n: java.lang.Long) =>
-                  n.longValue() == 0L
-                case _ => false
-              }
-            })
-          }
-      }
-  }
-
-  /** Exact COUNT(col) (non-null rows) from footer null counts; None under
-    * any merge-on-read mask or when a file's stats can't vouch. */
-  def metadataCountCol(colName: String): Option[Long] = metaKind match {
-    case Some(_) => None
-    case None =>
-      lakeTable.resolveSnapshot(effectiveSnapshotId, effectiveBranch, pinnedTimestampMs) match {
-        case None => Some(0L)
-        case Some(s) if s.deleteFiles.nonEmpty || s.eqDeleteFiles.nonEmpty => None
-        case Some(s) => lakeTable.statsCountColOver(lakeTable.meta, s.files, colName)
-      }
-  }
-
-  /** Exact MIN/MAX of an integer-domain column from file stats (same
-    * snapshot resolution as reads); inner Nones = all-null column, outer
-    * None = stats can't vouch and the caller must scan. */
-  def metadataMinMax(colName: String): Option[(Option[Long], Option[Long])] = metaKind match {
-    case Some(_) => None
-    case None =>
-      lakeTable.resolveSnapshot(effectiveSnapshotId, effectiveBranch, pinnedTimestampMs) match {
-        case Some(s) => lakeTable.statsMinMax(s, colName)
-        case None => Some((None, None)) // empty table: MIN/MAX are null
-      }
-  }
+  /** The rows of a metadata-only aggregate over this table
+    * ([[graft.lake.MetaAggregate]]), against the snapshot reads resolve —
+    * time travel, WAP and transaction read pins hold. None (→ scan) for
+    * metadata tables and whenever metadata cannot answer exactly. An MV
+    * state table's presentation is one view row per state row, so its
+    * counts and pass-through columns answer as the state's. */
+  def metadataAggregate(groupBy: Option[String],
+                        aggs: Seq[MetaAggregate.Agg]): Option[Seq[InternalRow]] =
+    if (metaKind.isDefined) None
+    else MetaAggregate(lakeTable.meta,
+      lakeTable.resolveSnapshot(effectiveSnapshotId, effectiveBranch, pinnedTimestampMs),
+      groupBy, aggs)
 
   override def partitioning(): Array[Transform] = {
     val m = lakeTable.meta
@@ -478,14 +348,4 @@ case class GraftTable(
     case AlwaysFalse() => Some(lit(false))
     case _ => None
   }
-}
-
-object GraftTable {
-  /** Aggregate shapes [[GraftTable.metadataGroupedAgg]] can serve from
-    * snapshot metadata (see [[GraftReadRule]]'s classification). */
-  sealed trait MetaAgg
-  case object MetaCountStar extends MetaAgg
-  final case class MetaCountCol(col: String) extends MetaAgg
-  final case class MetaMin(col: String) extends MetaAgg
-  final case class MetaMax(col: String) extends MetaAgg
 }

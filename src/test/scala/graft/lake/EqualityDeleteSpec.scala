@@ -97,13 +97,15 @@ class EqualityDeleteSpec extends AnyFunSuite {
     t.mergeByKey("id", Seq[Any](3L), rows(3L -> "c2"))
     val masked = t.meta.currentSnapshot.get
     assert(masked.eqDeleteFiles.nonEmpty)
-    assert(t.statsMinMax(masked, "id") === None,
+    assert(MetaAggregate(t.meta, Some(masked), None,
+      Seq(MetaAggregate.MinOf("id"), MetaAggregate.MaxOf("id"))) === None,
       "stats cannot vouch for MIN/MAX under an equality mask")
     assert(t.toDF.count() === 3)
     t.rewritePositionDeletes()
     val clean = t.meta.currentSnapshot.get
     assert(clean.eqDeleteFiles.isEmpty)
-    assert(t.statsMinMax(clean, "id") === Some((Some(1L), Some(3L))))
+    assert(MetaAggregate(t.meta, Some(clean), None, Seq(MetaAggregate.MinOf("id"),
+      MetaAggregate.MaxOf("id"))).map(_.map(r => (r.getLong(0), r.getLong(1)))) === Some(Seq((1L, 3L))))
     assert(contents(t) === Set(1L -> "a1", 2L -> "b1", 3L -> "c2"))
   }
 

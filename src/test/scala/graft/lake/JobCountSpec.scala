@@ -198,6 +198,10 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
       Decontaminate.decontaminate(corpus, eval, md5(col("text")), "fp").collect().length)
     assert(n === 2000 - 286)
     assertJobs(jobs, 5, "a decontaminate call and its read")
+    // pinning the eval keys runs its shuffle stages as a SQL execution of
+    // its own, so no job is one of no query
+    assert(jobs.jobs.forall(_.executionId.isDefined),
+      s"every job must belong to a SQL execution:\n${jobs.report}")
   }
 
   // The distributed min-label loop, round by round: the neighbor join and

@@ -162,7 +162,8 @@ class MorDeleteSpec extends AnyFunSuite {
     assert((after -- before).size === 1)
     assert(ids(t.toDF) === (0L until 30L).filterNot(_ == 12))
     // stats fast path restored
-    assert(t.statsMinMax(snap, "id") === Some((Some(0L), Some(29L))))
+    assert(MetaAggregate(t.meta, Some(snap), None, Seq(MetaAggregate.MinOf("id"),
+      MetaAggregate.MaxOf("id"))).map(_.map(r => (r.getLong(0), r.getLong(1)))) === Some(Seq((0L, 29L))))
     // idempotent: empty delete set → no commit
     val v = t.meta.version
     t.rewritePositionDeletes()

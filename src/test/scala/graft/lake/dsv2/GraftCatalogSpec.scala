@@ -1491,6 +1491,26 @@ class GraftCatalogSpec extends AnyFunSuite {
       Seq((null, 1L), ("a", 2L), ("b", 2L)))
   }
 
+  test("GROUP BY identity-partition column drops a group whose rows were all position-deleted") {
+    // group-only: no COUNT(*) among the outputs, yet a partition whose
+    // every row is masked must not list — the scan never produces it
+    sql("CREATE DATABASE IF NOT EXISTS lake.db")
+    sql("""CREATE TABLE lake.db.pgone (id BIGINT, seg STRING)
+          |PARTITIONED BY (seg)
+          |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    sql("""INSERT INTO lake.db.pgone SELECT /*+ REPARTITION(1) */ * FROM VALUES
+          |  (1, 'a'), (2, 'b'), (3, 'b') AS v(id, seg)""".stripMargin)
+    sql("DELETE FROM lake.db.pgone WHERE id = 2")
+    sql("DELETE FROM lake.db.pgone WHERE id = 3")
+    val q = "SELECT seg FROM lake.db.pgone GROUP BY seg ORDER BY seg"
+    val df = extSpark.sql(q)
+    assert(!df.queryExecution.executedPlan.toString.contains("FileScan"),
+      s"group-only query must answer from metadata:\n${df.queryExecution.executedPlan}")
+    val scanned = spark.sql(q).collect().map(_.getString(0)).toSeq
+    assert(scanned === Seq("a"))
+    assert(df.collect().map(_.getString(0)).toSeq === scanned)
+  }
+
   test("grouped MIN/MAX/COUNT(col) by identity partition answer from metadata (r14)") {
     sql("CREATE DATABASE IF NOT EXISTS lake.db")
     sql("""CREATE TABLE lake.db.pagg (k BIGINT, v DOUBLE, seg STRING)
