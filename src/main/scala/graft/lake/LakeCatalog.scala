@@ -180,8 +180,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
         if (tableExists(ident)) {
           val t = loadTable(ident)
           val props = t.meta.properties
-          val liveClones = props.getOrElse(LakeCatalog.CloneLocationsKey, "")
-            .split(";").filter(_.nonEmpty).toSeq
+          val liveClones = Links.of(props, LakeCatalog.CloneLocationsKey)
             .filter { loc =>
               try t.sibling(loc).metaStore.exists("v1.json")
               catch { case scala.util.control.NonFatal(_) => true } // fail closed
@@ -189,8 +188,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
           if (liveClones.nonEmpty) throw new IllegalStateException(
             s"cannot drop $ident: live clones still read its data files " +
               s"(${liveClones.mkString(", ")}) — drop them first")
-          (props.get(LakeCatalog.RenamedFromLocationsKey)
-            .toSeq.flatMap(_.split(";")).filter(_.nonEmpty)
+          (Links.of(props, LakeCatalog.RenamedFromLocationsKey)
             .filter(_.startsWith(warehouse + "/")),
             cloneChain(t).drop(1))
         } else (Seq.empty, Seq.empty)
@@ -214,15 +212,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
     // deregister this clone from every ancestor's clone list
     ancestors.foreach { anc =>
       try {
-        anc.updateProperties { p =>
-          p.get(LakeCatalog.CloneLocationsKey) match {
-            case Some(v) =>
-              val kept = v.split(";").filter(_.nonEmpty).filterNot(_ == myLoc)
-              if (kept.isEmpty) p - LakeCatalog.CloneLocationsKey
-              else p + (LakeCatalog.CloneLocationsKey -> kept.mkString(";"))
-            case None => p
-          }
-        }
+        anc.updateProperties(Links.remove(LakeCatalog.CloneLocationsKey, myLoc))
         ()
       } catch { case scala.util.control.NonFatal(_) => () } // stale entries are pruned by liveness checks
     }
@@ -373,8 +363,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
     //      read the renamed-away (destroyed) metadata as a dropped clone,
     //      and its expire/orphan GC could reclaim files this table still
     //      references.
-    val sibLocs = (oldT.meta.properties.values.toSeq
-      .flatMap(_.split(";")).filter(_.nonEmpty) ++
+    val sibLocs = (Links.everywhere(oldT.meta.properties) ++
       cloneChain(oldT).drop(1).map(_.location)).distinct
       .filter(_.startsWith(warehouse + "/"))
     val fixedUp = scala.collection.mutable.ArrayBuffer[LakeTable]()
@@ -383,10 +372,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
       try {
         val sib = newT.sibling(loc)
         if (sib.metaStore.exists("v1.json")) {
-          sib.updateProperties(props => props.map { case (k, v) =>
-            k -> v.split(";").map(x => if (x == oldLoc) newLoc else x)
-              .mkString(";")
-          })
+          sib.updateProperties(Links.relocate(oldLoc, newLoc))
           fixedUp += sib
         }
       } catch {
@@ -397,10 +383,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
     if (fixFailures.nonEmpty) {
       fixedUp.foreach { sib =>
         try {
-          sib.updateProperties(props => props.map { case (k, v) =>
-            k -> v.split(";").map(x => if (x == newLoc) oldLoc else x)
-              .mkString(";")
-          })
+          sib.updateProperties(Links.relocate(newLoc, oldLoc))
           ()
         } catch { case scala.util.control.NonFatal(_) => () }
       }
@@ -431,13 +414,9 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
     // `graft.renamed-from-locations` ACCUMULATES across chained renames
     // so dropTable can reclaim every directory this table ever lived in.
     loadTable(newIdent).commit { m =>
-      val priorLocs = m.properties.get(LakeCatalog.RenamedFromLocationsKey)
-        .toSeq.flatMap(_.split(";")).filter(_.nonEmpty)
       m.copy(name = newIdent, location = newLoc,
-        properties = m.properties +
-          ("graft.renamed-from" -> oldIdent) +
-          (LakeCatalog.RenamedFromLocationsKey ->
-            (priorLocs :+ oldLoc).distinct.mkString(";")))
+        properties = Links.add(LakeCatalog.RenamedFromLocationsKey, oldLoc)(
+          m.properties + ("graft.renamed-from" -> oldIdent)))
     }
     loadTable(newIdent)
   }
@@ -555,12 +534,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
     // still reclaim; one already running is unaffected by any ordering).
     val ancestors = cloneChain(src)
     ancestors.foreach { anc =>
-      anc.updateProperties { p =>
-        val cur = p.getOrElse(LakeCatalog.CloneLocationsKey, "")
-          .split(";").filter(_.nonEmpty)
-        p + (LakeCatalog.CloneLocationsKey ->
-          (cur :+ dstLoc).distinct.mkString(";"))
-      }
+      anc.updateProperties(Links.add(LakeCatalog.CloneLocationsKey, dstLoc))
       ()
     }
     try {
@@ -575,16 +549,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
         // clone lists free of a location that will never hold a table
         ancestors.foreach { anc =>
           try {
-            anc.updateProperties { p =>
-              p.get(LakeCatalog.CloneLocationsKey) match {
-                case Some(v) =>
-                  val kept = v.split(";").filter(_.nonEmpty)
-                    .filterNot(_ == dstLoc)
-                  if (kept.isEmpty) p - LakeCatalog.CloneLocationsKey
-                  else p + (LakeCatalog.CloneLocationsKey -> kept.mkString(";"))
-                case None => p
-              }
-            }
+            anc.updateProperties(Links.remove(LakeCatalog.CloneLocationsKey, dstLoc))
             ()
           } catch { case scala.util.control.NonFatal(_) => () }
         }
@@ -757,12 +722,13 @@ object LakeCatalog {
     * [[LakeCatalog.dropTable]] of the renamed table reclaims them. */
   private[lake] val MovedTombstone = ".graft-moved"
   /** ';'-separated list of every prior location a renamed table's data
-    * may still live under — accumulated across chained renames so a
-    * final DROP can reclaim all of them. */
+    * may still live under ([[Links]]) — accumulated across chained
+    * renames so a final DROP can reclaim all of them. */
   private[lake] val RenamedFromLocationsKey = "graft.renamed-from-locations"
   /** ';'-separated locations of live CLONES whose snapshots reference
-    * this table's data files — expire/orphan sweeps spare their bytes
-    * and dropTable refuses while any is live. */
+    * this table's data files, read and edited through [[Links]] —
+    * expire/orphan sweeps spare their bytes and dropTable refuses while
+    * any is live. */
   private[lake] val CloneLocationsKey = "graft.clone-locations"
   /** Location of the table this one was cloned FROM (one hop; the chain
     * walks the links) — location-keyed, so the rename fix-up machinery

@@ -2445,8 +2445,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * gone was dropped and is skipped. Scheme-less paths, matching the
     * callers' comparison convention. */
   private def cloneLivePaths(m: TableMeta): Set[String] =
-    m.properties.getOrElse(LakeCatalog.CloneLocationsKey, "")
-      .split(";").filter(_.nonEmpty).toSeq
+    Links.of(m.properties, LakeCatalog.CloneLocationsKey)
       .flatMap { loc =>
         val c = sibling(loc)
         if (!c.metaStore.exists("v1.json")) Set.empty[String]
@@ -2864,11 +2863,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   private def siblingWatermarkFloor(): Option[Int] = {
     val m0 = meta
     def wmsAt(routingKey: String, pinKey: String): Seq[Long] =
-      m0.properties.get(routingKey).toSeq.flatMap(_.split(";")).filter(_.nonEmpty)
-        .flatMap { loc =>
-          try sibling(loc).meta.latestSummary(pinKey).flatMap(_.toLongOption)
-          catch { case scala.util.control.NonFatal(_) => None }
-        }
+      Links.of(m0.properties, routingKey).flatMap { loc =>
+        try sibling(loc).meta.latestSummary(pinKey).flatMap(_.toLongOption)
+        catch { case scala.util.control.NonFatal(_) => None }
+      }
     val wms = wmsAt(MaterializedAgg.ViewsKey, MaterializedAgg.WatermarkKey) ++
       wmsAt(graft.operators.VectorIndex.IndexesKey,
         graft.operators.VectorIndex.WatermarkKey) ++

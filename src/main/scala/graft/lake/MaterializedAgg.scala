@@ -365,6 +365,13 @@ object MaterializedAgg {
         })
     }
 
+  /** The star view's recorded dimension joins (`graft.ivm.dims`), in
+    * fold order; empty for a dim-free view. */
+  private[graft] def dimsOf(props: Map[String, String]): Seq[DimJoin] =
+    props.get(DimsKey).toSeq.flatMap(_.split(";")).map { s =>
+      val Array(d, fk, dk, k) = s.split("\\|", 4); DimJoin(d, fk, dk, k)
+    }
+
   /** [[MaterializedAgg#watermark]] for a state table loaded by location
     * (the query-routing rule has no MaterializedAgg instance). */
   private[graft] def watermarkOf(state: LakeTable): Option[Long] =
@@ -376,10 +383,14 @@ object MaterializedAgg {
   private[lake] val RescanCol = "_ivm_rescanned"
   private[lake] val WatermarkKey = "graft.ivm.base-snapshot"
   private[lake] val DimSnapshotsKey = "graft.ivm.dim-snapshots"
-  private[graft] val DimsKey = "graft.ivm.dims"
+  private[lake] val DimsKey = "graft.ivm.dims"
+  /** Property on the STATE table: location of the base table the view
+    * aggregates. */
+  private[graft] val BaseLocKey = "graft.ivm.base-location"
   /** Property on the BASE table: ';'-joined state-table locations of the
-    * views maintained over it — the discovery index for automatic query
-    * routing ([[graft.lake.dsv2.GraftMvRoute]]). Best-effort pointers:
+    * views maintained over it, read and edited through [[Links]] — the
+    * discovery index for automatic query routing
+    * ([[graft.lake.dsv2.GraftMvRoute]]). Best-effort pointers:
     * the router re-validates existence, spec, and freshness at use, so a
     * stale entry (view dropped outside the SQL DDL) is just skipped. */
   private[graft] val ViewsKey = "graft.ivm.views"
@@ -461,7 +472,7 @@ object MaterializedAgg {
       .agg(count(lit(1)).as(RowsCol), stateAggs: _*)
     val t = catalog.createTable(ident, shape.schema)
     t.setProperties(Map(
-      "graft.ivm.base-location" -> base.location,
+      BaseLocKey -> base.location,
       "graft.ivm.group-by" -> groupBy.mkString(","),
       "graft.ivm.aggs" -> aggs.map(a => s"${a.func}:${a.column}:${a.alias}").mkString(";")) ++
       (if (resolved.isEmpty) Map.empty else Map(
@@ -471,27 +482,13 @@ object MaterializedAgg {
     // register the view on the BASE table so the optimizer can route
     // matching aggregate queries to the maintained state (GraftMvRoute).
     // Atomic RMW: concurrent creates over the same base must compose.
-    base.updateProperties { props =>
-      val cur = props.get(ViewsKey)
-        .map(_.split(";").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-      if (cur.contains(t.location)) props
-      else props + (ViewsKey -> (cur :+ t.location).mkString(";"))
-    }
+    base.updateProperties(Links.add(ViewsKey, t.location))
     new MaterializedAgg(t, base, groupBy, aggs, catalog, resolved)
   }
 
   /** Reload a view created by [[create]] from its recorded spec. */
   def load(catalog: LakeCatalog, ident: String): MaterializedAgg =
     fromState(catalog.loadTable(ident), catalog)
-
-  /** Reload a view from its STATE-TABLE LOCATION alone (the form the
-    * base table's `graft.ivm.views` routing index stores), assuming the
-    * default filesystem authority. Callers holding the table whose
-    * routing index supplied the location must use [[loadVia]] so a
-    * `uri`-mode engine resolves the state table over the wire. */
-  def loadAt(spark: org.apache.spark.sql.SparkSession,
-             stateLocation: String): MaterializedAgg =
-    loadVia(LakeTable.at(spark, stateLocation), stateLocation)
 
   /** Reload a view from its state-table location THROUGH the metadata
     * authority of `owner` (the base table whose `graft.ivm.views` index
@@ -515,20 +512,14 @@ object MaterializedAgg {
 
   private def fromState(t: LakeTable, catalog: LakeCatalog): MaterializedAgg = {
     val props = t.meta.properties
-    val baseLoc = props.getOrElse("graft.ivm.base-location",
-      throw new IllegalArgumentException(s"${t.meta.name} is not a materialized view"))
-    val groupBy = props("graft.ivm.group-by").split(",").toSeq
-    val aggs = props("graft.ivm.aggs").split(";").toSeq.map { s =>
-      val Array(f, c, a) = s.split(":", 3)
-      AggCol(f, c, a)
-    }
-    val dims = props.get(DimsKey).map(_.split(";").toSeq.map { s =>
-      val Array(d, fk, dk, k) = s.split("\\|", 4)
-      val dj = DimJoin(d, fk, dk, k)
+    def notView = new IllegalArgumentException(s"${t.meta.name} is not a materialized view")
+    val baseLoc = props.getOrElse(BaseLocKey, throw notView)
+    val (groupBy, aggs) = viewSpec(props).getOrElse(throw notView)
+    val dims = dimsOf(props).map { dj =>
       require(catalog != null,
-        s"star view ${t.meta.name} needs its owning catalog to resolve dim $d")
-      dj -> catalog.loadTable(d)
-    }).getOrElse(Seq.empty)
+        s"star view ${t.meta.name} needs its owning catalog to resolve dim ${dj.dimIdent}")
+      dj -> catalog.loadTable(dj.dimIdent)
+    }
     // the base resolves through the state table's own authority: a
     // wire-resolved view must not fall back to filesystem metadata for
     // its base (there is none under the location in uri mode)

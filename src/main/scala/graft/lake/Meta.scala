@@ -440,6 +440,56 @@ object CommitDiff {
     new CommitDiff(before, files, Seq.empty, Seq.empty)
 }
 
+/** Table links: a property whose value is a ';'-joined list of table
+  * locations — a base's registered views (`graft.ivm.views`) and indexes
+  * (`graft.vindex.indexes`, `graft.tindex.indexes`), its live clones
+  * (`graft.clone-locations`) and a renamed table's prior homes
+  * (`graft.renamed-from-locations`). Every read and edit of such a list
+  * goes through here. Pure map-to-map steps, so an edit runs inside
+  * [[LakeTable.updateProperties]]' retry loop (concurrent registrations
+  * compose), and an edit that changes nothing returns the same map, which
+  * commits nothing. */
+object Links {
+  private def elements(value: String): Seq[String] =
+    value.split(';').toSeq.filter(_.nonEmpty)
+
+  /** The locations listed under `key`, in order; empty elements ignored. */
+  def of(props: Map[String, String], key: String): Seq[String] =
+    props.get(key).toSeq.flatMap(elements)
+
+  /** Every non-empty element of every property value: the candidate
+    * sibling locations a rename probes for back-references. */
+  def everywhere(props: Map[String, String]): Seq[String] =
+    props.values.toSeq.flatMap(elements)
+
+  /** Append `loc` to the list under `key` unless it is already listed. */
+  def add(key: String, loc: String)(props: Map[String, String]): Map[String, String] = {
+    val cur = of(props, key)
+    if (cur.contains(loc)) props else props + (key -> (cur :+ loc).mkString(";"))
+  }
+
+  /** Drop `loc` from the list under `key`; the key goes when the list
+    * empties. */
+  def remove(key: String, loc: String)(props: Map[String, String]): Map[String, String] = {
+    val cur = of(props, key)
+    if (!cur.contains(loc)) props
+    else cur.filterNot(_ == loc) match {
+      case Seq() => props - key
+      case left => props + (key -> left.mkString(";"))
+    }
+  }
+
+  /** Replace every list element equal to `from` with `to`, in every
+    * property value. A value with no such element stays byte-identical:
+    * the split keeps empty elements, so a trailing ';' survives. */
+  def relocate(from: String, to: String)(props: Map[String, String]): Map[String, String] =
+    props.map { case (k, v) =>
+      val parts = v.split(";", -1)
+      if (!parts.contains(from)) k -> v
+      else k -> parts.map(x => if (x == from) to else x).mkString(";")
+    }
+}
+
 /** Serialization model of one manifest chunk: an immutable, content-addressed
   * slice of a snapshot's data-file list (`metadata/manifest-<hash>.json`).
   * Chunks are shared structurally across snapshots — an append's new

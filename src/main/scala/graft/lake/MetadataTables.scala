@@ -169,25 +169,24 @@ object MetadataTables {
         // auto-refresh loop maintains (refreshRegisteredViews) — the
         // operator signal that routing silently degraded to cold
         val head = m.currentSnapshot.map(_.snapshotId)
-        m.properties.get(MaterializedAgg.ViewsKey).toSeq
-          .flatMap(_.split(";")).filter(_.nonEmpty).map { loc =>
-            try {
-              val st = table.sibling(loc)
-              val p = st.meta.properties
-              val wm = MaterializedAgg.watermarkOf(st)
-              (loc, st.meta.name, p.getOrElse("graft.ivm.group-by", null),
-                p.getOrElse("graft.ivm.aggs", null), wm, head,
-                wm.isDefined && wm == head,
-                p.get(MaterializedAgg.FailuresKey).flatMap(_.toLongOption)
-                  .getOrElse(0L),
-                p.getOrElse(MaterializedAgg.LastErrorKey, null),
-                p.get(MaterializedAgg.LastErrorAtKey).flatMap(_.toLongOption)
-                  .map(t => new java.sql.Timestamp(t)).orNull)
-            } catch { case scala.util.control.NonFatal(e) =>
-              (loc, null, null, null, None: Option[Long], head, false, 0L,
-                s"unreachable: ${e.getMessage}", null)
-            }
-          }.toDF("state_location", "view", "group_by", "aggs", "watermark",
+        Links.of(m.properties, MaterializedAgg.ViewsKey).map { loc =>
+          try {
+            val st = table.sibling(loc)
+            val p = st.meta.properties
+            val wm = MaterializedAgg.watermarkOf(st)
+            (loc, st.meta.name, p.getOrElse("graft.ivm.group-by", null),
+              p.getOrElse("graft.ivm.aggs", null), wm, head,
+              wm.isDefined && wm == head,
+              p.get(MaterializedAgg.FailuresKey).flatMap(_.toLongOption)
+                .getOrElse(0L),
+              p.getOrElse(MaterializedAgg.LastErrorKey, null),
+              p.get(MaterializedAgg.LastErrorAtKey).flatMap(_.toLongOption)
+                .map(t => new java.sql.Timestamp(t)).orNull)
+          } catch { case scala.util.control.NonFatal(e) =>
+            (loc, null, null, null, None: Option[Long], head, false, 0L,
+              s"unreachable: ${e.getMessage}", null)
+          }
+        }.toDF("state_location", "view", "group_by", "aggs", "watermark",
             "base_snapshot", "fresh", "refresh_failures", "last_error",
             "last_error_at")
 
@@ -200,41 +199,40 @@ object MetadataTables {
         // (sibling), so a wire-mode base lists its wire indexes.
         val head = m.currentSnapshot.map(_.snapshotId)
         def indexRows(key: String, kind: String) =
-          m.properties.get(key).toSeq
-            .flatMap(_.split(";")).filter(_.nonEmpty).map { loc =>
-              try {
-                val st = table.sibling(loc)
-                val (wm, detail) = kind match {
-                  case "vector" =>
-                    val idx = graft.operators.VectorIndex.loadVia(table, loc)
-                    val p = idx.state.meta.properties
-                    // pin_fallback present ⇔ the centroid pin was lost to
-                    // retention and probes serve the centroid-table head
-                    // (recall may degrade inside a torn rebuild);
-                    // imbalance = the metadata-only drift estimate;
-                    // drift_* = the ingest loop's threshold-exceeded record
-                    (idx.watermark,
-                      Map("nlist" -> idx.centroids.size.toString,
-                        "imbalance" -> f"${idx.imbalanceEstimate}%.2f") ++
-                        (if (idx.pinFallback) Map("pin_fallback" -> "true")
-                         else Map.empty) ++
-                        p.get(graft.operators.VectorIndex.DriftImbalanceKey)
-                          .map("drift_imbalance" -> _) ++
-                        p.get(graft.operators.VectorIndex.DriftAtKey)
-                          .map("drift_at" -> _))
-                  case _ =>
-                    val idx = graft.operators.TextIndex.loadVia(table, loc)
-                    val (n, tl) = idx.corpusStats
-                    (idx.watermark,
-                      Map("n_docs" -> n.toString, "total_len" -> tl.toString))
-                }
-                (loc, st.meta.name, kind, wm, head,
-                  wm.isDefined && wm == head, detail)
-              } catch { case scala.util.control.NonFatal(e) =>
-                (loc, null, kind, None: Option[Long], head, false,
-                  Map("error" -> e.getMessage))
+          Links.of(m.properties, key).map { loc =>
+            try {
+              val st = table.sibling(loc)
+              val (wm, detail) = kind match {
+                case "vector" =>
+                  val idx = graft.operators.VectorIndex.loadVia(table, loc)
+                  val p = idx.state.meta.properties
+                  // pin_fallback present ⇔ the centroid pin was lost to
+                  // retention and probes serve the centroid-table head
+                  // (recall may degrade inside a torn rebuild);
+                  // imbalance = the metadata-only drift estimate;
+                  // drift_* = the ingest loop's threshold-exceeded record
+                  (idx.watermark,
+                    Map("nlist" -> idx.centroids.size.toString,
+                      "imbalance" -> f"${idx.imbalanceEstimate}%.2f") ++
+                      (if (idx.pinFallback) Map("pin_fallback" -> "true")
+                       else Map.empty) ++
+                      p.get(graft.operators.VectorIndex.DriftImbalanceKey)
+                        .map("drift_imbalance" -> _) ++
+                      p.get(graft.operators.VectorIndex.DriftAtKey)
+                        .map("drift_at" -> _))
+                case _ =>
+                  val idx = graft.operators.TextIndex.loadVia(table, loc)
+                  val (n, tl) = idx.corpusStats
+                  (idx.watermark,
+                    Map("n_docs" -> n.toString, "total_len" -> tl.toString))
               }
+              (loc, st.meta.name, kind, wm, head,
+                wm.isDefined && wm == head, detail)
+            } catch { case scala.util.control.NonFatal(e) =>
+              (loc, null, kind, None: Option[Long], head, false,
+                Map("error" -> e.getMessage))
             }
+          }
         (indexRows(graft.operators.VectorIndex.IndexesKey, "vector") ++
           indexRows(graft.operators.TextIndex.IndexesKey, "text"))
           .toDF("state_location", "index", "kind", "watermark",

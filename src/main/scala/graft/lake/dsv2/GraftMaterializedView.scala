@@ -1,6 +1,6 @@
 package graft.lake.dsv2
 
-import graft.lake.{LakeCatalog, MaterializedAgg}
+import graft.lake.{LakeCatalog, Links, MaterializedAgg}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 
@@ -99,20 +99,12 @@ case class DropMaterializedViewCommand(viewIdent: Seq[String], ifExists: Boolean
       s"$ident is not a materialized view")
     // deregister from the base's routing index (best-effort: a base
     // dropped first just means the pointer dies with it)
-    state.meta.properties.get("graft.ivm.base-location").foreach { baseLoc =>
+    state.meta.properties.get(MaterializedAgg.BaseLocKey).foreach { baseLoc =>
       try {
         // atomic RMW: a concurrent CREATE on the same base must not lose
         // its registration to this deregistration (and vice versa)
-        state.sibling(baseLoc).updateProperties { props =>
-          props.get(MaterializedAgg.ViewsKey) match {
-            case None => props
-            case Some(v) =>
-              val left = v.split(";").toSeq.filter(_.nonEmpty)
-                .filterNot(_ == state.location)
-              if (left.isEmpty) props - MaterializedAgg.ViewsKey
-              else props + (MaterializedAgg.ViewsKey -> left.mkString(";"))
-          }
-        }
+        state.sibling(baseLoc).updateProperties(
+          Links.remove(MaterializedAgg.ViewsKey, state.location))
         ()
       } catch { case scala.util.control.NonFatal(_) => }
     }

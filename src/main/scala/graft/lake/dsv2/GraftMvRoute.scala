@@ -1,6 +1,6 @@
 package graft.lake.dsv2
 
-import graft.lake.{LakeTable, MaterializedAgg}
+import graft.lake.{LakeTable, Links, MaterializedAgg}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression, PlanExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
@@ -98,11 +98,10 @@ object GraftMvRoute {
       ((r, gt), planDims) <- unwrapStar(peeled, unwrap)
       if !isWriteTarget(r) && unpinned(gt) && planDims.forall(d => unpinned(d._2))
       base = gt.lakeTable
-      viewsProp <- base.meta.properties.get(MaterializedAgg.ViewsKey)
       // group expressions must be plain columns
       groupNames <- attrNames(agg.groupingExpressions)
       if groupNames.nonEmpty
-      plan <- viewsProp.split(";").iterator.filter(_.nonEmpty)
+      plan <- Links.of(base.meta.properties, MaterializedAgg.ViewsKey).iterator
         .flatMap(loc => tryRoute(spark, agg, base, groupNames, planDims, filters, loc))
         .nextOption()
     } yield plan
@@ -197,17 +196,14 @@ object GraftMvRoute {
       val props = state.meta.properties
       val (mvGroup, mvAggs) = MaterializedAgg.viewSpec(props).getOrElse(return None)
       // spec match: same base and same group-column set
-      if (!props.get("graft.ivm.base-location").contains(base.location)) return None
+      if (!props.get(MaterializedAgg.BaseLocKey).contains(base.location)) return None
       if (mvGroup.sorted != groupNames.sorted) return None
       // star shape: the query's dim-join chain must equal the view's
       // recorded DimJoin list IN ORDER (enrichWith folds in order, so an
       // equivalent query plans the same left-deep chain) — same dim table
       // (by catalog-relative location suffix), same fact/dim keys, same
       // join kind; a dim-free query matches only a dim-free view
-      val mvDims = props.get(MaterializedAgg.DimsKey)
-        .map(_.split(";").toSeq.map { s =>
-          val Array(d, fk, dk, k) = s.split("\\|", 4); (d, fk, dk, k)
-        }).getOrElse(Seq.empty)
+      val mvDims = MaterializedAgg.dimsOf(props)
       if (mvDims.length != planDims.length) return None
       // dim identity must be EXACT-location: the recorded idents are
       // relative to the view's catalog, whose warehouse is the state
@@ -217,9 +213,9 @@ object GraftMvRoute {
       if (!loc.endsWith(viewSuffix)) return None
       val warehouse = loc.dropRight(viewSuffix.length)
       val dimsMatch = mvDims.zip(planDims).forall {
-        case ((ident, fk, dk, kind), (_, dgt, pfk, pdk, pkind)) =>
-          dgt.lakeTable.location == warehouse + "/" + ident.replace('.', '/') &&
-            fk == pfk && dk == pdk && kind == pkind
+        case (dj, (_, dgt, pfk, pdk, pkind)) =>
+          dgt.lakeTable.location == warehouse + "/" + dj.dimIdent.replace('.', '/') &&
+            dj.factKey == pfk && dj.dimKey == pdk && dj.kind == pkind
       }
       if (!dimsMatch) return None
       // freshness: every dimension must sit at its recorded (build-time)

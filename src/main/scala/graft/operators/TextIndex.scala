@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.lake.{BloomSkip, LakeCatalog, LakeTable}
+import graft.lake.{BloomSkip, LakeCatalog, LakeTable, Links}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -326,8 +326,9 @@ final class TextIndex private (
 
 object TextIndex {
   /** Routing index on the BASE table: ';'-separated state-table locations
-    * of every text index registered on it — the ingest loop refreshes
-    * each per batch, exactly like the MV / vector-index routing. */
+    * of every text index registered on it, read and edited through
+    * [[graft.lake.Links]] — the ingest loop refreshes each per batch,
+    * exactly like the MV / vector-index routing. */
   private[graft] val IndexesKey = "graft.tindex.indexes"
   /** Snapshot-summary key: base snapshot the content reflects (used on
     * both tables — each fences its own refresh step). */
@@ -399,12 +400,7 @@ object TextIndex {
       extraSummary = Map(WatermarkKey -> head.toString))
     // register on the base's routing index so ingest-cadence maintenance
     // refreshes the index per batch (same shape as the MV/vindex routing)
-    base.updateProperties { props =>
-      val cur = props.get(IndexesKey)
-        .map(_.split(";").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-      if (cur.contains(t.location)) props
-      else props + (IndexesKey -> (cur :+ t.location).mkString(";"))
-    }
+    base.updateProperties(Links.add(IndexesKey, t.location))
     idx
   }
 
@@ -437,15 +433,8 @@ object TextIndex {
     val baseLoc = t.meta.properties.get(BaseLocKey)
     val loc = t.location
     baseLoc.foreach { bl =>
-      try t.sibling(bl).updateProperties { props =>
-        props.get(IndexesKey) match {
-          case Some(v) =>
-            val left = v.split(";").filter(l => l.nonEmpty && l != loc)
-            if (left.isEmpty) props - IndexesKey
-            else props + (IndexesKey -> left.mkString(";"))
-          case None => props
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
+      try t.sibling(bl).updateProperties(Links.remove(IndexesKey, loc))
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     catalog.dropTable(s"${ident}_docs")
     catalog.dropTable(ident)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.lake.{LakeCatalog, LakeTable}
+import graft.lake.{LakeCatalog, LakeTable, Links}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -303,7 +303,8 @@ final class VectorIndex private (
 
 object VectorIndex {
   /** Routing index on the BASE table: ';'-separated state-table locations
-    * of every vector index registered on it — the ingest loop
+    * of every vector index registered on it, read and edited through
+    * [[graft.lake.Links]] — the ingest loop
     * ([[graft.streaming.Changelog.startIngest]] `refreshIndexes=true`)
     * refreshes each one per batch, exactly like the MV routing index. */
   private[graft] val IndexesKey = "graft.vindex.indexes"
@@ -398,12 +399,7 @@ object VectorIndex {
         CentroidSnapKey -> cSnap.toString))
     // register on the base's routing index so ingest-cadence maintenance
     // can keep the index fresh per batch (same shape as the MV index)
-    base.updateProperties { props =>
-      val cur = props.get(IndexesKey)
-        .map(_.split(";").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-      if (cur.contains(t.location)) props
-      else props + (IndexesKey -> (cur :+ t.location).mkString(";"))
-    }
+    base.updateProperties(Links.add(IndexesKey, t.location))
     idx0
   }
 
@@ -438,15 +434,8 @@ object VectorIndex {
     val baseLoc = t.meta.properties.get(BaseLocKey)
     val loc = t.location
     baseLoc.foreach { bl =>
-      try t.sibling(bl).updateProperties { props =>
-        props.get(IndexesKey) match {
-          case Some(v) =>
-            val left = v.split(";").filter(l => l.nonEmpty && l != loc)
-            if (left.isEmpty) props - IndexesKey
-            else props + (IndexesKey -> left.mkString(";"))
-          case None => props
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
+      try t.sibling(bl).updateProperties(Links.remove(IndexesKey, loc))
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     catalog.dropTable(s"${ident}_centroids")
     catalog.dropTable(ident)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.lake.{DataFile, LakeTable, Pruning}
+import graft.lake.{DataFile, LakeTable, Links, Pruning}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -437,13 +437,12 @@ object Changelog {
     * ([[graft.operators.TextIndex]]), each off its own routing key. */
   def refreshRegisteredIndexes(table: LakeTable): Unit = {
     def each(key: String)(refresh: String => Unit): Unit =
-      table.meta.properties.get(key).toSeq
-        .flatMap(_.split(";")).filter(_.nonEmpty).foreach { loc =>
-          try refresh(loc)
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[graft] index refresh skipped for $loc: ${e.getMessage}")
-          }
+      Links.of(table.meta.properties, key).foreach { loc =>
+        try refresh(loc)
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] index refresh skipped for $loc: ${e.getMessage}")
         }
+      }
     each(graft.operators.VectorIndex.IndexesKey) { loc =>
       val idx = graft.operators.VectorIndex.loadVia(table, loc)
       idx.refresh()
@@ -497,8 +496,7 @@ object Changelog {
     val recordEvery = table.meta.properties
       .get("graft.mv.health.record-every").flatMap(_.toLongOption)
       .filter(_ > 0).getOrElse(16L)
-    val locs = table.meta.properties.get(MaterializedAgg.ViewsKey).toSeq
-      .flatMap(_.split(";")).filter(_.nonEmpty)
+    val locs = Links.of(table.meta.properties, MaterializedAgg.ViewsKey)
     // prune counters for views no longer in THIS table's routing index
     // (dropped while failing): without this a stuck-then-dropped view
     // leaks its entry forever, and a new view created at the same state

@@ -92,6 +92,24 @@ class RenameSpec extends AnyFunSuite {
       .search(Seq(1 -> "w3"), 3).collect().toSeq === got.toSeq)
   }
 
+  test("renaming a BASE leaves its index's unrelated properties byte-identical: " +
+    "only the base location is rewritten") {
+    val wh = Files.createTempDirectory("graft-ren").toString
+    val cat = new LakeCatalog(spark, wh)
+    val base0 = cat.createTable("db.corpus", StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType))))
+    import spark.implicits._
+    base0.append(Seq((0L, "alpha beta"), (1L, "beta gamma")).toDF("doc_id", "text"))
+    graft.operators.TextIndex.create(cat, "db.tidx", base0, nBuckets = 2)
+    val notes = Map("note" -> "see ticket 12;", "sep" -> ";")
+    cat.loadTable("db.tidx").setProperties(notes)
+    val base = cat.renameTable("db.corpus", "db.corpus2")
+    val props = cat.loadTable("db.tidx").meta.properties
+    assert(props("graft.tindex.base-location") === base.location)
+    assert(notes.forall { case (k, v) => props.get(k).contains(v) },
+      s"unrelated properties rewritten: ${props.filter(p => notes.contains(p._1))}")
+  }
+
   test("old location is tombstoned: createTable at the recycled ident is " +
     "refused (its orphan GC would delete the renamed table's live data); " +
     "dropping the renamed table reclaims every prior location") {

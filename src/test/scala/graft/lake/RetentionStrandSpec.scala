@@ -204,6 +204,36 @@ class RetentionStrandSpec extends AnyFunSuite {
     assert(indexSet(idx) === assignSet(base.toDF, idx.centroids))
   }
 
+  test("ingest-cadence auto-expiry floor holds a lagging MV's and a lagging " +
+    "text index's watermark too") {
+    val cat = freshCatalog("floor2")
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType)))
+    val props = Map("graft.maintenance.expire.keep-last" -> "3")
+    val mvBase = cat.createTable("db.facts", schema, properties = props)
+    val txBase = cat.createTable("db.corpus", schema, properties = props)
+    Seq(mvBase, txBase).foreach(_.append(docsDf(0L until 20L)))
+    val mv = MaterializedAgg.create(cat, "db.facts_by_text", mvBase,
+      Seq("text"), Seq(MaterializedAgg.AggCol("count", "*", "n")))
+    mv.refresh()
+    val idx = TextIndex.create(cat, "db.tidx", txBase, nBuckets = 2)
+    val lagging = Seq(mvBase -> mv.watermark.get, txBase -> idx.watermark.get)
+    // 8 ingest commits per base with per-commit maintenance and no
+    // refresh: bare keep-last=3 would expire both watermarks
+    (0 until 8).foreach { i =>
+      lagging.foreach { case (base, _) =>
+        base.append(docsDf((100L + i * 5) until (105L + i * 5)))
+        base.autoMaintain()
+      }
+    }
+    lagging.foreach { case (base, wm) =>
+      assert(base.isAncestorRetained(wm, base.meta.currentSnapshot.get.snapshotId),
+        s"${base.meta.name}: the floor must keep the lagging watermark a retained ancestor")
+      assert(base.meta.snapshots.count(!_.staged) > 3 + 2,
+        s"${base.meta.name}: test premise: the floor (not bare keep-last) held retention")
+    }
+  }
+
   test("auto-refresh loop surfaces a stranded view in the " +
     "materialized_views health listing") {
     val cat = freshCatalog("health")

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The snapshot-minting transition [[TableMeta.withSnapshot]], the ref
   * move [[TableMeta.moveRef]] and the history reads ([[TableMeta.ancestry]],
-  * [[TableMeta.commitsBetween]], [[CommitDiff]], the referenced sets), on
-  * hand-built metadata: no Spark, no I/O. */
+  * [[TableMeta.commitsBetween]], [[CommitDiff]], the referenced sets) and
+  * the table-link lists ([[Links]]), on hand-built metadata: no Spark, no
+  * I/O. */
 class TableMetaSpec extends AnyFunSuite {
 
   private def file(name: String, rows: Long, addedAt: Long = 0L): DataFile =
@@ -211,5 +212,42 @@ class TableMetaSpec extends AnyFunSuite {
     Seq("ancestry", "referenced", "latestSummary", "commitDiff", "parentOf",
         "currentSnapshot", "liveRecords").foreach(k =>
       assert(!json.contains(k), s"$k leaked into the version JSON"))
+  }
+
+  private val K = "graft.ivm.views"
+
+  test("Links.of: empty elements ignored, order kept") {
+    assert(Links.of(Map(K -> "/w/b;;/w/a;"), K) === Seq("/w/b", "/w/a"))
+    assert(Links.of(Map(K -> ";"), K).isEmpty)
+    assert(Links.of(Map.empty, K).isEmpty)
+    assert(Links.everywhere(Map(K -> "/w/b;", "x" -> "1")) === Seq("/w/b", "1"))
+  }
+
+  test("Links.add: appends at the end, once; an unchanged list is the same map") {
+    val one = Links.add(K, "/w/a")(Map("x" -> "1"))
+    assert(one === Map("x" -> "1", K -> "/w/a"))
+    val two = Links.add(K, "/w/b")(one)
+    assert(two(K) === "/w/a;/w/b")
+    assert(Links.add(K, "/w/a")(two) eq two)
+    assert(Links.add(K, "/w/b")(Links.add(K, "/w/b")(one)) === two)
+  }
+
+  test("Links.remove: the key goes when the list empties; an absent location changes nothing") {
+    val props = Map("x" -> "1", K -> "/w/a;/w/b")
+    assert(Links.remove(K, "/w/a")(props) === Map("x" -> "1", K -> "/w/b"))
+    assert(Links.remove(K, "/w/b")(Links.remove(K, "/w/a")(props)) === Map("x" -> "1"))
+    assert(Links.remove(K, "/w/c")(props) eq props)
+    assert(Links.remove("graft.clone-locations", "/w/a")(props) eq props)
+  }
+
+  test("Links.relocate: only matching elements change; other values stay byte-identical") {
+    val props = Map(K -> "/w/a;/w/old;/w/c", "graft.ivm.base-location" -> "/w/old",
+      "note" -> "see ticket 12;", "sep" -> ";", "a" -> "a;", "near" -> "/w/old2")
+    val moved = Links.relocate("/w/old", "/w/new")(props)
+    assert(moved === props ++ Map(K -> "/w/a;/w/new;/w/c",
+      "graft.ivm.base-location" -> "/w/new"))
+    assert(Links.relocate("/w/new", "/w/old")(moved) === props)
+    val untouched = Map("note" -> "see ticket 12;", "sep" -> ";", "a" -> "a;")
+    assert(Links.relocate("/w/old", "/w/new")(untouched) === untouched)
   }
 }
