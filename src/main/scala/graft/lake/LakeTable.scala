@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.charset.StandardCharsets
@@ -917,16 +918,24 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
 
   /** Read `files` under `snap`'s merge-on-read delete masks — positional
     * first, then equality. Scale shape: files with no applicable deletes
-    * scan untouched; affected files anti-join metadata-sized delete sets,
-    * broadcast while provably small, shuffle-hash above that — both masks
-    * are bounded by churn since the last compaction, never table size. */
+    * scan untouched; affected files are masked inside the scan while the
+    * mask is small (deletion vectors, driver-held equality keys) and
+    * anti-join metadata-sized delete sets above that, broadcast while
+    * provably small, shuffle-hash beyond — both masks are bounded by
+    * churn since the last compaction, never table size. */
   private[lake] def dataFrameForLive(m: TableMeta, snap: Option[Snapshot],
                                      files: Seq[DataFile]): DataFrame =
     liveRows(m, snap, files, withMeta = false)
 
   /** Read `files` under BOTH merge-on-read masks (positions, then
     * equality keys); `withMeta = true` keeps `_gd_file`/`_gd_pos` for
-    * callers that go on to write delete entries (MoR DELETE/UPDATE). */
+    * callers that go on to write delete entries (MoR DELETE/UPDATE).
+    * Per mask class and key layout, deletes holding at most
+    * [[LakeTable.InScanMaskKeys]] keys are applied as a filter inside the
+    * scan ([[InKeySet]] over keys held on the driver, [[EqDeleteKeys]]):
+    * a point lookup under equality deletes is then one Spark job, the
+    * scan. Larger deletes anti-join their key files
+    * ([[eqDeleteKeysDf]]), broadcast while at most 4M keys. */
   private[lake] def liveRows(m: TableMeta, snap: Option[Snapshot],
                              files: Seq[DataFile], withMeta: Boolean): DataFrame = {
     val eqDels = snap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
@@ -947,12 +956,17 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         val keyNames = keyIds.map(id => m.schema.byId(id).getOrElse(throw
           new IllegalStateException(
             s"equality-delete key column id $id not in schema")).name)
-        val kdf0 = eqDeleteKeysDf(m, dels)
-        val kdf = if (dels.map(_.rowCount).sum <= 4L * 1000 * 1000)
-          broadcast(kdf0) else kdf0
-        // plain (null-rejecting) equality like mergeByKeys: null-keyed
-        // rows can never match a delete key and survive
-        acc.join(kdf, keyNames, "left_anti")
+        eqKeySet(m, keyIds, dels) match {
+          // few keys: probed inside the scan, no exchange and no job
+          case Some(keys) => acc.filter(!InKeySet(col(keyNames.head), keys))
+          case None =>
+            val kdf0 = eqDeleteKeysDf(m, dels)
+            val kdf = if (dels.map(_.rowCount).sum <= 4L * 1000 * 1000)
+              broadcast(kdf0) else kdf0
+            // plain (null-rejecting) equality like mergeByKeys: null-keyed
+            // rows can never match a delete key and survive
+            acc.join(kdf, keyNames, "left_anti")
+        }
       }
     }.reduce(_ unionByName _)
   }
@@ -1013,13 +1027,22 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     parts.reduce(_ unionByName _)
   }
 
+  /** The keys of `dels` (one key layout) held on the driver as an in-scan
+    * probe set, or None above [[LakeTable.InScanMaskKeys]] keys. */
+  private def eqKeySet(m: TableMeta, keyIds: Seq[Int],
+                       dels: Seq[EqualityDeleteFile]): Option[KeySet] =
+    EqDeleteKeys.masks(spark, hadoopConf, m, keyIds, dels, InScanMaskKeys)
+
   /** Key tuples of the given equality delete files, as a DataFrame with
     * CURRENT logical column names (keys are stored by stable column id,
-    * physical names `c<id>`, so renames are free). NOT deduplicated: the
-    * consumers are anti- and semi-joins, whose build side needs no unique
-    * keys, and a distinct would cost a shuffle job on every read of a
-    * table with live equality deletes. `withAddedAt` appends each tuple's
-    * delete-file sequence number (`addedAt`) as `_gd_eq_at`. */
+    * physical names `c<id>`, so renames are free): the join side of the
+    * masks above [[LakeTable.InScanMaskKeys]] keys, and of
+    * [[changelog]]'s equality transitions. Building the frame runs no
+    * job; a broadcast of it runs one. NOT deduplicated: the consumers are
+    * anti- and semi-joins, whose build side needs no unique keys, and a
+    * distinct would cost a shuffle job on every read of a table with live
+    * equality deletes. `withAddedAt` appends each tuple's delete-file
+    * sequence number (`addedAt`) as `_gd_eq_at`. */
   private def eqDeleteKeysDf(m: TableMeta, dels: Seq[EqualityDeleteFile],
                              withAddedAt: Boolean = false): DataFrame = {
     val byLayout = dels.groupBy(d =>
@@ -1184,10 +1207,13 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * encoding via the same footer-stats reader as data files).
     * `keyDf` holds distinct tuples, so the write needs no distinct
     * shuffle — unless a key needs a cast to the table's type, which may
-    * fold distinct values together. */
+    * fold distinct values together. `driverKeys`, the same one-column key
+    * set already on the driver, seeds [[EqDeleteKeys]], so reads of the
+    * new delete never read its file back. */
   private def writeEqualityDeleteFile(keyDf: DataFrame,
                                       keyCols: Seq[String],
-                                      m: TableMeta): Option[EqualityDeleteFile] = {
+                                      m: TableMeta,
+                                      driverKeys: Option[Seq[Any]] = None): Option[EqualityDeleteFile] = {
     val schema = m.schema
     val cols = keyCols.map(k => schema.byName(k).getOrElse(
       throw new IllegalArgumentException(s"merge key column $k not in schema")))
@@ -1207,6 +1233,11 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     fs.delete(tmp, true)
     val (rows, bytes, stats) = Stats.fromFooter(target.toString, hadoopConf)
     if (rows == 0) { fs.delete(target, false); return None }
+    // the file holds exactly these values when no cast was needed
+    driverKeys.filter(ks => castFree && cols.size == 1 && ks.size == rows).foreach { ks =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(cols.head.sparkType)
+      EqDeleteKeys.seed(target.toString, ks.map(k => toCatalyst(k).asInstanceOf[AnyRef]))
+    }
     val firstKey = stats.get(cols.head.physicalName)
     Some(EqualityDeleteFile(target.toString, bytes, cols.map(_.id),
       schema.schemaId, rows, addedAt = 0L,
@@ -1550,7 +1581,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         val inserted = writeUpserts()
         val eqDel =
           if (nKeys == 0) None
-          else writeEqualityDeleteFile(keySet, Seq(key), m0)
+          else writeEqualityDeleteFile(keySet, Seq(key), m0, smallKeys.map(_ => probe))
         // null-keyed rows can't ride the equality mask — encode them as a
         // POSITIONAL delete file over the files that may hold null keys
         val nullDel = nullKill.toSeq.flatMap { kill =>
@@ -2760,9 +2791,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     *     [[rewriteDeleteFiles]] (metadata + one KB-scale write).
     * The thresholds are checked on in-memory metadata (free), so a pass
     * with nothing due runs no Spark job. Plan shape of a due conversion:
-    * one masked scan semi-joined to the broadcast key sets, then the
-    * positional-delete write and its deletion-vector build — six jobs
-    * over four CDC batches' equality deletes (JobCountSpec). After a
+    * one masked scan filtered by the deletes' driver-held keys, counted
+    * per file (two jobs), then the positional-delete write and its
+    * deletion-vector build — four jobs over four CDC batches' equality
+    * deletes (JobCountSpec). After a
     * call the read plan carries ≤ maxEqDeleteFiles equality branches and
     * ≤ 1 positional anti-join — bounded regardless of stream length
     * (MaintenanceSpec drives 50 batches; probe in SCALEPROBE.md).
@@ -2924,14 +2956,16 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * re-copies every masked file.
     *
     * Plan shape: ONE scan of the candidate files under the positional
-    * mask, LEFT SEMI joined to each key layout's equality keys, each key
-    * tagged with its delete file's sequence number — a row dies iff its
-    * key matches a delete strictly newer than its file. Every mask class
-    * rides the same join (the file's sequence number is a column), so the
-    * key set is broadcast once per layout, not once per class. A distinct
-    * runs only when the table has more than one key layout (a row could
-    * match in two). Over four CDC batches' deletes it runs six Spark jobs
-    * (JobCountSpec). */
+    * mask, each row tagged with its file's sequence number — a row dies
+    * iff its key is held by a delete strictly newer than its file. Every
+    * mask class rides the same plan. A key layout whose deletes hold at
+    * most [[LakeTable.InScanMaskKeys]] keys is probed inside the scan
+    * against its driver-held keys ([[InKeySet]]), all such layouts in one
+    * filter, which lists a row once; a larger layout LEFT SEMI joins its
+    * key files, broadcast once per layout, and a distinct runs only when
+    * the result has more than one part. Over four CDC batches' deletes it
+    * runs four Spark jobs: the per-file count (scan, result), the write
+    * and the deletion-vector build (JobCountSpec). */
   def convertEqualityDeletes(): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
@@ -2964,10 +2998,20 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     val seqOf = typedLit(files.map(f => fileName(f.path) -> f.addedSnapshotId).toMap)
     val rows = maskPositions(m, snap, files, withMeta = true)
       .withColumn("_gd_seq", element_at(seqOf, col("_gd_file")))
-    val byLayout = eqDels.groupBy(_.keyIds).toSeq.map { case (keyIds, dels) =>
+    val layouts = eqDels.groupBy(_.keyIds).toSeq.map { case (keyIds, dels) =>
       val keyNames = keyIds.map(id => m.schema.byId(id).getOrElse(throw
         new IllegalStateException(
           s"equality-delete key column id $id not in schema")).name)
+      (keyNames, dels, eqKeySet(m, keyIds, dels))
+    }
+    // few keys: a row dies iff a delete newer than its file holds its key
+    // (the key's largest addedAt > _gd_seq), OR over layouts in ONE filter
+    val probes = layouts.collect { case (keyNames, _, Some(keys)) =>
+      InKeySet(col(keyNames.head), keys, afterSeq = Some(col("_gd_seq")))
+    }
+    val filtered = probes.reduceOption(_ || _).map(p =>
+      rows.filter(p).select(col("_gd_file"), col("_gd_pos")))
+    val joined = layouts.collect { case (keyNames, dels, None) =>
       val keys0 = eqDeleteKeysDf(m, dels, withAddedAt = true)
       val keys = if (dels.map(_.rowCount).sum <= 4L * 1000 * 1000) broadcast(keys0) else keys0
       // plain (null-rejecting) equality: a null-keyed row is never masked
@@ -2975,7 +3019,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
         keys("_gd_eq_at") > rows("_gd_seq")
       rows.join(keys, cond, "left_semi").select(col("_gd_file"), col("_gd_pos"))
     }
-    if (byLayout.size == 1) byLayout.head else byLayout.reduce(_ union _).distinct()
+    // a row matched by the filter and a join, or by two joins, is listed
+    // once: only then is a distinct needed
+    val parts = filtered.toSeq ++ joined
+    if (parts.size == 1) parts.head else parts.reduce(_ union _).distinct()
   }
 
   /** CALL rewrite_delete_files: compact accumulated positional delete
@@ -2983,7 +3030,9 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     * writes, data files untouched; ONE file until the mask exceeds
     * `write.delete.target-records`) — the small-files problem exists for
     * delete files too when every point DELETE adds one. Logical content
-    * unchanged. */
+    * unchanged. Over five point deletes' files it runs four Spark jobs:
+    * the per-file count (scan, result), the write and the
+    * deletion-vector build (JobCountSpec). */
   def rewriteDeleteFiles(): TableMeta = {
     val m0 = meta
     val branch = resolveWriteBranch(None)
@@ -2995,14 +3044,15 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
     // removed their metadata counts) — merging them back would resurrect
     // dead counts into the new file's rowCount and break the "Σ counts is
     // exact over live files" invariant the metadata-only COUNT(*) fast
-    // path and total-records depend on
-    val liveNames = baseSnap.map(_.files.map(f => fileName(f.path)))
-      .getOrElse(Seq.empty)
-    val liveDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(liveNames.map(Row(_)), 1),
-      StructType(Seq(StructField("_gd_file", StringType, nullable = false)))))
+    // path and total-records depend on. The kept names are the live files
+    // the delete files' counts name: a churn-sized set, probed inside the
+    // scan, so no broadcast and no job of its own.
+    val liveNames = baseSnap.map(_.files.map(f => fileName(f.path)).toSet)
+      .getOrElse(Set.empty[String])
+    val referenced = KeySet(dels.iterator.flatMap(_.counts.keys).filter(liveNames)
+      .map(n => (UTF8String.fromString(n): AnyRef) -> 0L))
     val merged = writeDeleteFiles(
-      deleteEntriesDf(dels).join(liveDf, Seq("_gd_file"), "left_semi"))
+      deleteEntriesDf(dels).filter(InKeySet(col("_gd_file"), referenced)))
     commit { m =>
       val parent = m.branchHead(branch)
       if (parent.map(_.snapshotId) != baseSnap.map(_.snapshotId))
@@ -3576,6 +3626,12 @@ object LakeTable {
   /** Largest key batch [[LakeTable.mergeByKeys]] collects to the driver:
     * up to this many keys are pruned and written as an exact local set. */
   private[lake] val SmallKeyBatch = 1024
+
+  /** Most keys (Σ `rowCount`) an equality-delete mask may hold to be
+    * applied inside the scan ([[InKeySet]]) rather than joined: four
+    * full small batches ([[SmallKeyBatch]]), the default conversion
+    * threshold, fit twice over. */
+  private[lake] val InScanMaskKeys = 8192L
 
   /** A snapshot's scan exported for a second engine ([[LakeTable.exportScan]]):
     * the exact parquet paths plus a standalone DuckDB SELECT over them

@@ -192,8 +192,9 @@ final case class EqualityDeleteFile(
     /** Snapshot that committed this delete — masks files with
       * addedSnapshotId strictly below. Filled at commit time. */
     addedAt: Long,
-    /** String-encoded bounds of the FIRST key column (ColStat encoding)
-      * for pruning which files need the mask join at all. */
+    /** String-encoded bounds of the FIRST key column (ColStat encoding).
+      * Written to metadata but read by no code: no read or conversion
+      * prunes by them, and every file a delete [[masks]] gets its mask. */
     keyMin: Option[String] = None,
     keyMax: Option[String] = None) {
   /** The one equality-mask rule: this delete masks `f`'s rows iff `f`

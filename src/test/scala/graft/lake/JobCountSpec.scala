@@ -99,19 +99,20 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
     assertJobs(jobs, 6, "a 250-key MoR merge batch")
   }
 
-  // the per-file entry count (key broadcast, scan map, result), the
-  // delete-file write (key broadcast, write), the deletion-vector build
-  test("convertEqualityDeletes over four live equality deletes runs at most 6 Spark jobs") {
+  // the per-file entry count (scan map, result), the delete-file write
+  // and the deletion-vector build; the four deletes' keys are probed
+  // inside the scan, so no key broadcast runs
+  test("convertEqualityDeletes over four live equality deletes runs at most 4 Spark jobs") {
     val t = withFourBatches("j.convert")
     val want = t.toDF.collect().toSet
     val (_, jobs) = jobsOf(t.convertEqualityDeletes())
     assert(t.meta.currentSnapshot.get.eqDeleteFiles.isEmpty)
     assert(t.toDF.collect().toSet === want)
-    assertJobs(jobs, 6, "convertEqualityDeletes")
+    assertJobs(jobs, 4, "convertEqualityDeletes")
   }
 
-  // the key-set broadcast and the masked scan
-  test("a point read(filter) on a table with live equality deletes runs at most 2 Spark jobs") {
+  // the masked scan alone: the equality keys are probed inside it
+  test("a point read(filter) on a table with live equality deletes runs at most 1 Spark job") {
     val t = withFourBatches("j.read")
     // the key the last batch updated: its old version sits in a masked
     // older file, its new one in the newest, unmasked file
@@ -122,7 +123,23 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
       "id", "seq", batchId = 4L)
     val (rows, jobs) = jobsOf(t.read(filter = Some(col("id") === k)).collect())
     assert(rows.map(_.getString(1)).toSeq === Seq("last"))
-    assertJobs(jobs, 2, "a point lookup under equality deletes")
+    assertJobs(jobs, 1, "a point lookup under equality deletes")
+  }
+
+  // the per-file entry count (scan map, result), the merged write and
+  // the deletion-vector build; the live-file set is probed inside the
+  // scan, so no broadcast runs
+  test("rewriteDeleteFiles over five positional delete files runs at most 4 Spark jobs") {
+    val t = cdcTable("j.rewritedel")
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read"))
+    (0 until 5).foreach(i => t.delete(col("id") === (100L * i + 3L)))
+    assert(t.meta.currentSnapshot.get.deleteFiles.size === 5)
+    val want = t.toDF.collect().toSet
+    val (_, jobs) = jobsOf(t.rewriteDeleteFiles())
+    assert(t.meta.currentSnapshot.get.deleteFiles.size === 1)
+    assert(t.toDF.collect().toSet === want)
+    assert(want.size === 4995)
+    assertJobs(jobs, 4, "rewriteDeleteFiles")
   }
 
   /** A session with GraftExtensions (SQL MERGE INTO is translated only
