@@ -1213,7 +1213,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   private def writeEqualityDeleteFile(keyDf: DataFrame,
                                       keyCols: Seq[String],
                                       m: TableMeta,
-                                      driverKeys: Option[Seq[Any]] = None): Option[EqualityDeleteFile] = {
+                                      driverKeys: Option[Seq[Any]]): Option[EqualityDeleteFile] = {
     val schema = m.schema
     val cols = keyCols.map(k => schema.byName(k).getOrElse(
       throw new IllegalArgumentException(s"merge key column $k not in schema")))
