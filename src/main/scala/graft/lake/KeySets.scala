@@ -1,11 +1,13 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, Coalesce, EqualTo, Expression, In, InSet, Literal, Not, PredicateHelper}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, ScanBridge}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -72,7 +74,11 @@ object KeySet {
   * The set is a reference object of the generated code, like
   * [[DvIsDeleted]]'s bitmaps, so the code is the same for every key set
   * and compiles once; Spark's `InSet` would inline a small integer set
-  * into a `switch` and compile again for every batch's keys. */
+  * into a `switch` and compile again for every batch's keys. A filter's
+  * own key constants are bound by [[BoundKeys]] as an [[InSetRef]]
+  * instead: it is `InSet` with this reference-object code, so it keeps
+  * the parquet pushdown that this expression, unknown to Spark's filter
+  * translation, would lose. */
 case class InKeySet(key: Expression, seq: Option[Expression], set: KeySet)
     extends Expression {
 
@@ -126,6 +132,100 @@ object InKeySet {
   def apply(key: Column, set: KeySet, afterSeq: Option[Column] = None): Column =
     ColumnBridge.column(InKeySet(ColumnBridge.expression(key),
       afterSeq.map(ColumnBridge.expression), set))
+}
+
+/** Spark's `InSet` (same semantics, and still translated to a pushed
+  * parquet `In`) whose generated code always probes its set as a
+  * reference object. Spark's own code does so too, except for Byte,
+  * Short, Int and Date sets of up to 400 keys, which it inlines into a
+  * `switch` that compiles again for every key set. The set holds no
+  * null. */
+final class InSetRef(child: Expression, hset: Set[Any]) extends InSet(child, hset) {
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("set", hset, classOf[Set[_]].getName)
+    nullSafeCodeGen(ctx, ev, c => {
+      val boxed =
+        if (CodeGenerator.isPrimitiveType(child.dataType))
+          s"${CodeGenerator.boxedType(child.dataType)}.valueOf($c)"
+        else c
+      s"${ev.value} = $set.contains($boxed);"
+    })
+  }
+
+  override def withNewChildInternal(newChild: Expression): InSet = new InSetRef(newChild, hset)
+}
+
+/** The key constants of a row filter bound as a referenced set, so the
+  * generated code is the same for every key: a repeated point lookup or
+  * index probe hits Spark's codegen cache instead of compiling new
+  * classes on the driver and again in the task. Only the form of the row
+  * filter changes; callers prune files with their own column as before.
+  *
+  * A predicate is bound when, after analysis has coerced it, it is
+  * `attr = c`, `c = attr` or `attr IN (c1, …, cn)` over a key type whose
+  * values compare by `equals` ([[KeySet.probeable]]), and every `c` is
+  * foldable, deterministic and evaluates to a non-null value of the
+  * attribute's type (so a cast of a literal folds). The bound form is
+  * [[InSetRef]], which pushes down to parquet as the unbound form does.
+  * It is null or false wherever the predicate is, so a binding is exact
+  * only where null and false both drop the row: a filter's top-level
+  * conjuncts, or inside `coalesce(_, false)`. */
+object BoundKeys extends PredicateHelper {
+
+  private def bind(e: Expression): Option[Expression] = e match {
+    case EqualTo(KeyAttr(a), c) => bindSet(a, Seq(c))
+    case EqualTo(c, KeyAttr(a)) => bindSet(a, Seq(c))
+    case In(KeyAttr(a), cs) if cs.nonEmpty => bindSet(a, cs)
+    case _ => None
+  }
+
+  /** An attribute, also under the cast to its own type that `IN`'s
+    * coercion puts on every side when one constant differs. */
+  private object KeyAttr {
+    def unapply(e: Expression): Option[Attribute] = e match {
+      case a: Attribute => Some(a)
+      case Cast(a: Attribute, dt, _, _) if dt == a.dataType => Some(a)
+      case _ => None
+    }
+  }
+
+  private def bindSet(a: Attribute, cs: Seq[Expression]): Option[Expression] =
+    if (!KeySet.probeable(a.dataType) ||
+      !cs.forall(c => c.foldable && c.deterministic && c.dataType == a.dataType)) None
+    else scala.util.Try(cs.map(_.eval())).toOption // a constant that fails stays as written
+      .filterNot(_.contains(null))
+      .map(vs => new InSetRef(a, vs.toSet))
+
+  /** `df.filter(cond)` with each of `cond`'s top-level key conjuncts
+    * bound; `NOT`/`OR` subtrees, `<=>`, ranges and computed sides stay as
+    * written. */
+  def filter(df: DataFrame, cond: Column): DataFrame =
+    rewrite(df.filter(cond))(c =>
+      splitConjunctivePredicates(c).map(p => bind(p).getOrElse(p)).reduce(And))
+
+  /** The rows of `df` whose `key` is null or none of `keys` (external
+    * values of type `dt`, analysed against the column as an IN list's
+    * literals are), the keys bound as a set. */
+  def without(df: DataFrame, key: String, keys: Seq[Any], dt: DataType): DataFrame = {
+    val in = col(key).isin(keys.map(v => ColumnBridge.column(Literal.create(v, dt))): _*)
+    rewrite(df.filter(!coalesce(in, lit(false)))) {
+      case Not(Coalesce(Seq(p, orElse))) => Not(Coalesce(Seq(bind(p).getOrElse(p), orElse)))
+      case c => c
+    }
+  }
+
+  /** `filtered` with its analyzed top `Filter`'s condition rewritten by
+    * `f`; `filtered` itself when `f` changes nothing or analysis put
+    * another node on top. */
+  private def rewrite(filtered: DataFrame)(f: Expression => Expression): DataFrame =
+    filtered.queryExecution.analyzed match {
+      case Filter(c, child) =>
+        val bound = f(c)
+        if (bound fastEquals c) filtered
+        else ColumnBridge.ofAnalyzed(filtered.sparkSession, Filter(bound, child))
+      case _ => filtered
+    }
 }
 
 /** The keys of equality-delete files, held on the driver. Delete files

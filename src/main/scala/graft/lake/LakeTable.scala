@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -1088,7 +1087,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
   }
 
   /** Scan → DataFrame. `filter` both prunes whole files (stats + hidden
-    * partitions) and is applied to rows. */
+    * partitions) and is applied to rows. In the row filter, the constants
+    * of each top-level `key = c` or `key IN (c, …)` conjunct are bound as
+    * a referenced set ([[BoundKeys.filter]]), so a lookup of a new key
+    * runs the same generated code as the last one and compiles nothing. */
   def read(snapshotId: Option[Long] = None, branch: Option[String] = None,
            asOfTimestampMs: Option[Long] = None, filter: Option[Column] = None): DataFrame = {
     val m = meta
@@ -1099,7 +1101,7 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       case None => all
     }
     val df = dataFrameForLive(m, snap, files)
-    filter.map(df.filter).getOrElse(df)
+    filter.map(BoundKeys.filter(df, _)).getOrElse(df)
   }
 
   def toDF: DataFrame = read()
@@ -1620,12 +1622,10 @@ class LakeTable private[lake] (val spark: SparkSession, val location: String,
       val survivors: Seq[DataFile] = if (touched.isEmpty) Seq.empty else {
         val live = dataFrameForLive(m0, snap, touched)
         val remaining = smallKeys match {
-          // a key set known on the driver: an IN filter, no join and no
-          // broadcast job; null-keyed rows are never IN and survive
-          case Some(_) =>
-            val dt = kd.schema.head.dataType
-            live.filter(!coalesce(col(key).isin(probe.map(v =>
-              ColumnBridge.column(Literal.create(v, dt))): _*), lit(false)))
+          // a key set known on the driver: a NOT IN filter with the keys
+          // bound as a set, no join, no broadcast job and no new code per
+          // batch; null-keyed rows are never IN and survive
+          case Some(_) => BoundKeys.without(live, key, probe, kd.schema.head.dataType)
           // broadcast the key side when it is provably small; else let
           // the planner shuffle both sides on the key
           case None =>

@@ -27,6 +27,15 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** [[ofRows]] over a plan put together from analyzed parts, marked
+    * analyzed so that it is not analyzed a second time
+    * (`setAnalyzed` is `private[sql]`). */
+  def ofAnalyzed(spark: org.apache.spark.sql.SparkSession,
+                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
+
   /** A frame whose plan is one `LogicalRDD` leaf over `rows`, the executed
     * rows of `origin`, carrying origin's output, statistics and
     * partitioning ([[graft.Materialize]]; `LogicalRDD.fromDataset` is

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SQLExecution
@@ -68,6 +69,19 @@ trait JobTrace { this: AnyFunSuite =>
       info(s"${jobs.size} Spark jobs")
       (r, Jobs(jobs))
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Generated classes Janino compiled while `body` runs, on the driver
+    * and in tasks alike: the process-wide count of
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`, so it is exact only while
+    * no other suite runs in the same JVM. A class found in Spark's
+    * codegen cache is not compiled and not counted. */
+  def compilesOf[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val r = body
+    val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    info(s"$n classes compiled")
+    (r, n)
   }
 
   /** Fails, listing every job's origin, when `jobs` exceeds `budget`. */

@@ -20,6 +20,10 @@ import scala.util.Random
   * distinct shuffle fails here rather than in a benchmark, naming where
   * each job came from.
   *
+  * Codegen budgets ([[graft.JobTrace.compilesOf]]) pin the other fixed
+  * cost: a repeated lookup or MERGE of new keys must run the generated
+  * code of the last one, not compile its own.
+  *
   * The CDC table mirrors a keyed CDC target: merge-on-read upserts, a
   * manifest bloom on the key, 5,000 seeded rows in one file. */
 class JobCountSpec extends AnyFunSuite with JobTrace {
@@ -126,6 +130,27 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
     assertJobs(jobs, 1, "a point lookup under equality deletes")
   }
 
+  // The lookup's filter constants are bound as a referenced set, and its
+  // equality-delete and position masks probe referenced sets too, so once
+  // one lookup has compiled its classes every further lookup, whatever its
+  // key, runs the same generated code from Spark's codegen cache.
+  test("after one warm lookup, five point lookups of new keys under equality deletes compile 0 classes") {
+    val t = withFourBatches("j.compiles")
+    def lookup(k: Long): DataFrame = t.read(filter = Some(col("id") === k))
+    // seeded keys no batch changed, whose lookups read the same files as
+    // the warm one: only the key constant differs between the six reads
+    val warm = 1L
+    val files = lookup(warm).inputFiles.toSet
+    val keys = t.toDF.filter(col("seq") === 0L && col("id") > warm).select("id").collect()
+      .map(_.getLong(0)).sorted.iterator.filter(k => lookup(k).inputFiles.toSet == files).take(5).toSeq
+    assert(keys.size === 5)
+    val want = keys.map(k => t.toDF.filter(col("id") === k).collect().toSet)
+    lookup(warm).collect()
+    val (got, n) = compilesOf(keys.map(k => lookup(k).collect().toSet))
+    assert(got === want && got.forall(_.size == 1))
+    assert(n === 0L, s"five lookups of new keys compiled $n classes, budget 0")
+  }
+
   // the per-file entry count (scan map, result), the merged write and
   // the deletion-vector build; the live-file set is probed inside the
   // scan, so no broadcast runs
@@ -180,6 +205,54 @@ class JobCountSpec extends AnyFunSuite with JobTrace {
   test("a 10-row VALUES MERGE INTO a merge-on-read table runs at most 3 Spark jobs") {
     assertJobs(notebookMergeJobs("mor", " TBLPROPERTIES ('write.merge.mode'='merge-on-read')"),
       3, "a small-source merge-on-read MERGE")
+  }
+
+  /** The classes compiled by `rounds` 10-row VALUES MERGEs into a fresh
+    * 40-row table, after two warm MERGEs (on a merge-on-read table the
+    * second is the first to read under an equality delete, a new plan
+    * shape). Round r updates keys 5r..5r+4 and inserts keys
+    * 100+5r..100+5r+4, so every round's keys are new; the merged rows
+    * are checked. */
+  private def repeatedMergeCompiles(name: String, props: String, rounds: Int): Long = {
+    val t = s"jc.db.$name"
+    sqlSpark.sql("CREATE DATABASE IF NOT EXISTS jc.db")
+    sqlSpark.sql(s"CREATE TABLE $t (id BIGINT, grp STRING, v BIGINT)$props")
+    sqlSpark.sql(s"INSERT INTO $t VALUES " +
+      (0 until 40).map(i => s"($i, 'g${i % 3}', $i)").mkString(", "))
+    def merge(r: Int): Unit = {
+      val src = (0 until 5).flatMap(i => Seq(5 * r + i, 100 + 5 * r + i))
+        .map(k => s"($k, 'n', ${1000 + k})").mkString(", ")
+      sqlSpark.sql(
+        s"""MERGE INTO $t t USING (SELECT * FROM VALUES $src AS s(id, grp, v)) s ON t.id = s.id
+           |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
+    }
+    merge(0)
+    merge(1)
+    val (_, n) = compilesOf((2 to rounds + 1).foreach(merge))
+    val got = sqlSpark.sql(s"SELECT id, grp, v FROM $t").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val merged = (0 until 5 * (rounds + 2)).flatMap(i => Seq(i, 100 + i)).toSet
+    val want = ((0 until 40).toSet ++ merged).map { i =>
+      if (merged(i)) (i.toLong, "n", 1000L + i) else (i.toLong, s"g${i % 3}", i.toLong)
+    }
+    assert(got === want)
+    n
+  }
+
+  // The target-key lookup and the copy-on-write survivor filter bind their
+  // keys as a set, so a MERGE of new keys runs the last one's code. With
+  // the keys inlined, each round compiled the lookup (and, copy-on-write,
+  // the survivor filter) on the driver and again in the task: 12 and 6
+  // classes over three rounds. The budget leaves room for one class and
+  // its task copy.
+  test("three more 10-row VALUES MERGEs of new keys into a copy-on-write table compile at most 2 classes") {
+    val n = repeatedMergeCompiles("cowc", "", 3)
+    assert(n <= 2L, s"three MERGEs of new keys compiled $n classes, budget 2")
+  }
+
+  test("three more 10-row VALUES MERGEs of new keys into a merge-on-read table compile at most 2 classes") {
+    val n = repeatedMergeCompiles("morc", " TBLPROPERTIES ('write.merge.mode'='merge-on-read')", 3)
+    assert(n <= 2L, s"three MERGEs of new keys compiled $n classes, budget 2")
   }
 
   // A source over the small-source bound (1,024 rows) takes the distributed
